@@ -362,7 +362,7 @@ def run_bench() -> None:
     # charged for JIT + worker spin-up (a cluster amortizes both)
     _materialize(spark.range(1000).selectExpr("md5(CAST(id AS STRING)) AS x"))
     warm = spark.range(2 * CPUS * 10).repartition(2 * CPUS)
-    _materialize(warm.mapInPandas(lambda it: it, schema="id long"))
+    _materialize(warm.mapInArrow(lambda it: it, schema="id long"))
     # best-of-trials per query: trial 1 pays the per-query codegen/JIT
     # cost that a long-running production job amortizes to zero; later
     # trials are steady-state per-pass wall time. A third trial runs
@@ -810,8 +810,9 @@ def run_curate_soak(levels=(8, 32), copies: int = 16) -> None:
                 "sf": _sf_label(SF_DIR),
                 "copies": copies,
                 "levels": {str(k): v for k, v in results.items()},
-                # content-hash determinism claim, checked: the funnel
-                # must keep the SAME docs regardless of parallelism
+                # compares kept-doc COUNTS only: equal counts across
+                # parallelism levels, not a check that the same docs
+                # were kept
                 "deterministic_across_levels": len(
                     {v["n_curated"] for v in results.values()}
                 ) == 1,

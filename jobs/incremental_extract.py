@@ -19,6 +19,14 @@ pays kernel compute. State is published atomically AFTER the output
 commit succeeds (crash between the two => the next run re-extracts
 the delta again — idempotent, never wrong).
 
+Upgrade note: ``doc_input_hash`` breaks offset ties by the serialized
+span string (so the Spark and DuckDB twins agree on docs with
+duplicate or NULL offsets). State published by a build without that
+tie-break hashes those docs differently, so the first run after the
+upgrade recomputes them once — an elevated ``n_recomputed_docs`` on
+that run is expected, not an ingest anomaly. Output stays correct and
+the republished state is stable from then on.
+
 Reference analog: none (the reference re-parses every file per run,
 /root/reference/pipeline.py:533); this is the beyond-reference daily
 production shape (SURVEY.md §7.2).
@@ -27,6 +35,43 @@ from __future__ import annotations
 
 import argparse
 import json
+
+
+def _rename(fs, src, dst) -> None:
+    # Hadoop FileSystem.rename reports failure by returning False,
+    # not by raising
+    if not fs.rename(src, dst):
+        raise RuntimeError(f"state rename {src} -> {dst} failed")
+
+
+def recover_state(fs, jpath, jold) -> bool:
+    """True when hash state is live at ``jpath``, after recovering it
+    from the aside copy ``jold`` if a crash landed between the publish
+    renames (live state moved aside, new state not yet renamed in) —
+    so the run stays incremental instead of silently re-extracting
+    the full corpus."""
+    if fs.exists(jpath):
+        return True
+    if fs.exists(jold):
+        _rename(fs, jold, jpath)
+        return True
+    return False
+
+
+def publish_state(fs, jtmp, jpath, jold) -> None:
+    """Two-rename publish of the state written at ``jtmp``, never
+    delete-then-rename: the live state is moved ASIDE to ``jold`` (not
+    deleted) before the new state renames in, so no crash or failed
+    rename loses state entirely — a failure between the renames leaves
+    the complete aside copy, which :func:`recover_state` brings back.
+    The aside is removed only once the new state is live."""
+    if fs.exists(jold):
+        fs.delete(jold, True)  # leftover aside from a prior crash
+    if fs.exists(jpath):
+        _rename(fs, jpath, jold)
+    _rename(fs, jtmp, jpath)
+    if fs.exists(jpath) and fs.exists(jold):
+        fs.delete(jold, True)
 
 
 def main() -> None:
@@ -68,14 +113,7 @@ def main() -> None:
     jpath = jvm.org.apache.hadoop.fs.Path(hashes_path)  # type: ignore[union-attr]
     jold = jvm.org.apache.hadoop.fs.Path(hashes_path + "._old")  # type: ignore[union-attr]
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    has_state = fs.exists(jpath)
-    if not has_state and fs.exists(jold):
-        # crash landed between the publish renames (live state moved
-        # aside, new state not yet renamed in): the aside copy is the
-        # complete previous state — recover it so this run stays
-        # incremental instead of silently re-extracting the full corpus
-        fs.rename(jold, jpath)
-        has_state = True
+    has_state = recover_state(fs, jpath, jold)
 
     if has_state:
         if args.prev is None:
@@ -105,18 +143,7 @@ def main() -> None:
     tmp_path = hashes_path + "._tmp"
     doc_input_hash(docs).write.mode("overwrite").parquet(tmp_path)
     jtmp = jvm.org.apache.hadoop.fs.Path(tmp_path)  # type: ignore[union-attr]
-    # two-rename publish, never delete-then-rename: the live state is
-    # moved ASIDE (not deleted) before the new state renames in, so no
-    # crash point loses state entirely — a crash between the renames
-    # leaves the complete aside copy, which the read path above
-    # recovers. Only after the new state is live is the aside removed.
-    if fs.exists(jold):
-        fs.delete(jold, True)  # leftover aside from a prior crash
-    if fs.exists(jpath):
-        fs.rename(jpath, jold)
-    fs.rename(jtmp, jpath)
-    if fs.exists(jold):
-        fs.delete(jold, True)
+    publish_state(fs, jtmp, jpath, jold)
 
     print(
         json.dumps(

@@ -617,7 +617,6 @@ def dup_clusters(
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
     max_bucket: int | None = None,
-    algorithm: str = "label-jump",
 ) -> DataFrame:
     """(doc_id, cluster_rep): connected components over the verified
     near-duplicate pair graph — min-label propagation iterated to a
@@ -627,50 +626,29 @@ def dup_clusters(
     Edges come from ``lsh_verified_pairs`` — minhash-LSH candidates,
     exact-Jaccard verified — so edge generation never scans the
     all-corpus shingle pair space (the round-1 scale-killer). The
-    driver loop converges in O(component diameter) joins; dup
+    driver loop converges in O(log component diameter) rounds; dup
     components are tiny in practice, and each iteration is one
     doc_id-keyed shuffle. Only docs that appear in >=1 pair are
-    emitted (singletons are trivially their own cluster).
-
-    ``algorithm`` is passed through to ``connected_components``:
-    "label-jump" (default) or "two-phase" (large-star/small-star —
-    pick it when components can be massive; both produce identical
-    labels)."""
+    emitted (singletons are trivially their own cluster)."""
     edges = lsh_verified_pairs(docs, w, tau, k, bands, max_bucket).select(
         "doc_a", "doc_b"
     )
-    labels, _ = connected_components(edges, algorithm)
+    labels, _ = connected_components(edges)
     return labels.select("doc_id", F.col("label").alias("cluster_rep"))
 
 
-def connected_components(
-    edges: DataFrame, algorithm: str = "label-jump"
-) -> tuple[DataFrame, int]:
+def connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     """Min-label connected components over (doc_a, doc_b) edges ->
     ((doc_id, label), n_iterations). Only docs appearing in >= 1 edge
-    are emitted. Label = the component's minimum vertex id.
+    are emitted (a self-loop-only vertex is its own singleton). Label
+    = the component's minimum vertex id.
 
-    ``algorithm``:
-    - ``"label-jump"`` (default): neighbor-min propagation + POINTER
-      JUMPING (label <- label's label) each round: labels are always
-      vertex ids, so the extra self-join halves remaining path lengths
-      every round and the driver loop converges in O(log diameter)
-      rounds instead of O(diameter). Per-round cost is proportional to
-      the (fixed) edge set.
-    - ``"two-phase"``: the alternating LARGE-STAR / SMALL-STAR edge
-      rewrite (Kiveris et al., "Connected Components in MapReduce and
-      Beyond", SoCC'14): each round shrinks the edge set toward a star
-      forest whose centers are the component minima. Preferable on
-      graphs with massive components: the edge set itself contracts
-      every round (label-jump re-joins the full edge set each round),
-      at the price of two shuffle rounds per iteration.
-
-    Both converge to identical labels (property-tested against each
-    other on chain/random graphs)."""
-    if algorithm == "two-phase":
-        return _cc_two_phase(edges)
-    if algorithm != "label-jump":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    Neighbor-min propagation + POINTER JUMPING (label <- label's
+    label) each round: labels are always vertex ids, so the extra
+    self-join halves remaining path lengths every round and the
+    driver loop converges in O(log diameter) rounds instead of
+    O(diameter). Per-round cost is proportional to the (fixed) edge
+    set."""
     bidir = edges.union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).persist()
@@ -727,95 +705,6 @@ def connected_components(
             break
     bidir.unpersist()
     return labels, n_iters
-
-
-def _star_mins(bidir: DataFrame) -> DataFrame:
-    """(src, m): per node, min of its closed neighborhood — one
-    map-side-combined aggregate on uniform vertex keys."""
-    return (
-        bidir.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select("src", F.least(F.col("src"), F.col("mn")).alias("m"))
-    )
-
-
-def _cc_two_phase(edges: DataFrame) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star connected components.
-
-    large-star(v): connect every strictly-LARGER neighbor u > v to
-    m = min(N(v) ∪ {v}).  small-star(v): connect every neighbor
-    u <= v, and v itself, to m.  Alternating the two rewrites
-    preserves connectivity and monotonically contracts each component
-    toward a star centered on its minimum vertex (Kiveris et al.,
-    SoCC'14, Algorithm "Alternating"); at the fixpoint every edge is
-    (u, component_min), so labels fall out of one final aggregate.
-
-    Scale shape: both phases are groupBy-min + one equi-join on
-    uniform vertex keys, and the EDGE SET SHRINKS each round (dup
-    graphs contract to stars almost immediately), so late rounds are
-    nearly free. Per-round localCheckpoint truncates the iterative
-    lineage exactly like the label-jump path."""
-    # the full vertex set BEFORE dropping self-loops: a vertex whose
-    # only edge is (v, v) must still be emitted as its own singleton
-    # (label-jump emits it from the unfiltered bidir set, and the
-    # docstring promises identical labels from both algorithms)
-    verts = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # undirected edge set, kept as directed pairs both ways
-    cur = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_iters = 0
-    while True:
-        n_iters += 1
-        bidir = cur.union(cur.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        # large-star: (u, m) for u in N(v), u > v
-        ls = (
-            bidir.join(_star_mins(bidir), "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        bidir2 = ls.union(ls.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        # small-star: (u, m) for u in N(v), u <= v, plus (v, m)
-        mins2 = _star_mins(bidir2)
-        ss = (
-            bidir2.join(mins2, "src")
-            .where(F.col("dst") <= F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(mins2.select(F.col("src"), F.col("m").alias("dst")))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # converged when the edge set is stable (star forest reached):
-        # both sides are distinct sets, so equal counts + empty
-        # difference <=> set equality; the subtract is tiny once the
-        # graph is near-stars.
-        if ss.count() == cur.count() and ss.subtract(cur).isEmpty():
-            cur = ss
-            break
-        cur = ss
-    # star forest: every vertex's label is the min over its closed
-    # neighborhood (center for leaves; itself for centers)
-    bidir = cur.union(cur.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    labels = _star_mins(bidir).select(
-        F.col("src").alias("doc_id"), F.col("m").alias("label")
-    )
-    # vertices that only had self-loop edges never entered cur; they
-    # are their own components
-    singletons = verts.join(labels, "doc_id", "left_anti").select(
-        "doc_id", F.col("doc_id").alias("label")
-    )
-    return labels.unionByName(singletons), n_iters
 
 
 def dup_clusters_sql(

@@ -587,7 +587,6 @@ def media_dup_clusters(
     tau: float = 0.5,
     max_df: int | None = MAX_MEDIA_DF,
     key_sql: str = "media_ref",
-    algorithm: str = "label-jump",
 ) -> DataFrame:
     """(doc_id, cluster_rep): connected components over the
     media-set near-duplicate graph — gallery re-post GROUPS, the
@@ -598,16 +597,15 @@ def media_dup_clusters(
     Edges come from :func:`media_jaccard_pairs` (df-capped candidate
     generation, exact Jaccard verify); components use the shared
     ``dedup.connected_components`` machinery (min-label propagation
-    with pointer jumping, or large-star/small-star via
-    ``algorithm``). Only docs in >= 1 pair are emitted — singletons
-    are trivially their own cluster.
+    with pointer jumping). Only docs in >= 1 pair are emitted —
+    singletons are trivially their own cluster.
     """
     from ocr_spark.functions.dedup import connected_components
 
     edges = media_jaccard_pairs(docs, tau, max_df, key_sql).select(
         "doc_a", "doc_b"
     )
-    labels, _ = connected_components(edges, algorithm)
+    labels, _ = connected_components(edges)
     return labels.select("doc_id", F.col("label").alias("cluster_rep"))
 
 

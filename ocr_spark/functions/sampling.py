@@ -1138,7 +1138,7 @@ def dataset_split_by_cluster(
     their own id (a singleton IS its own cluster).
 
     ``cluster_kwargs`` pass through to ``dup_clusters`` (w/tau/k/
-    bands/max_bucket/algorithm). Scale shape: the cluster pass is the
+    bands/max_bucket). Scale shape: the cluster pass is the
     standard LSH-verify-CC composition; the split itself stays a
     scan-stage hash over the coalesced key after one doc_id-keyed
     left join.
@@ -1169,14 +1169,10 @@ def dataset_split_by_cluster_sql(
     """DuckDB twin of :func:`dataset_split_by_cluster`, projected to
     (doc_id, split). ``id_sql`` reaches the embedded cluster pass too
     (string-id corpora pass ``id_sql="doc_id"``, matching the Spark
-    side's id-type-agnostic handling); an ``algorithm`` kwarg is
-    accepted-and-ignored so one kwargs dict drives both twins (the
-    recursive-CTE oracle has a single algorithm — both Spark variants
-    produce identical labels)."""
+    side's id-type-agnostic handling); one ``cluster_kwargs`` dict
+    drives both twins."""
     from ocr_spark.functions.dedup import dup_clusters_sql
 
-    cluster_kwargs = dict(cluster_kwargs)
-    cluster_kwargs.pop("algorithm", None)
     inner = f"""(
       SELECT d.*, coalesce(CAST(c.cluster_rep AS VARCHAR),
                            CAST(d.doc_id AS VARCHAR)) AS _split_key

@@ -453,7 +453,6 @@ def embedding_dup_clusters(
     tau: float = 0.9,
     n_bands: int = N_BANDS,
     planes_per_band: int = PLANES_PER_BAND,
-    algorithm: str = "label-jump",
 ) -> DataFrame:
     """(vec_id, cluster_rep): connected components over the verified
     embedding near-duplicate graph — semantic dedup GROUP selection
@@ -463,8 +462,8 @@ def embedding_dup_clusters(
     edge generation is the banded-LSH + cosine-verify operator
     (``embedding_near_dups`` — candidate-driven, never all-pairs),
     and the component pass is the shared distributed union-find
-    (``dedup.connected_components``: label-jump pointer jumping by
-    default, large-star/small-star available for massive components).
+    (``dedup.connected_components``: min-label propagation with
+    pointer jumping).
     Only vectors appearing in >= 1 near-dup pair are emitted —
     singletons are trivially their own cluster.
 
@@ -478,7 +477,7 @@ def embedding_dup_clusters(
     edges = embedding_near_dups(emb, tau, n_bands, planes_per_band).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    labels, _ = connected_components(edges, algorithm)
+    labels, _ = connected_components(edges)
     return labels.select(
         F.col("doc_id").alias("vec_id"), F.col("label").alias("cluster_rep")
     )

@@ -1,42 +1,36 @@
 """DataFrame-level extraction orchestration.
 
-Thin and declarative: the semantics are in ocr_spark.kernel.extract;
-this module owns the *distribution* concerns — partitioning, skew
+Thin and declarative: the semantics are in ocr_spark.kernel.extract
+(the pandas executable spec, used as the test oracle) and its Arrow
+twin ocr_spark.kernel.arrow_extract (the one execution path); this
+module owns the *distribution* concerns — partitioning, skew
 handling, Arrow batching — per SURVEY.md §4.3.
 
 Skew strategy (docs are atomic; a document may never straddle batches
 or the span order invariant dies):
-- partition key = pmod(hash(doc_id), P) with P >> cores so giant docs
-  (the 1% 2k-20k-span tail, FIXTURES.md) land alone in small partitions
-  that AQE won't coalesce into monsters;
-- ``weight_partition`` optionally sorts docs by size within partitions
-  so the biggest docs start first (shorter straggler tail);
+- the kernel runs on the input's own partitioning (mapInArrow adds no
+  shuffle); callers that need a different layout partition first —
+  the runner's bucket groups, or ``weight_partition``, which hashes
+  doc_id into P >> cores partitions (giant docs, the 1% 2k-20k-span
+  tail of FIXTURES.md, land alone in small partitions) and sorts docs
+  heaviest-first within each, so the biggest docs start first
+  (shorter straggler tail);
 - Arrow batch rows are capped (session.ARROW_MAX_RECORDS) so one batch
-  holds a bounded number of docs.
+  holds a bounded number of docs, and each batch is re-sliced to at
+  most MAX_SPANS_PER_KERNEL_CALL spans per kernel call.
 
 At 100 TB the same plan holds: the scan is parquet/Iceberg with doc_id
-bucketing, the repartition is the only shuffle, and the UDF is
-embarrassingly parallel.
+bucketing, the optional pre-kernel repartition is the only shuffle,
+and the UDF is embarrassingly parallel.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.kernel import arrow_extract as ak
-from ocr_spark.kernel.extract import (
-    DEFAULT_CONFIG,
-    PARITY_CONFIG,
-    ExtractConfig,
-    doc_metrics,
-    extract_flat,
-    extract_nested,
-    extract_nested_metrics,
-)
+from ocr_spark.kernel.extract import DEFAULT_CONFIG, PARITY_CONFIG, ExtractConfig
 from ocr_spark.schema import (
     ANNOTATED_SPAN_SCHEMA,
     DOC_METRICS_SCHEMA,
@@ -44,19 +38,6 @@ from ocr_spark.schema import (
     DOC_WITH_METRICS_SCHEMA,
     KIND_ERROR,
 )
-
-
-def _repartition_for_kernel(df: DataFrame, num_partitions: int | None) -> DataFrame:
-    """Distribute docs across partitions by doc_id hash.
-
-    Skipped when the input is already partitioned (num_partitions None
-    and input partitioning adequate) — callers opt in. The key is a
-    plain hash: with P sufficiently large relative to cores, the skew
-    tail spreads out and AQE-free static partitioning stays balanced.
-    """
-    if not num_partitions:
-        return df
-    return df.repartition(num_partitions, F.pmod(F.hash("doc_id"), F.lit(num_partitions)))
 
 
 def weight_partition(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -69,15 +50,6 @@ def weight_partition(df: DataFrame, num_partitions: int) -> DataFrame:
     ).sortWithinPartitions(F.desc("_w"))
     return out.drop("_w")
 
-
-# pandas-kernel fn -> arrow-kernel twin (the default execution path;
-# the pandas kernel remains the executable spec / test oracle)
-_ARROW_TWIN = {
-    extract_flat: ak.extract_flat_batch,
-    extract_nested: ak.extract_nested_batch,
-    doc_metrics: ak.metrics_batch,
-    extract_nested_metrics: ak.extract_nested_metrics_batch,
-}
 
 # Memory bound for one kernel invocation: Arrow caps batch ROWS
 # (maxRecordsPerBatch), but a row is a whole document — a batch of
@@ -113,109 +85,63 @@ def _subslice_batches(batches, max_spans: int):
             yield b.slice(start, b.num_rows - start)
 
 
-def _run_kernel(
-    df: DataFrame,
-    fn,
-    schema,
-    cfg: ExtractConfig,
-    num_partitions: int | None,
-    engine: str = "arrow",
-):
-    df = _repartition_for_kernel(df, num_partitions)
+def _run_kernel(df: DataFrame, arrow_fn, schema, cfg: ExtractConfig) -> DataFrame:
+    def apply(batches):
+        for b in _subslice_batches(batches, MAX_SPANS_PER_KERNEL_CALL):
+            yield arrow_fn(b, cfg)
 
-    if engine == "arrow":
-        afn = _ARROW_TWIN[fn]
-
-        def apply_arrow(batches):
-            for b in _subslice_batches(batches, MAX_SPANS_PER_KERNEL_CALL):
-                yield afn(b, cfg)
-
-        return df.mapInArrow(apply_arrow, schema=schema)
-
-    def apply_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield fn(pdf, cfg)
-
-    return df.mapInPandas(apply_batches, schema=schema)
+    return df.mapInArrow(apply, schema=schema)
 
 
-def extract_spans(
-    df: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
-) -> DataFrame:
+def extract_spans(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """Main-content extraction, flat output (doc_id, kind, text,
     media_ref, offset, kept, block_id, link_density).
 
     Input: (doc_id string, spans array<struct>). Error rows surface as
     kind='__error__' (E1/E2/E4: errors become data).
     """
-    return _run_kernel(df, extract_flat, ANNOTATED_SPAN_SCHEMA, cfg, num_partitions, engine)
+    return _run_kernel(df, ak.extract_flat_batch, ANNOTATED_SPAN_SCHEMA, cfg)
 
 
 def extract_main_content(
-    df: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
+    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Boilerplate-stripped span stream, canonical flat shape
     (doc_id, kind, text, media_ref, offset) — error rows excluded."""
-    out = extract_spans(df, cfg, num_partitions, engine)
+    out = extract_spans(df, cfg)
     return out.where(F.col("kind") != KIND_ERROR).select(
         "doc_id", "kind", "text", "media_ref", "offset"
     )
 
 
-def classify_spans(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
-) -> DataFrame:
+def classify_spans(df: DataFrame) -> DataFrame:
     """Parity mode: every span kept and annotated; order preserved.
 
     This is the path the north-rule fixtures check: output
     (kind, text, media_ref, offset) per doc == input sequence.
     """
-    return extract_spans(df, PARITY_CONFIG, num_partitions, engine)
+    return extract_spans(df, PARITY_CONFIG)
 
 
-def extract_documents(
-    df: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
-) -> DataFrame:
+def extract_documents(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """Nested output matching the input contract:
     (doc_id, spans array<struct<kind,text,media_ref,offset>>)."""
-    return _run_kernel(df, extract_nested, DOC_SCHEMA, cfg, num_partitions, engine)
+    return _run_kernel(df, ak.extract_nested_batch, DOC_SCHEMA, cfg)
 
 
 def extract_documents_with_metrics(
-    df: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
+    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Nested output + per-doc metrics from a single kernel execution:
     (doc_id, spans, n_spans_in, n_spans_out, parse_failed). The
     checkpointed runner's commit shape — output and lineage metrics
     cost ONE pass over the corpus."""
-    return _run_kernel(
-        df, extract_nested_metrics, DOC_WITH_METRICS_SCHEMA, cfg, num_partitions, engine
-    )
+    return _run_kernel(df, ak.extract_nested_metrics_batch, DOC_WITH_METRICS_SCHEMA, cfg)
 
 
-def extraction_metrics(
-    df: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
-) -> DataFrame:
+def extraction_metrics(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """Per-doc metrics (A4): n_spans_in/out, parse_failed, warning."""
-    return _run_kernel(df, doc_metrics, DOC_METRICS_SCHEMA, cfg, num_partitions, engine)
+    return _run_kernel(df, ak.metrics_batch, DOC_METRICS_SCHEMA, cfg)
 
 
 # ---------------------------------------------------------------------------
@@ -302,8 +228,6 @@ def incremental_extract(
     prev_hashes: DataFrame,
     prev_extracted: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Daily-ingest extraction over a 10^12-doc corpus: run the kernel
     only on NEW or CHANGED docs (content hash differs from the stored
@@ -339,7 +263,7 @@ def incremental_extract(
         F.col("_prev_hash") == F.col("input_hash")
     ).select("doc_id")
     fresh = extract_main_content(
-        df.join(changed_ids, "doc_id", "left_semi"), cfg, num_partitions, engine
+        df.join(changed_ids, "doc_id", "left_semi"), cfg
     ).withColumn("recomputed", F.lit(1))
     carried = prev_extracted.select(
         "doc_id", "kind", "text", "media_ref", "offset"

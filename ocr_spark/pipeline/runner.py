@@ -50,6 +50,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ocr_spark.kernel.extract import DEFAULT_CONFIG, ExtractConfig
 from ocr_spark.pipeline.extract import extract_documents_with_metrics, weight_partition
+from ocr_spark.pipeline.sinks import bucket_col
 from ocr_spark.schema import DOC_WITH_METRICS_SCHEMA
 
 # what the runner's parquet table holds: kernel output + the bucket
@@ -100,23 +101,6 @@ class RunConfig:
     # ungated buckets in one table). Any JSON-serializable dict;
     # jobs/extract.py passes its gate flags.
     input_config: dict | None = None
-
-
-def _bucket_col(n_buckets: int):
-    # hash of the STRING doc_id: the kernel emits doc_id as string, so
-    # casting here makes the bucket computable identically on both the
-    # input side (pre-filter) and the output side (post-kernel
-    # withColumn) — no join needed to re-attach it.
-    # coalesce(…, ''): the kernel renders a NULL doc_id (contract
-    # violation -> error row) as '' — without the coalesce the input
-    # side buckets NULL by hash(NULL)=42 while the output side buckets
-    # the same row by hash(''), a DIFFERENT bucket outside the commit
-    # group; the dynamic-partition overwrite would then replace that
-    # foreign bucket wholesale, clobbering committed data.
-    return F.pmod(
-        F.hash(F.coalesce(F.col("doc_id").cast("string"), F.lit(""))),
-        F.lit(n_buckets),
-    )
 
 
 def _row_checksum60():
@@ -230,7 +214,7 @@ class ExtractionRun:
         if not os.path.exists(self._stage_marker()):
             t0 = time.time()
             (
-                self.docs.withColumn("bucket", _bucket_col(self.cfg.n_buckets))
+                self.docs.withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
                 .repartition(self.cfg.n_buckets, "bucket")
                 .write.partitionBy("bucket")
                 .mode("overwrite")
@@ -260,7 +244,7 @@ class ExtractionRun:
     def _group_df(self, buckets: list[int]) -> DataFrame:
         """The commit-group plan: ONE kernel execution, no joins.
 
-        bucket is a pure function of doc_id (pmod(hash, N)), so it is
+        bucket is a pure function of doc_id (sinks.bucket_col), so it is
         filtered on the input and recomputed on the kernel output with
         a withColumn — the round-1 version re-attached it via a doc_id
         join and ran a second kernel pass for metrics, doubling the
@@ -273,7 +257,7 @@ class ExtractionRun:
         src = (
             self._staged_docs()
             if self.cfg.stage_input
-            else self.docs.withColumn("bucket", _bucket_col(self.cfg.n_buckets))
+            else self.docs.withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
         )
         subset = src.where(F.col("bucket").isin(buckets)).drop("bucket")
         if self.cfg.size_weighted_partitions:
@@ -286,7 +270,7 @@ class ExtractionRun:
         # leaves its true bucket pending for a later (correct) commit.
         return (
             extract_documents_with_metrics(subset, self.cfg.kernel)
-            .withColumn("bucket", _bucket_col(self.cfg.n_buckets))
+            .withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
             .where(F.col("bucket").isin(buckets))
         )
 

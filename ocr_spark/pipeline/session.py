@@ -13,7 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 # A giant doc (20k spans, FIXTURES.md skew tail) must not be batched
-# with thousands of siblings; iterator-style mapInPandas streams
+# with thousands of siblings; iterator-style mapInArrow streams
 # batches of this many *rows* (docs) at a time.
 ARROW_MAX_RECORDS = 512
 

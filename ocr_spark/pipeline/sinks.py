@@ -30,6 +30,22 @@ UTF8_BOM = b"\xef\xbb\xbf"
 # ---------------------------------------------------------------------------
 
 
+def bucket_col(col: str, n_buckets: int):
+    """The one bucket function every results producer uses (this sink,
+    the checkpointed runner, the streaming sink): pmod(hash(key), N)
+    over the key's STRING form, so a doc lands in the same bucket
+    regardless of the key's native type. A NULL key buckets as '' —
+    the kernel renders a NULL doc_id (contract violation -> error row)
+    as '', and hash(NULL) would bucket the runner's input row apart
+    from its output row — outside the commit group, whose
+    dynamic-partition overwrite would then clobber a committed
+    bucket."""
+    return F.pmod(
+        F.hash(F.coalesce(F.col(col).cast("string"), F.lit(""))),
+        F.lit(n_buckets),
+    )
+
+
 def write_results(
     df: DataFrame,
     path: str,
@@ -41,20 +57,17 @@ def write_results(
     """Partitioned parquet results table. With ``bucket_by``, rows are
     hash-distributed on the key into ``bucket=K/`` partitions — the
     parquet stand-in for Iceberg's ``bucket(N, doc_id)`` transform, so
-    downstream per-doc joins can prune and co-locate. The bucket hashes
-    the key's STRING form — the same function the checkpointed runner
-    and the streaming sink use, so every producer lands the same doc
-    in the same bucket regardless of the key's native type.
+    downstream per-doc joins can prune and co-locate. The bucket is
+    :func:`bucket_col`, shared with the checkpointed runner and the
+    streaming sink, so every producer lands the same doc in the same
+    bucket.
 
     ``dynamic=True`` (overwrite mode) replaces only the bucket dirs
     present in ``df`` — the idempotent re-commit discipline;
     ``dynamic=False`` makes overwrite a FULL table replace (stale
     buckets dropped), the semantic twin of Iceberg createOrReplace."""
     if bucket_by:
-        out = df.withColumn(
-            "bucket",
-            F.pmod(F.hash(F.col(bucket_by).cast("string")), F.lit(n_buckets)),
-        )
+        out = df.withColumn("bucket", bucket_col(bucket_by, n_buckets))
         (
             out.repartition(n_buckets, "bucket")
             .write.partitionBy("bucket")

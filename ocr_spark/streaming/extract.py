@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark.kernel.extract import DEFAULT_CONFIG, ExtractConfig
 from ocr_spark.pipeline.extract import extract_documents
+from ocr_spark.pipeline.sinks import bucket_col
 from ocr_spark.schema import DOC_SCHEMA
 
 
@@ -41,7 +42,7 @@ def stream_extract(
     stream. Returns the StreamingQuery.
 
     With ``n_buckets`` the sink lands in the SAME ``bucket=K/`` layout
-    the batch runner writes (bucket = pmod(hash(doc_id), N)), so
+    the batch runner writes (``sinks.bucket_col``), so
     downstream per-doc joins and partition pruning work identically
     whether a table was built by the batch runner or the stream;
     exactly-once still comes from the stream's sink commit log (append
@@ -51,9 +52,7 @@ def stream_extract(
     out = extract_documents(src, cfg)
     writer = out.writeStream
     if n_buckets:
-        out = out.withColumn(
-            "bucket", F.pmod(F.hash(F.col("doc_id").cast("string")), F.lit(n_buckets))
-        )
+        out = out.withColumn("bucket", bucket_col("doc_id", n_buckets))
         writer = out.writeStream.partitionBy("bucket")
     writer = (
         writer.format("parquet")

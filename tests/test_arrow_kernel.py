@@ -1,13 +1,22 @@
-"""Arrow kernel vs pandas kernel: bit-identical outputs on every
-surface, including the hostile corpus (empty docs, malformed spans,
-giant skew-tail docs, unordered offsets)."""
+"""Spark extraction (the Arrow kernel) vs the pandas executable spec
+(ocr_spark.kernel.extract) applied to the same input: identical
+outputs on every surface, including the hostile corpus (empty docs,
+malformed spans, giant skew-tail docs, unordered offsets)."""
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from ocr_spark.fixtures import generate_corpus
+from ocr_spark.kernel.extract import (
+    DEFAULT_CONFIG,
+    PARITY_CONFIG,
+    doc_metrics,
+    extract_flat,
+    extract_nested,
+    extract_nested_metrics,
+)
 from ocr_spark.pipeline.extract import (
     classify_spans,
     extract_documents,
@@ -15,7 +24,7 @@ from ocr_spark.pipeline.extract import (
     extract_main_content,
     extraction_metrics,
 )
-from ocr_spark.schema import DOC_SCHEMA
+from ocr_spark.schema import DOC_SCHEMA, KIND_ERROR
 from ocr_spark.sources.synth import synthesize_spans
 
 
@@ -45,46 +54,60 @@ def _nested_rows(df):
     return sorted(out)
 
 
+def _main_content(pdf, cfg=DEFAULT_CONFIG):
+    """Spec of extract_main_content: extract_flat minus error rows."""
+    flat = extract_flat(pdf, cfg)
+    return flat[flat["kind"] != KIND_ERROR]
+
+
+def _table_rows(t: pa.Table):
+    def freeze(v):
+        return tuple(tuple(x.values()) for x in v) if isinstance(v, list) else v
+
+    return sorted((tuple(freeze(v) for v in r.values()) for r in t.to_pylist()), key=repr)
+
+
+def assert_matches_spec(out, spec_fn, df, cfg=DEFAULT_CONFIG):
+    """Spark output ``out`` == the pandas spec ``spec_fn`` run on the
+    content of ``df`` as one batch, compared row-for-row in ``out``'s
+    Arrow schema (the spec's NaN becomes NULL there, as it would on
+    the wire)."""
+    got = out.toArrow()
+    pdf = spec_fn(df.toArrow().to_pandas(), cfg)
+    want = pa.Table.from_pandas(pdf[out.columns], schema=got.schema, preserve_index=False)
+    assert _table_rows(got) == _table_rows(want)
+
+
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_flat_equivalence(request, corpus):
     df = request.getfixturevalue(corpus)
-    a = _rows(extract_main_content(df, engine="arrow"))
-    p = _rows(extract_main_content(df, engine="pandas"))
-    assert a == p
+    assert_matches_spec(extract_main_content(df), _main_content, df)
 
 
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_classify_equivalence(request, corpus):
     df = request.getfixturevalue(corpus)
-    a = _rows(classify_spans(df, engine="arrow"))
-    p = _rows(classify_spans(df, engine="pandas"))
-    assert a == p
+    assert_matches_spec(classify_spans(df), extract_flat, df, PARITY_CONFIG)
 
 
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_nested_equivalence(request, corpus):
     df = request.getfixturevalue(corpus)
-    a = _nested_rows(extract_documents(df, engine="arrow"))
-    p = _nested_rows(extract_documents(df, engine="pandas"))
-    assert a == p
+    assert_matches_spec(extract_documents(df), extract_nested, df)
 
 
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_metrics_equivalence(request, corpus):
     df = request.getfixturevalue(corpus)
-    a = _rows(extraction_metrics(df, engine="arrow"))
-    p = _rows(extraction_metrics(df, engine="pandas"))
-    assert a == p
+    assert_matches_spec(extraction_metrics(df), doc_metrics, df)
 
 
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_nested_metrics_equivalence(request, corpus):
-    # the runner's single-pass commit shape: arrow == pandas spec, and
-    # it must agree with the two separate kernels it replaces
+    # the runner's single-pass commit shape: equal to the pandas spec,
+    # and it must agree with the two separate kernels it replaces
     df = request.getfixturevalue(corpus)
-    a = _rows(extract_documents_with_metrics(df, engine="arrow"))
-    p = _rows(extract_documents_with_metrics(df, engine="pandas"))
-    assert a == p
+    assert_matches_spec(extract_documents_with_metrics(df), extract_nested_metrics, df)
     combined = {
         r.doc_id: (r.n_spans_in, r.n_spans_out, r.parse_failed)
         for r in extract_documents_with_metrics(df).collect()
@@ -98,14 +121,14 @@ def test_nested_metrics_equivalence(request, corpus):
 
 def test_duplicate_doc_id_rows_become_errors(spark):
     """A doc_id on two input rows of one batch violates the
-    one-row-per-document contract: BOTH kernels turn every such row
-    into an error row (one per input row, spans=[]) instead of the
-    silent merge the pandas spec used to do. (The check is necessarily
-    batch-local — rows split across partitions extract independently
-    in both kernels, which is likewise consistent.)"""
+    one-row-per-document contract: the kernel and the pandas spec
+    both turn every such row into an error row (one per input row,
+    spans=[]) instead of a silent merge. (The check is necessarily
+    batch-local — rows split across partitions extract independently,
+    which is likewise consistent.)"""
     import pandas as pd
 
-    from ocr_spark.kernel.extract import WARN_MALFORMED, extract_flat
+    from ocr_spark.kernel.extract import WARN_MALFORMED
 
     span = lambda off: {"kind": "text", "text": f"s{off}", "media_ref": "", "offset": off}
     pdf = pd.DataFrame(
@@ -115,32 +138,29 @@ def test_duplicate_doc_id_rows_become_errors(spark):
         }
     )
     df = spark.createDataFrame(pdf, schema=DOC_SCHEMA).coalesce(1)
-    for eng in ("arrow", "pandas"):
-        rows = extract_documents(df, engine=eng).collect()
-        got = [(r.doc_id, len(r.spans)) for r in rows]
-        assert sorted(got) == [("dup", 0), ("dup", 0), ("ok", 1)], (eng, got)
-        m = {
-            (r.doc_id, r.n_spans_in): r.parse_failed
-            for r in extract_documents_with_metrics(df, engine=eng).collect()
-        }
-        assert m == {("dup", 2): 1, ("ok", 1): 0}, (eng, m)
+    rows = extract_documents(df).collect()
+    got = [(r.doc_id, len(r.spans)) for r in rows]
+    assert sorted(got) == [("dup", 0), ("dup", 0), ("ok", 1)], got
+    m = {
+        (r.doc_id, r.n_spans_in): r.parse_failed
+        for r in extract_documents_with_metrics(df).collect()
+    }
+    assert m == {("dup", 2): 1, ("ok", 1): 0}, m
+    assert_matches_spec(extract_documents(df), extract_nested, df)
     # the pandas spec's flat view carries one MALFORMED error row per
     # duplicate input row
     flat = extract_flat(pdf)
     errs = flat[flat["kind"] == "__error__"]
     assert list(errs["doc_id"]) == ["dup", "dup"]
     assert set(errs["text"]) == {WARN_MALFORMED}
-    # and both kernels agree row-for-row on the combined shape
-    a = _rows(extract_documents_with_metrics(df, engine="arrow"))
-    p = _rows(extract_documents_with_metrics(df, engine="pandas"))
-    assert a == p
+    # and the kernel agrees with the spec row-for-row on the combined shape
+    assert_matches_spec(extract_documents_with_metrics(df), extract_nested_metrics, df)
 
 
 def test_null_doc_id_rows_become_errors(spark):
     """A NULL doc_id violates the input contract like a duplicate:
-    both kernels error the row (spans dropped, parse_failed) instead
-    of the previous split behavior (pandas grouped NaNs as duplicates,
-    arrow extracted them normally)."""
+    the kernel and the pandas spec both error the row (spans dropped,
+    parse_failed)."""
     import pandas as pd
 
     span = lambda off: {"kind": "text", "text": f"s{off}", "media_ref": "", "offset": off}
@@ -148,21 +168,21 @@ def test_null_doc_id_rows_become_errors(spark):
         {"doc_id": [None, "ok"], "spans": [[span(0), span(1)], [span(0)]]}
     )
     df = spark.createDataFrame(pdf, schema="doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>").coalesce(1)
-    for eng in ("arrow", "pandas"):
-        m = {r.doc_id: (r.n_spans_out, r.parse_failed) for r in
-             extract_documents_with_metrics(df, engine=eng).collect()}
-        # the non-nullable output schema renders the NULL id as ''
-        assert m[""] == (0, 1), (eng, m)
-        assert m["ok"] == (1, 0), (eng, m)
+    m = {r.doc_id: (r.n_spans_out, r.parse_failed) for r in
+         extract_documents_with_metrics(df).collect()}
+    # the non-nullable output schema renders the NULL id as ''
+    assert m[""] == (0, 1), m
+    assert m["ok"] == (1, 0), m
+    assert_matches_spec(extract_documents_with_metrics(df), extract_nested_metrics, df)
 
 
 def test_null_spans_row(spark):
     df = spark.createDataFrame(
         [("d1", None), ("d2", [])], schema=DOC_SCHEMA
     )
-    rows = _rows(extraction_metrics(df, engine="arrow"))
+    rows = _rows(extraction_metrics(df))
     assert all(r[3] == 1 for r in rows)  # parse_failed for both
-    nested = _nested_rows(extract_documents(df, engine="arrow"))
+    nested = _nested_rows(extract_documents(df))
     assert nested == [("d1", ()), ("d2", ())]
 
 
@@ -174,10 +194,8 @@ def test_truncation_equivalence(spark):
         for i in range(600)
     ]
     df = spark.createDataFrame([("big", spans), ("small", spans[:3])], schema=DOC_SCHEMA)
-    a = _rows(extract_main_content(df, engine="arrow"))
-    p = _rows(extract_main_content(df, engine="pandas"))
-    assert a == p
-    assert any(r[1] == "__truncated__" for r in a)
+    assert_matches_spec(extract_main_content(df), _main_content, df)
+    assert any(r[1] == "__truncated__" for r in _rows(extract_main_content(df)))
 
 
 def test_weight_partition_preserves_content(spark, hostile_docs):
@@ -231,20 +249,20 @@ def test_subslice_batches_identical_results(spark, hostile_docs):
 
     import ocr_spark.pipeline.extract as px
 
-    full = _nested_rows(extract_documents(hostile_docs, engine="arrow"))
+    full = _nested_rows(extract_documents(hostile_docs, ))
     with patch.object(px, "MAX_SPANS_PER_KERNEL_CALL", 64):
-        sliced = _nested_rows(extract_documents(hostile_docs, engine="arrow"))
+        sliced = _nested_rows(extract_documents(hostile_docs, ))
     assert sliced == full
 
-    flat_full = _rows(classify_spans(hostile_docs, engine="arrow"))
+    flat_full = _rows(classify_spans(hostile_docs, ))
     with patch.object(px, "MAX_SPANS_PER_KERNEL_CALL", 64):
-        flat_sliced = _rows(classify_spans(hostile_docs, engine="arrow"))
+        flat_sliced = _rows(classify_spans(hostile_docs, ))
     assert flat_sliced == flat_full
 
 
 def test_block_density_filter(spark):
     """min_block_chars drops sparse body blocks whole; headers/media
-    survive; pandas and arrow agree."""
+    survive; the kernel agrees with the pandas spec."""
     import dataclasses
 
     import pandas as pd
@@ -263,8 +281,8 @@ def test_block_density_filter(spark):
     df = spark.createDataFrame(
         pd.DataFrame([{"doc_id": "d1", "spans": spans}]), schema=DOC_SCHEMA
     )
-    for engine in ("arrow", "pandas"):
-        out = {r.offset: r.kind for r in extract_main_content(df, cfg=cfg, engine=engine).collect()}
-        assert 0 in out and 2 in out  # header + media exempt
-        assert 1 not in out  # sparse body block dropped whole
-        assert 3 in out and 4 in out  # dense block survives entirely
+    out = {r.offset: r.kind for r in extract_main_content(df, cfg=cfg).collect()}
+    assert 0 in out and 2 in out  # header + media exempt
+    assert 1 not in out  # sparse body block dropped whole
+    assert 3 in out and 4 in out  # dense block survives entirely
+    assert_matches_spec(extract_main_content(df, cfg), _main_content, df, cfg)

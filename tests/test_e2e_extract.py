@@ -39,7 +39,7 @@ def oracle():
 
 
 def test_differential_vs_pandas_oracle(spark, corpus, oracle):
-    got = extract_spans(corpus, num_partitions=8).collect()
+    got = extract_spans(corpus.repartition(8, "doc_id")).collect()
     got_rows = sorted(
         (r["doc_id"], r["offset"], r["kind"], r["text"], r["media_ref"], r["kept"]) for r in got
     )
@@ -97,7 +97,7 @@ def test_metrics_consistency(spark, corpus):
 def test_weight_partition_balances(spark):
     df = corpus_df(spark, n_docs=120, seed=7, giant_frac=0.05, empty_frac=0.0, malformed_frac=0.0)
     wp = weight_partition(df, 8)
-    out = extract_main_content(wp, num_partitions=None)
+    out = extract_main_content(wp)
     # correctness unchanged by the partitioning strategy
-    base = extract_main_content(df, num_partitions=8)
+    base = extract_main_content(df.repartition(8, "doc_id"))
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, base.collect()))

@@ -28,7 +28,7 @@ def test_fixtures_loaded():
 
 
 def test_span_sequence_equality_flat(spark, fixture_df):
-    out = classify_spans(fixture_df, num_partitions=4)
+    out = classify_spans(fixture_df.repartition(4, "doc_id"))
     got = {}
     for r in out.collect():
         got.setdefault(r["doc_id"], []).append((r["offset"], r["kind"], r["text"], r["media_ref"]))
@@ -38,7 +38,7 @@ def test_span_sequence_equality_flat(spark, fixture_df):
 
 
 def test_span_sequence_equality_nested(spark, fixture_df):
-    out = extract_documents(fixture_df, cfg=PARITY_CONFIG, num_partitions=4)
+    out = extract_documents(fixture_df.repartition(4, "doc_id"), cfg=PARITY_CONFIG)
     got = {r["doc_id"]: r["spans"] for r in out.collect()}
     for d in FIXTURES:
         spans = got[d["doc_id"]]

@@ -576,13 +576,31 @@ def test_connected_components_1k_chain_log_bound(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_two_phase_cc_matches_label_jump(spark):
-    """Large-star/small-star alternation: identical labels to the
-    default algorithm on pathological and random graphs."""
+def _union_find_labels(edge_list):
+    """Reference components: vertex -> min vertex id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_cc_matches_python_union_find(spark):
+    """Label-jump components == a Python union-find on pathological
+    and random graphs."""
     import random
 
     cases = []
-    # long chain (the large-star/small-star regime)
+    # long chain
     cases.append([(i, i + 1) for i in range(199)])
     # star + chain + isolated pair mix
     cases.append([(0, i) for i in range(1, 20)] + [(50, 51), (51, 52), (90, 91)])
@@ -596,36 +614,28 @@ def test_two_phase_cc_matches_label_jump(spark):
         cases.append([(a, b) for a, b in e if a != b])
     for ei, es in enumerate(cases):
         edges = spark.createDataFrame(es, "doc_a long, doc_b long")
-        want = {
-            r.doc_id: r.label
-            for r in dedup.connected_components(edges)[0].collect()
-        }
-        labels, iters = dedup.connected_components(edges, algorithm="two-phase")
+        labels, iters = dedup.connected_components(edges)
         got = {r.doc_id: r.label for r in labels.collect()}
-        assert got == want, (ei, iters)
+        assert got == _union_find_labels(es), (ei, iters)
 
 
-def test_two_phase_cc_self_loop_only_vertex(spark):
+def test_cc_self_loop_only_vertex(spark):
     """A vertex whose only edge is (v, v) is its own singleton
-    component under BOTH algorithms — two-phase must not drop it when
-    it strips self-loops from the working edge set."""
+    component."""
     edges = spark.createDataFrame(
         [(5, 5), (1, 2)], "doc_a long, doc_b long"
     )
-    want = {
-        r.doc_id: r.label for r in dedup.connected_components(edges)[0].collect()
-    }
-    labels, _ = dedup.connected_components(edges, algorithm="two-phase")
+    labels, _ = dedup.connected_components(edges)
     got = {r.doc_id: r.label for r in labels.collect()}
-    assert got == want == {1: 1, 2: 1, 5: 5}
+    assert got == {1: 1, 2: 1, 5: 5}
 
 
-def test_two_phase_cc_string_ids(spark):
+def test_cc_string_ids(spark):
     edges = spark.createDataFrame(
         [("sha1:b", "sha1:c"), ("sha1:a", "sha1:b"), ("sha1:x", "sha1:y")],
         "doc_a string, doc_b string",
     )
-    labels, _ = dedup.connected_components(edges, algorithm="two-phase")
+    labels, _ = dedup.connected_components(edges)
     got = {r.doc_id: r.label for r in labels.collect()}
     assert got == {
         "sha1:a": "sha1:a",

@@ -246,21 +246,6 @@ def test_embedding_dup_clusters_matches_duckdb_twin(emb, con_emb):
     assert got == want and len(got) > 0
 
 
-def test_embedding_dup_clusters_algorithms_agree(emb):
-    from ocr_spark.functions import similarity as sim
-
-    a = sorted(map(tuple, sim.embedding_dup_clusters(emb, tau=0.35).collect()))
-    b = sorted(
-        map(
-            tuple,
-            sim.embedding_dup_clusters(
-                emb, tau=0.35, algorithm="two-phase"
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
 def test_embedding_dup_clusters_rep_is_min_member(emb):
     from ocr_spark.functions import similarity as sim
 

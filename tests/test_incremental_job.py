@@ -162,3 +162,57 @@ def test_crash_between_publish_renames_recovers_state(spark, tmp_path):
     # the aside copy is gone after the next successful publish and the
     # republished state is live
     assert os.path.exists(hashes) and not os.path.exists(hashes + "._old")
+
+
+class _FakeFs:
+    """Dict-backed stand-in for a Hadoop FileSystem: rename reports
+    failure by returning False (never raises), like the real one."""
+
+    def __init__(self, files, failing_renames=()):
+        self.files = dict(files)
+        self.failing = set(failing_renames)
+
+    def exists(self, p):
+        return p in self.files
+
+    def delete(self, p, recursive):
+        return self.files.pop(p, None) is not None
+
+    def rename(self, src, dst):
+        if (src, dst) in self.failing or src not in self.files or dst in self.files:
+            return False
+        self.files[dst] = self.files.pop(src)
+        return True
+
+
+def test_publish_state_failed_rename_keeps_aside_state():
+    """A False from the tmp -> live rename must raise, and the aside
+    copy (the complete previous state) must survive for recovery."""
+    from jobs.incremental_extract import publish_state, recover_state
+
+    fs = _FakeFs({"h": "day0", "h._tmp": "day1"}, failing_renames={("h._tmp", "h")})
+    with pytest.raises(RuntimeError, match="rename"):
+        publish_state(fs, "h._tmp", "h", "h._old")
+    assert fs.files["h._old"] == "day0" and not fs.exists("h")
+    # the next run recovers the aside copy as live state
+    fs.failing.clear()
+    assert recover_state(fs, "h", "h._old")
+    assert fs.files["h"] == "day0" and not fs.exists("h._old")
+
+
+def test_publish_state_failed_aside_rename_keeps_live_state():
+    from jobs.incremental_extract import publish_state
+
+    fs = _FakeFs({"h": "day0", "h._tmp": "day1"}, failing_renames={("h", "h._old")})
+    with pytest.raises(RuntimeError, match="rename"):
+        publish_state(fs, "h._tmp", "h", "h._old")
+    assert fs.files["h"] == "day0"
+
+
+def test_recover_state_failed_rename_raises():
+    from jobs.incremental_extract import recover_state
+
+    fs = _FakeFs({"h._old": "day0"}, failing_renames={("h._old", "h")})
+    with pytest.raises(RuntimeError, match="rename"):
+        recover_state(fs, "h", "h._old")
+    assert fs.files == {"h._old": "day0"}

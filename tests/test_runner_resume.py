@@ -15,6 +15,7 @@ from ocr_spark.pipeline.runner import (
     cleanup_orphan_runs,
     list_runs,
 )
+from ocr_spark.pipeline.sinks import bucket_col, write_results
 from ocr_spark.sources.synth import synthesize_spans
 
 
@@ -197,8 +198,6 @@ def test_null_doc_id_row_stays_in_its_commit_group(spark, docs, tmp_path):
     hash(NULL)=42 input-side bucketing, the row migrated to a foreign
     bucket at write time and the dynamic-partition overwrite clobbered
     that bucket's previously committed data."""
-    from ocr_spark.pipeline.runner import _bucket_col
-
     nullable_doc = (
         "doc_id string, "
         "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -213,10 +212,10 @@ def test_null_doc_id_row_stays_in_its_commit_group(spark, docs, tmp_path):
     # the bucket of the kernel's rendered '' id
     n_buckets = 8
     got = corpus.where(F.col("doc_id").isNull()).select(
-        _bucket_col(n_buckets).alias("b")
+        bucket_col("doc_id", n_buckets).alias("b")
     ).collect()
     want = spark.createDataFrame([("",)], schema="doc_id string").select(
-        _bucket_col(n_buckets).alias("b")
+        bucket_col("doc_id", n_buckets).alias("b")
     ).collect()
     assert got[0].b == want[0].b
 
@@ -235,6 +234,34 @@ def test_null_doc_id_row_stays_in_its_commit_group(spark, docs, tmp_path):
     # and every real doc committed exactly once (no clobbered buckets)
     assert out.where(F.col("doc_id") != "").select("doc_id").distinct().count() == 500
     assert s["parse_failures"] == 1
+
+
+def test_write_results_null_key_lands_in_runner_bucket(spark, tmp_path):
+    """write_results and ExtractionRun share one bucket function: a
+    NULL-key row lands in the same bucket from both producers, so
+    per-doc joins across their tables stay bucket-aligned."""
+    nullable_doc = (
+        "doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    )
+    span = [{"kind": "text", "text": "orphan", "media_ref": "", "offset": 0}]
+    corpus = spark.createDataFrame(
+        [(None, span), ("a", span), ("b", span)], schema=nullable_doc
+    )
+    n_buckets = 8
+    run = ExtractionRun(
+        spark, corpus, str(tmp_path / "run"), RunConfig("rsink", n_buckets=n_buckets)
+    )
+    run.run()
+    (runner_bucket,) = run.output().where(F.col("doc_id") == "").collect()
+
+    write_results(corpus, str(tmp_path / "sink"), n_buckets=n_buckets)
+    (sink_row,) = (
+        spark.read.parquet(str(tmp_path / "sink"))
+        .where(F.col("doc_id").isNull())
+        .collect()
+    )
+    assert sink_row.bucket == runner_bucket.bucket
 
 
 # ---------------------------------------------------------------------------

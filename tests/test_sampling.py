@@ -788,13 +788,11 @@ def test_split_by_cluster_string_ids_both_engines(spark):
     con = duckdb.connect()
     con.register("t_df", pdf)
     con.execute("CREATE VIEW t AS SELECT * FROM t_df")
-    # id_sql reaches the embedded cluster pass; algorithm kwarg is
-    # accepted-and-ignored so ONE kwargs dict drives both twins
+    # id_sql reaches the embedded cluster pass; ONE kwargs dict drives
+    # both twins
     want = dict(
         con.execute(
-            dataset_split_by_cluster_sql(
-                "t", id_sql="doc_id", tau=0.5, algorithm="two-phase"
-            )
+            dataset_split_by_cluster_sql("t", id_sql="doc_id", tau=0.5)
         ).fetchall()
     )
     assert got == want

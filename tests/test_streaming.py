@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.pipeline.extract import extract_documents
+from ocr_spark.pipeline.sinks import bucket_col
 from ocr_spark.sources.synth import synthesize_spans
 from ocr_spark.streaming.extract import event_counts, stream_extract
 
@@ -77,7 +78,7 @@ def test_stream_extract_bucketed_layout(spark, tmp_path):
     # the bucket column matches the batch runner's function -> pruning
     # and per-doc joins behave identically across the two producers
     bad = out.where(
-        F.col("bucket") != F.pmod(F.hash(F.col("doc_id").cast("string")), F.lit(8))
+        F.col("bucket") != bucket_col("doc_id", 8)
     ).count()
     assert bad == 0
 
