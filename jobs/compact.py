@@ -2,10 +2,10 @@
 """spark-submit entry: small-files compaction for the bucketed
 results layout (``bucket=K/`` parquet partitions).
 
-An append-heavy table (streaming sink micro-batches, incremental
-curate runs, per-group runner commits) accumulates many small parquet
-files per bucket; at scale that turns every downstream scan into a
-listing + open storm and starves the scheduler with tiny splits.
+An append-heavy table (incremental curate runs, per-group runner
+commits) accumulates many small parquet files per bucket; at scale
+that turns every downstream scan into a listing + open storm and
+starves the scheduler with tiny splits.
 Compaction is the standard maintenance pass (Iceberg's
 rewrite_data_files; this is the parquet-layout twin):
 

@@ -10,7 +10,6 @@ repo maiphh/ocr (snapshot at /root/reference) on Apache Spark:
 - functions/ text analysis, dedup (exact/minhash/simhash/jaccard/
              clusters), similarity search, LLM-response parsing,
              multimodal plumbing
-- streaming/ Structured Streaming extraction + stateful dedup
 
 Design stance (SURVEY.md §7.0): reference semantics live in the
 kernel; Spark code stays thin and declarative so Catalyst/AQE pick

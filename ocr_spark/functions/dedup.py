@@ -1128,9 +1128,9 @@ def merge_band_index(idx_a: DataFrame, idx_b: DataFrame) -> DataFrame:
     batch) into one, idempotent on re-merge: distinct on
     (band, key, doc_id). ``sigs`` is functionally determined by
     doc_id, so dropDuplicates keeping any row is deterministic. Both
-    sides are normalized to the canonical four columns so a
-    streaming-maintained index (which carries an ingest_batch
-    partition column) merges cleanly with a batch-written one."""
+    sides are normalized to the canonical four columns so an index
+    read with extra columns (e.g. a partition column of its layout)
+    merges cleanly with a plain one."""
     cols = ["band", "key", "doc_id", "sigs"]
     return (
         idx_a.select(cols)
@@ -1164,8 +1164,8 @@ def dedup_against_index(
     if min_match is None:
         min_match = k // 2
     batch_idx = minhash_band_index(batch, k, bands, w)
-    # tolerate decorated indexes (e.g. the streaming writer's
-    # ingest_batch partition column) — only the canonical four matter
+    # tolerate decorated indexes (e.g. a partition column of the
+    # index's layout) — only the canonical four matter
     index = index.select("band", "key", "doc_id", "sigs")
     pairs = (
         batch_idx.alias("n")

@@ -201,6 +201,10 @@ def g711_expand(u8: np.ndarray, law: str) -> np.ndarray:
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+# Largest inflated raster decode_png will allocate (filter bytes
+# included). The deflate-ratio guard alone lets a multi-MB IDAT
+# declare a multi-GB raster.
+MAX_PNG_RASTER_BYTES = 256 << 20
 
 
 def decode_png(data: bytes) -> np.ndarray:
@@ -264,9 +268,12 @@ def decode_png(data: bytes) -> np.ndarray:
     # 1032:1, so a declared raster that large vs the compressed bytes
     # is unsatisfiable — and the inflate itself is capped at `need`
     # output bytes so a malicious stream raises the sentinel-path
-    # ValueError instead of OOMing the executor
+    # ValueError instead of OOMing the executor; a ratio-plausible
+    # raster must still fit MAX_PNG_RASTER_BYTES
     if need > len(idat) * 1100 + 64:
         raise ValueError("truncated PNG raster")
+    if need > MAX_PNG_RASTER_BYTES:
+        raise ValueError(f"PNG raster too large ({need} bytes)")
     try:
         raw = zlib.decompressobj(-15).decompress(bytes(idat[2:]), need)
     except zlib.error as exc:

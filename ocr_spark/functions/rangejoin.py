@@ -28,8 +28,7 @@ must reproduce it row-for-row.
 
 Reference analog: none (the reference has no temporal joins); this is
 part of the beyond-reference training-data/analytics surface
-(SURVEY.md §2 addenda), same family as the as-of join in
-``timeseries.py``.
+(SURVEY.md §2 addenda).
 """
 
 from __future__ import annotations

@@ -124,11 +124,10 @@ def scd2_history(
 
 def daily_status_obs(events: DataFrame) -> DataFrame:
     """(user_id, snap_day, status): the daily per-user observation the
-    SCD2 surfaces consume — integer epoch-day ids (the resample_fill
-    epoch-int discipline; timestamps are the TIMESTAMPTZ twin trap)
-    and min(event_type) as the deterministic representative. ONE
-    definition shared by the contract query and jobs/analytics.py's
-    published user_status_history table so they cannot drift."""
+    SCD2 surfaces consume — integer epoch-day ids (timestamps are the
+    TIMESTAMPTZ twin trap) and min(event_type) as the deterministic
+    representative. ONE definition shared by the Spark contract query
+    and its DuckDB twin (daily_status_obs_sql) so they cannot drift."""
     return (
         events.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
         .groupBy(

@@ -106,8 +106,8 @@ def _damage_counts(t):
 def encoding_suspect_col(text) -> "F.Column":
     """The boolean ``suspect`` signal as a single column over a text
     column (NULL-safe: NULL text profiles clean) — for consumers that
-    fold the gate into their own single scan (the streaming quality
-    monitor) instead of joining :func:`encoding_profile` back."""
+    fold the gate into their own single scan instead of joining
+    :func:`encoding_profile` back."""
     t = F.coalesce(text, F.lit(""))
     n_repl, n_moj, n_ctrl = _damage_counts(t)
     return (n_repl + n_moj + n_ctrl) > 0

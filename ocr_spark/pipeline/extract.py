@@ -20,8 +20,8 @@ or the span order invariant dies):
   most MAX_SPANS_PER_KERNEL_CALL spans per kernel call.
 
 At 100 TB the same plan holds: the scan is parquet/Iceberg with doc_id
-bucketing, the optional pre-kernel repartition is the only shuffle,
-and the UDF is embarrassingly parallel.
+bucketing, extraction itself adds no shuffle (any repartition is the
+caller's), and the UDF is embarrassingly parallel.
 """
 
 from __future__ import annotations

@@ -18,6 +18,40 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS = 512
 
 
+# Upper bound on the default driver heap (MiB).
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo",
+    cgroup_max: str = "/sys/fs/cgroup/memory.max",
+) -> str:
+    """Default ``spark.driver.memory``: half the memory this process
+    may use (the smaller of the cgroup limit and MemTotal), capped at
+    MAX_DRIVER_MEM_MB. In local mode the driver JVM is the whole
+    engine, and a heap as large as the machine gets the JVM killed by
+    the OOM killer before G1 collects. Falls back to the cap when
+    neither file is readable. OCR_SPARK_DRIVER_MEM overrides it."""
+    limits = []
+    try:
+        with open(cgroup_max) as f:
+            v = f.read().strip()  # a byte count, or "max"
+        if v.isdigit():
+            limits.append(int(v))
+    except OSError:
+        pass
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                parts = line.split()
+                if len(parts) > 1 and parts[0] == "MemTotal:" and parts[1].isdigit():
+                    limits.append(int(parts[1]) * 1024)  # kB
+    except OSError:
+        pass
+    mb = min([MAX_DRIVER_MEM_MB] + [b // 2 >> 20 for b in limits])
+    return f"{mb}m"
+
+
 def _default_local_dir(master: str) -> str | None:
     """Shuffle/spill/checkpoint block-file directory.
 
@@ -73,13 +107,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
-        .config("spark.driver.memory", os.environ.get("OCR_SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("OCR_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        # zero-input (timeout wake-up) batches only publish progress
-        # this often; the default 10 s makes every TTL-armed
-        # availableNow drain poll blind for tens of seconds
-        .config("spark.sql.streaming.noDataProgressEventInterval", "1000")
     )
     if not (extra_conf and "spark.local.dir" in extra_conf):
         local_dir = _default_local_dir(master)

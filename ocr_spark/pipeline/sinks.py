@@ -31,8 +31,8 @@ UTF8_BOM = b"\xef\xbb\xbf"
 
 
 def bucket_col(col: str, n_buckets: int):
-    """The one bucket function every results producer uses (this sink,
-    the checkpointed runner, the streaming sink): pmod(hash(key), N)
+    """The one bucket function every results producer uses (this sink
+    and the checkpointed runner): pmod(hash(key), N)
     over the key's STRING form, so a doc lands in the same bucket
     regardless of the key's native type. A NULL key buckets as '' —
     the kernel renders a NULL doc_id (contract violation -> error row)
@@ -58,9 +58,8 @@ def write_results(
     hash-distributed on the key into ``bucket=K/`` partitions — the
     parquet stand-in for Iceberg's ``bucket(N, doc_id)`` transform, so
     downstream per-doc joins can prune and co-locate. The bucket is
-    :func:`bucket_col`, shared with the checkpointed runner and the
-    streaming sink, so every producer lands the same doc in the same
-    bucket.
+    :func:`bucket_col`, shared with the checkpointed runner, so every
+    producer lands the same doc in the same bucket.
 
     ``dynamic=True`` (overwrite mode) replaces only the bucket dirs
     present in ``df`` — the idempotent re-commit discipline;

@@ -119,9 +119,9 @@ def test_threshold_filters(corpus, batch):
 
 
 def test_decorated_index_columns_tolerated(spark, corpus, batch):
-    """A streaming-maintained index carries an ingest_batch partition
-    column; both the batch join and the merge must normalize it away
-    instead of failing on schema mismatch."""
+    """An index read from a layout with an extra partition column
+    (here ingest_batch) must work: both the batch join and the merge
+    normalize it away instead of failing on schema mismatch."""
     decorated = minhash_band_index(corpus).withColumn(
         "ingest_batch", F.lit(0)
     )

@@ -630,3 +630,27 @@ def test_decode_png_rejects_deflate_bomb_and_caps_inflate():
     # the decoded_*_stats sentinel catch and kill the Spark task)
     with pytest.raises(ValueError, match="deflate"):
         mm.decode_png(_png_frame(ihdr_small, b"\x78\x01" + b"\xff" * 20))
+
+
+def test_decode_png_caps_absolute_raster_bytes():
+    """A raster past MAX_PNG_RASTER_BYTES is rejected before inflate,
+    even when its IDAT is large enough to pass the deflate-ratio guard
+    and really inflates to the declared size."""
+    import zlib as _z
+
+    w = h = 16384  # gray: need = h * (w + 1) just over 256 MiB
+    need = h * (w + 1)
+    assert need > mm.MAX_PNG_RASTER_BYTES
+    c = _z.compressobj(1)
+    zeros = b"\x00" * (1 << 20)
+    parts, left = [], need
+    while left:
+        n = min(left, len(zeros))
+        parts.append(c.compress(zeros[:n]))
+        left -= n
+    parts.append(c.flush())
+    idat = b"".join(parts)
+    assert need <= len(idat) * 1100  # the ratio guard alone passes it
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    with pytest.raises(ValueError, match="too large"):
+        mm.decode_png(_png_frame(ihdr, idat))

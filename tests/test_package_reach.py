@@ -1,0 +1,104 @@
+"""Every module under ocr_spark/ is reached by an import walk from the
+entry points (jobs, the driver contract, the benchmarks and scripts),
+except a named list of test oracles and support modules. A module that
+only its own tests import is dead code and should be deleted, not kept.
+
+The walk reads source files with ``ast``; it imports nothing."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "ocr_spark"
+
+ROOT_GLOBS = (
+    "jobs/*.py",
+    "__spark_entry__.py",
+    "bench.py",
+    "scripts/*.py",
+    "perfbench/*.py",
+)
+
+# Reached only by tests, on purpose.
+ALLOWED_UNREACHED = {
+    "ocr_spark.kernel.normalize",  # pandas spec oracle of the Arrow kernel
+    "ocr_spark.kernel.doctags",  # reference DocTags parser, test oracle
+    "ocr_spark.fixtures",  # test corpora
+    "ocr_spark.plans",  # physical-plan assertions in tests
+    "ocr_spark.pipeline.bucketing",  # kept or deleted with the day-N layout work
+}
+
+
+def _package_modules() -> dict[str, str]:
+    mods = {}
+    for path in glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, REPO)[: -len(".py")].split(os.sep)
+        if rel[-1] == "__init__":
+            rel = rel[:-1]
+        mods[".".join(rel)] = path
+    return mods
+
+
+def _imported_names(path: str, module: str | None, is_pkg: bool):
+    """Dotted names a file imports: for ``from a import b`` both ``a``
+    and ``a.b`` (b may be a submodule). Relative imports resolve
+    against ``module``."""
+    tree = ast.parse(open(path, encoding="utf-8").read(), path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                yield alias.name
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = (module or "").split(".")
+                if not is_pkg:
+                    parts = parts[:-1]
+                parts = parts[: len(parts) - (node.level - 1)]
+                base = ".".join(parts + ([base] if base else []))
+            yield base
+            for alias in node.names:
+                yield f"{base}.{alias.name}"
+
+
+def _reached(mods: dict[str, str]) -> set[str]:
+    todo = []
+    for pattern in ROOT_GLOBS:
+        for path in glob.glob(os.path.join(REPO, pattern)):
+            todo.extend(_imported_names(path, None, False))
+    seen: set[str] = set()
+    while todo:
+        name = todo.pop()
+        # importing a.b.c runs a/__init__ and a/b/__init__ too
+        parts = name.split(".")
+        for i in range(1, len(parts) + 1):
+            mod = ".".join(parts[:i])
+            if mod in mods and mod not in seen:
+                seen.add(mod)
+                path = mods[mod]
+                is_pkg = path.endswith("__init__.py")
+                todo.extend(_imported_names(path, mod, is_pkg))
+    return seen
+
+
+def test_every_package_module_is_reached():
+    mods = _package_modules()
+    unreached = set(mods) - _reached(mods)
+    assert unreached - ALLOWED_UNREACHED == set(), (
+        "modules no job, contract query, benchmark or script imports "
+        f"(delete them, or name them in ALLOWED_UNREACHED): "
+        f"{sorted(unreached - ALLOWED_UNREACHED)}"
+    )
+
+
+def test_allowed_unreached_list_is_current():
+    mods = _package_modules()
+    stale = ALLOWED_UNREACHED - set(mods)
+    assert not stale, f"ALLOWED_UNREACHED names missing modules: {sorted(stale)}"
+    now_reached = ALLOWED_UNREACHED & _reached(mods)
+    assert not now_reached, (
+        f"ALLOWED_UNREACHED names reached modules: {sorted(now_reached)}"
+    )

@@ -88,65 +88,6 @@ def test_spark_submit_dedup_job(tmp_path):
 
 
 @pytest.mark.slow
-def test_spark_submit_analytics_job(tmp_path):
-    spark_submit = shutil.which("spark-submit")
-    if spark_submit is None:
-        pytest.skip("spark-submit not on PATH")
-    zpath = _build_zip(str(tmp_path))
-    out = str(tmp_path / "analytics")
-    cmd = [
-        spark_submit,
-        "--master", "local[4]",
-        "--py-files", zpath,
-        os.path.join(REPO, "jobs", "analytics.py"),
-        "--docs", "/root/testdata/sf0.001/documents.parquet",
-        "--events", "/root/testdata/sf0.001/events.parquet",
-        "--output", out,
-        "--top-k", "3",
-        # NO --exact-distinct: exercise the default (HLL) branch —
-        # the one a flagless submission runs
-    ]
-    env = {**os.environ, "PYTHONPATH": ""}
-    res = subprocess.run(cmd, capture_output=True, text=True, timeout=600, env=env)
-    assert res.returncode == 0, res.stderr[-3000:]
-    summary = json.loads(res.stdout.strip().splitlines()[-1])
-    rows = summary["rows"]
-    assert set(rows) == {
-        "doc_rollup", "doc_cube", "lang_by_source", "doc_percentiles",
-        "top_docs", "sessions", "attribution", "funnel", "retention",
-        "distinct_users", "anomalies", "session_paths", "transitions",
-        "user_status_history", "vocab", "source_rank",
-    }
-    assert all(n > 0 for n in rows.values()), rows
-    # every table landed as readable parquet
-    for name in rows:
-        assert os.path.isdir(os.path.join(out, name))
-    # published schemas are the typed/stable contract: n_users
-    # regardless of counting method, real timestamps (not the
-    # contract-compare string shape)
-    import pyarrow.parquet as pq
-
-    def _schema(name):
-        d = os.path.join(out, name)
-        f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-        return pq.read_schema(os.path.join(d, f))
-
-    assert "n_users" in _schema("distinct_users").names
-    att = _schema("attribution")
-    assert str(att.field("ts").type).startswith("timestamp")
-    assert str(att.field("matched_ts").type).startswith("timestamp")
-    sess = _schema("sessions")
-    assert str(sess.field("session_start").type).startswith("timestamp")
-    anom = _schema("anomalies")
-    assert str(anom.field("is_anomaly").type) == "bool"
-    hist = _schema("user_status_history")
-    # published SCD2 keeps the typed NULLable valid_to (the -1
-    # sentinel exists only in the contract-compare projection)
-    assert str(hist.field("valid_to").type) == "int64"
-    assert "path" in _schema("session_paths").names
-
-
-@pytest.mark.slow
 def test_spark_submit_incremental_extract_job(tmp_path):
     """The daily-delta job under REAL spark-submit --py-files (the
     north-rule submission path), two days in one JVM-pair: day 0 full,

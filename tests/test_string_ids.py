@@ -130,76 +130,6 @@ def test_pages_operators_string_ids(spark):
     assert un == {_sid(1): "a.pdf", _sid(2): "a_1.pdf"}
 
 
-def test_streaming_dedup_string_ids(spark, tmp_path):
-    from ocr_spark.streaming.dedup import run_distinct_stream
-
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    df = pd.DataFrame(
-        {"doc_id": [_sid(2), _sid(1), _sid(3)], "text": ["x", "x", "y"]}
-    )
-    spark.createDataFrame(df).write.parquet(inp)
-    run_distinct_stream(spark, inp, outp, ckpt)
-    got = {r.doc_id for r in spark.read.parquet(outp).collect()}
-    assert got == {_sid(1), _sid(3)}  # lowest string id wins for 'x'
-
-
-def test_streaming_assemble_string_ids(spark, tmp_path):
-    from ocr_spark.streaming.assemble import run_assemble_stream
-
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    spark.createDataFrame(
-        [(_sid(7), 2, 2, "two"), (_sid(7), 1, 2, "one")],
-        "doc_id string, page_number long, total_pages long, page_text string",
-    ).write.parquet(inp)
-    run_assemble_stream(spark, inp, outp, ckpt)
-    got = {r.doc_id: (r.n_pages, r.text) for r in spark.read.parquet(outp).collect()}
-    assert got == {_sid(7): (2, "one two")}
-
-
-def test_streaming_dedup_null_ids_and_null_text(spark, tmp_path):
-    """NULL doc_ids inside a dup group (rep = min NON-NULL id, SQL-min
-    style), an all-NULL-id group (emitted with NULL id), and a NULL
-    text (NULL md5 key) must all flow through — any of them used to
-    raise inside applyInPandasWithState, failing the batch with the
-    checkpoint replaying the poison forever."""
-    from ocr_spark.streaming.dedup import run_distinct_stream
-
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    spark.createDataFrame(
-        [
-            (None, "x"),        # NULL id inside the 'x' dup group
-            (_sid(2), "x"),
-            (_sid(1), "x"),
-            (None, "only-nulls"),  # group whose every id is NULL
-            (_sid(9), None),    # NULL text -> NULL md5 group key
-        ],
-        "doc_id string, text string",
-    ).write.parquet(inp)
-    run_distinct_stream(spark, inp, outp, ckpt)
-    got = {r.text: r.doc_id for r in spark.read.parquet(outp).collect()}
-    assert got == {"x": _sid(1), "only-nulls": None, None: _sid(9)}
-
-
-def test_streaming_assemble_null_doc_id_filtered(spark, tmp_path):
-    """NULL doc_id pages are unassemblable; they are dropped in the
-    plan instead of failing the batch against the non-nullable output
-    field."""
-    from ocr_spark.streaming.assemble import run_assemble_stream
-
-    inp, outp, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    spark.createDataFrame(
-        [
-            (None, 1, 1, "ghost"),
-            (_sid(7), 1, 2, "one"),
-            (_sid(7), 2, 2, "two"),
-        ],
-        "doc_id string, page_number long, total_pages long, page_text string",
-    ).write.parquet(inp)
-    run_assemble_stream(spark, inp, outp, ckpt)
-    got = {r.doc_id: r.text for r in spark.read.parquet(outp).collect()}
-    assert got == {_sid(7): "one two"}
-
-
 def test_remove_repeated_passages_string_ids(spark):
     """The cut pass keys the canonical pick on raw doc_id order —
     string ids must ride through intact, with the lexicographic-min
