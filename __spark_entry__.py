@@ -102,8 +102,6 @@ from ocr_spark.functions.pq import (
     pq_encode_flat_sql,
 )
 from ocr_spark.functions.pq_codebooks import PQ_CODEBOOKS_SF001 as _PQ_CB
-from ocr_spark.functions import olap
-from ocr_spark.functions import rangejoin as rj
 from ocr_spark.functions import sampling as smp
 from ocr_spark.functions import tfidf as tfi
 from ocr_spark.functions import skew as sk
@@ -113,7 +111,6 @@ from ocr_spark.functions.sketches import bloom_contains as sk_bloom_contains
 from ocr_spark.functions.sketches import bloom_contains_sql as sk_bloom_contains_sql
 from ocr_spark.functions.sketches import cms_build as sk_cms_build
 from ocr_spark.functions.sketches import cms_build_sql as sk_cms_build_sql
-from ocr_spark.functions.sketches import exact_distinct as sk_exact_distinct
 from ocr_spark.functions.sketches import hist_quantiles as sk_hist_quantiles
 from ocr_spark.functions.sketches import (
     hist_quantiles_sql as sk_hist_quantiles_sql,
@@ -126,11 +123,9 @@ from ocr_spark.functions.sketches import (
 from ocr_spark.functions.sketches import (
     hist_sketch_build_sql as sk_hist_build_sql,
 )
-from ocr_spark.functions import scd
 from ocr_spark.functions import text as txt
 from ocr_spark.functions import scrub as scr
 from ocr_spark.functions import contamination as cnt
-from ocr_spark.functions import graph as gph
 from ocr_spark.functions import classifier as qc
 from ocr_spark.functions import lm
 from ocr_spark.pipeline import extract as pex
@@ -148,6 +143,7 @@ import dataclasses as _dc
 from ocr_spark.pipeline.validate import (
     FieldSpec,
     bhxh_schema,
+    confidence_display,
     run_summary,
     validate_fields,
     validate_sql,
@@ -177,15 +173,6 @@ _MEDIA_ORD_KEY_DUCK = (
     "CAST(TRY_CAST(regexp_extract(media_ref, '-([0-9]+)$', 1) AS INT) // 17 "
     "AS VARCHAR)"
 )
-
-# One hot key over ~half the events + a uniform tail — the shape
-# key_skew_stats exists to flag. One string, both dialects (% and
-# CAST..STRING agree; DuckDB accepts STRING as a VARCHAR alias).
-_SKEW_KEY = (
-    "CASE WHEN user_id % 10 < 5 THEN 'hot' "
-    "ELSE CAST(user_id % 1000 AS STRING) END"
-)
-
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
@@ -292,9 +279,7 @@ def _validated_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pandas/DuckDB — sentinel it out of the exported surface
     out = out.withColumn("amount_num", F.coalesce(F.col("amount_num"), F.lit(-1.0)))
     # F9: display string (/root/reference/webapp/results.py:56)
-    return out.withColumn(
-        "confidence_pct", F.format_string("%.1f%%", F.col("confidence") * 100)
-    )
+    return out.withColumn("confidence_pct", confidence_display(F.col("confidence")))
 
 
 def _validated_sql() -> str:
@@ -481,77 +466,6 @@ def _run_summary_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("average_confidence"),
         F.sum(F.when(F.col("n_warnings") > 0, 1).otherwise(0)).alias("warnings_count"),
     )
-
-
-def _event_windows_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window event aggregation. value sums use exact integer
-    cents so parallel summation order cannot perturb the result."""
-    ev = _read(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value_cents",
-        )
-    )
-
-
-def _event_windows_sql() -> str:
-    return """
-      SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S')
-               AS window_start,
-             event_type,
-             count(*) AS n_events,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-               AS sum_value_cents
-      FROM events GROUP BY 1, 2
-    """
-
-
-def _sales_by_region_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-schema join: fact (orders) x broadcast dims (customer ->
-    nation -> region), aggregated per region/orderstatus. The dims
-    are broadcast explicitly — at 100 TB the fact side never
-    shuffles for the join, only for the final small-key aggregate.
-    Money is summed as exact integer cents."""
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nat = _read(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    reg = _read(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), F.col("c_nationkey") == nat.n_nationkey)
-        .join(F.broadcast(reg), F.col("n_regionkey") == reg.r_regionkey)
-        .groupBy("r_name", "o_orderstatus")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "total_price_cents"
-            ),
-        )
-    )
-
-
-def _sales_by_region_sql() -> str:
-    return """
-      SELECT r.r_name, o.o_orderstatus,
-             count(*) AS n_orders,
-             CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS total_price_cents
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
-      JOIN region r ON n.n_regionkey = r.r_regionkey
-      GROUP BY 1, 2
-    """
 
 
 def _doc_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -902,35 +816,17 @@ def _snap_new_spark(s: SparkSession, d: str) -> DataFrame:
     )
 
 
-def _scd_obs_spark(s: SparkSession, d: str) -> DataFrame:
-    """Daily per-user status observations for the SCD2 contract query
-    — THE shared definition (scd.daily_status_obs)."""
-    return scd.daily_status_obs(_read(s, d, "events"))
-
-
-_SCD_OBS_SQL = f"({scd.daily_status_obs_sql('events')})"
-
-
-# Driver-sample rotation (round 5): the correctness driver checks the
-# FIRST 50 keys of queries(). Rounds 1-3 sampled insertion order
-# (extraction-first); round 4 front-loaded 50 never-driver-checked
-# dedup/scrub/graph/packing queries (all green, CORRECTNESS_r04). This
-# round rotates the next never-checked block to the front: 46 from the
-# OLAP/timeseries/sketch/PQ/BPE/URL/incremental-extraction residue,
-# plus BOTH new real-decode queries (decoded_png_stats,
-# decoded_g711_stats — the block's standing codec rows, so decode
-# regressions stay driver-visible across rotations), plus TWO
-# ever-green sentinels (extract_main_content, span_diff_golden) so the
-# extraction core is never fully outside the driver gate — the
-# blind-spot tradeoff ADVICE r04 flagged. The cost: 24 of the 72
-# never-driver-checked names stay outside the driver sample
-# (pack_interleaved_stats / ivfpq_nprobe_topk / cube_doc_stats /
-# pq_adc_topk dropped because a same-family sibling is in) — every
-# one of them was value-verified driver-style at sf0.01 via
-# scripts/contract_check.py this round (NOTES_BUILD.md session 19),
-# and all of them run in the in-repo sweep each gate. The block below
-# is shorter than 50 names; the free slots take the next never-checked
-# names in insertion order.
+# Sample order: the contract correctness check reads the FIRST 50 keys
+# of queries(). Rounds 1-3 sampled insertion order (extraction-first);
+# round 4 front-loaded 50 never-checked dedup/scrub/packing queries
+# (all green, CORRECTNESS_r04). The block below puts the next
+# never-checked names first: the sketch/PQ/BPE/URL/incremental-
+# extraction residue, both real-decode queries (decoded_png_stats,
+# decoded_g711_stats), so decode regressions stay in the sample, and
+# two ever-green sentinels (extract_main_content, span_diff_golden),
+# so the extraction core is never outside it. The block is shorter
+# than 50 names; the free slots take the next never-checked names in
+# insertion order.
 _DRIVER_SAMPLE_FIRST = [
     # sentinels (ever-green core, kept driver-visible every rotation)
     "extract_main_content",
@@ -957,18 +853,6 @@ _DRIVER_SAMPLE_FIRST = [
     "encoding_profile",
     "fix_mojibake",
     "normalize_nfc",
-    # events
-    "distinct_users_by_type",
-    "interval_attribution",
-    # OLAP
-    "sales_by_region",
-    "rollup_doc_stats",
-    "pivot_lang_by_source",
-    "unpivot_lang_counts",
-    "chars_histogram",
-    "percentile_chars",
-    "topk_per_group",
-    "key_skew_stats",
     # ANN / quantization
     "ann_recall_eval",
     "quantize_embeddings",
@@ -994,19 +878,18 @@ _DRIVER_SAMPLE_FIRST = [
 # CORRECTNESS_r04 keys (all green) that are still queries.
 _DRIVER_CHECKED_R4 = frozenset([
     "benchmark_leaks", "bloom_fp_eval", "bloom_novelty", "bm25_topk",
-    "cap_per_source", "cluster_reps", "clustering_coefficients",
-    "containment_pairs", "contamination_overlap", "dataset_split_assign",
-    "decoded_audio_stats", "decoded_image_stats", "dup_clusters_string_ids",
-    "duplication_profile", "exact_dedup_canonical", "exact_dedup_string_ids",
-    "gopher_rules", "incremental_dedup", "keyword_tag", "line_dedup",
-    "lsh_pairs_scoped", "lsh_recall_eval", "lsh_verified_pairs_string_ids",
-    "mixture_plan", "novel_docs", "pack_index", "pack_shards",
-    "pack_shards_global", "pagerank", "phrase_search", "pii_scrub",
-    "quality_classifier", "remove_repeated_passages", "repeated_passages",
-    "repetition_signals", "scd2_user_status", "scrub_spans", "semantic_dedup",
-    "shuffle_order", "snapshot_diff", "snapshot_edit_profile",
-    "span_diff_golden", "stratified_sample", "temperature_mix",
-    "triangle_counts", "weighted_sample", "winnow_fingerprints",
+    "cap_per_source", "cluster_reps", "containment_pairs",
+    "contamination_overlap", "dataset_split_assign", "decoded_audio_stats",
+    "decoded_image_stats", "dup_clusters_string_ids", "duplication_profile",
+    "exact_dedup_canonical", "exact_dedup_string_ids", "gopher_rules",
+    "incremental_dedup", "keyword_tag", "line_dedup", "lsh_pairs_scoped",
+    "lsh_recall_eval", "lsh_verified_pairs_string_ids", "mixture_plan",
+    "novel_docs", "pack_index", "pack_shards", "pack_shards_global",
+    "phrase_search", "pii_scrub", "quality_classifier",
+    "remove_repeated_passages", "repeated_passages", "repetition_signals",
+    "scrub_spans", "semantic_dedup", "shuffle_order", "snapshot_diff",
+    "snapshot_edit_profile", "span_diff_golden", "stratified_sample",
+    "temperature_mix", "weighted_sample", "winnow_fingerprints",
 ])
 
 _DRIVER_CHECKED_R123 = frozenset([
@@ -1014,8 +897,8 @@ _DRIVER_CHECKED_R123 = frozenset([
     "caption_pairs", "chunk_dedup", "chunk_integrity", "chunk_interleaved",
     "chunk_interleaved_bpe", "classify_spans", "cosine_topk",
     "doc_stats_by_source", "dup_clusters", "edit_update",
-    "edit_update_overwrite", "embedding_near_dups", "event_props_extract",
-    "event_window_counts", "exact_dedup", "extract_dense_blocks",
+    "edit_update_overwrite", "embedding_near_dups", "exact_dedup",
+    "extract_dense_blocks",
     "extract_main_content", "extraction_metrics", "fingerprint",
     "interleave_stats", "interleaved_token_counts", "ivf_topk", "lang_id",
     "lexical_stats", "llm_response_parse", "lsh_verified_pairs",
@@ -1289,10 +1172,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "run_summary": _run_summary_spark,
         # --- LLM-response parsing (P4/P5) + JSON column access
         "llm_response_parse": _llm_parse_spark,
-        "event_props_extract": lambda s, d: _read(s, d, "events").select(
-            F.col("event_id").cast("long").alias("event_id"),
-            F.get_json_object("props", "$.k").cast("int").alias("k"),
-        ),
         # --- results-table semantics (J1, J3, J4, R5)
         "results_upsert": _upsert_spark,
         "edit_update": _edit_update_spark,
@@ -1525,8 +1404,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_clusters_string_ids": lambda s, d: ded.dup_clusters(
             _string_id_docs(_read(s, d, "documents"))
         ),
-        # --- windowed aggregation + dimensional stats
-        "event_window_counts": _event_windows_spark,
+        # --- snapshot change profile + per-source stats
         # crawl-refresh classification: changed docs between two
         # snapshots profiled minor/major by distinct-shingle Jaccard
         # (hash pre-join -> semi-joined re-shingle, the
@@ -1535,90 +1413,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _read(s, d, "documents").select("doc_id", "text"),
             _snap_new_spark(s, d),
         ),
-        # per-node triangle participation over a deterministic dense
-        # synthetic graph (doc_id % 30 x doc_id div 30 pairing) —
-        # degree-ordered orientation, wedge + closure equi-joins
-        "triangle_counts": lambda s, d: gph.triangle_counts(
-            _read(s, d, "documents").selectExpr(
-                "doc_id % 30 AS src", "(doc_id div 30) % 30 AS dst"
-            )
-        ),
-        # local clustering coefficient per node (exact integer ppm;
-        # every node rowed, zero-triangle included) over the same
-        # synthetic graph
-        "clustering_coefficients": lambda s, d: gph.clustering_coefficients(
-            _read(s, d, "documents").selectExpr(
-                "doc_id % 30 AS src", "(doc_id div 30) % 30 AS dst"
-            )
-        ),
-        # SCD2 validity intervals over daily per-user status
-        # observations (gaps-and-islands lag/filter/lead; integer day
-        # ids dodge the TIMESTAMPTZ twin trap)
-        # valid_to's real NULL (current run) is coalesced to -1 in the
-        # CONTRACT projection only: a NULLable BIGINT comes back from
-        # the oracle as float64 ('5.0' vs '5' in the value hash) —
-        # is_current already carries the open-endedness
-        "scd2_user_status": lambda s, d: scd.scd2_history(
-            _scd_obs_spark(s, d),
-            key="user_id",
-            snap="snap_day",
-            attrs=("status",),
-        ).selectExpr(
-            "user_id",
-            "status",
-            "valid_from",
-            "coalesce(valid_to, -1) AS valid_to",
-            "is_current",
-        ),
-        # exact distinct per group (the oracle-able twin of the HLL
-        # sketch path in functions/sketches.py, which tests pin for
-        # shard-merge losslessness + bounded error)
-        "distinct_users_by_type": lambda s, d: sk_exact_distinct(
-            _read(s, d, "events"), ["event_type"], "user_id"
-        ),
         "doc_stats_by_source": _doc_stats_spark,
-        # star-schema fact x broadcast-dim-chain join
-        "sales_by_region": _sales_by_region_spark,
-        # --- OLAP breadth: hierarchy rollup in one Expand+agg pass,
-        # exact nearest-rank percentiles (sketch-swappable at scale),
-        # WindowGroupLimit top-k per group
-        "rollup_doc_stats": lambda s, d: olap.rollup_doc_stats(
-            _read(s, d, "documents")
-        ),
-        "cube_doc_stats": lambda s, d: olap.cube_doc_stats(
-            _read(s, d, "documents")
-        ),
-        # cross-tab with PINNED pivot vocabulary (no distinct-collect
-        # discovery job; schema stays data-independent)
-        "pivot_lang_by_source": lambda s, d: olap.pivot_lang_by_source(
-            _read(s, d, "documents")
-        ),
-        "unpivot_lang_counts": lambda s, d: olap.unpivot_lang_counts(
-            _read(s, d, "documents")
-        ),
-        # fixed-width length histogram (explicit bounds — data-driven
-        # edges cost a full extra pass and chase outliers)
-        "chars_histogram": lambda s, d: olap.chars_histogram(
-            _read(s, d, "documents"), lo=0, hi=600, n_bins=12
-        ),
-        "percentile_chars": lambda s, d: olap.percentile_chars(
-            _read(s, d, "documents")
-        ),
-        "topk_per_group": lambda s, d: olap.topk_per_group(
-            _read(s, d, "documents")
-        ),
         # skew-safe two-phase aggregation: result == plain GROUP BY
         # (integer-exact sums), physical plan salted
         "salted_doc_counts": lambda s, d: sk.salted_agg(
             _read(s, d, "documents"),
             ["lang"],
             {"n_docs": ("count", "doc_id"), "total_chars": ("sum", "n_chars")},
-        ),
-        # skew census: top-k heaviest keys + uniform-mean multiple —
-        # the diagnostic that sizes salted_agg's n_salts (the key expr
-        # manufactures one hot key over half the events)
-        "key_skew_stats": lambda s, d: sk.key_skew_stats(
-            _read(s, d, "events"), _SKEW_KEY, top_k=15
         ),
         # --- multimodal plumbing (binary media + typed metadata)
         "media_table": lambda s, d: mm.synthesize_media(_read(s, d, "documents"))
@@ -1757,12 +1558,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dim, window winner (score DESC, topic ASC), 'none' fallback
         "keyword_tag": lambda s, d: kw.keyword_tag(
             _read(s, d, "documents"), _TAXONOMY
-        ),
-        # banded interval join (points-in-window attribution): time-
-        # banded equi-join + exact recheck — must equal the oracle's
-        # naive non-equi join row-for-row with no nested-loop plan
-        "interval_attribution": lambda s, d: rj.attribution_join_events(
-            _read(s, d, "events")
         ),
         # tf-idf top terms (rational idf — exact cross-engine; the
         # ln() variant stays off the hash-compared path by design)
@@ -1978,26 +1773,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _read(s, d, "documents").where(F.col("doc_id") % 29 == 0),
             w=8,
             min_overlap=2,
-        ),
-        # link-graph PageRank (crawl-frontier / source-authority
-        # ranking): exact fixed-point integer power iteration — the
-        # deterministic edge synthesis below is mirrored in the twin
-        "pagerank": lambda s, d: gph.pagerank(
-            _read(s, d, "documents").select(
-                (F.col("doc_id") % 97).alias("src"),
-                ((F.col("doc_id") * 31 + 7) % 97).alias("dst"),
-            ),
-            iters=3,
-        ),
-        # seeded (TrustRank-style) PageRank: teleport + dangling mass
-        # flow only to the trusted seed set
-        "personalized_pagerank": lambda s, d: gph.personalized_pagerank(
-            _read(s, d, "documents").select(
-                (F.col("doc_id") % 97).alias("src"),
-                ((F.col("doc_id") * 31 + 7) % 97).alias("dst"),
-            ),
-            seeds=[0, 1, 2],
-            iters=3,
         ),
         # corpus vocabulary heavy hitters (tokenizer-training pass):
         # one token shuffle + TakeOrderedAndProject top-k
@@ -2235,10 +2010,6 @@ def oracle_sql() -> dict[str, str]:
           FROM ({_validated_sql()})
         """,
         "llm_response_parse": _llm_parse_sql(),
-        "event_props_extract": (
-            "SELECT CAST(event_id AS BIGINT) AS event_id, "
-            "CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events"
-        ),
         "results_upsert": _upsert_sql(),
         "edit_update": _edit_update_sql(),
         "edit_update_overwrite": _edit_overwrite_sql(),
@@ -2344,51 +2115,18 @@ def oracle_sql() -> dict[str, str]:
         "dup_clusters_string_ids": ded.dup_clusters_sql(
             _STRID_TABLE, id_sql="doc_id"
         ),
-        "event_window_counts": _event_windows_sql(),
         "snapshot_edit_profile": ded.snapshot_edit_profile_sql(
             "documents",
             "(SELECT doc_id, "
             + _SNAP_EDIT_CASE.format(div="//")
             + " FROM documents)",
         ),
-        "triangle_counts": gph.triangle_counts_sql(
-            "SELECT doc_id % 30 AS src, (doc_id // 30) % 30 AS dst"
-            " FROM documents"
-        ),
-        "clustering_coefficients": gph.clustering_coefficients_sql(
-            "SELECT doc_id % 30 AS src, (doc_id // 30) % 30 AS dst"
-            " FROM documents"
-        ),
-        "scd2_user_status": (
-            "SELECT user_id, status, valid_from,"
-            " coalesce(valid_to, -1) AS valid_to, is_current FROM ("
-            + scd.scd2_history_sql(
-                table=_SCD_OBS_SQL,
-                key="user_id",
-                snap="snap_day",
-                attrs=("status",),
-            )
-            + ")"
-        ),
-        "distinct_users_by_type": (
-            "SELECT event_type, count(DISTINCT user_id) AS n_users "
-            "FROM events GROUP BY event_type"
-        ),
         "doc_stats_by_source": _doc_stats_sql(),
-        "sales_by_region": _sales_by_region_sql(),
-        "rollup_doc_stats": olap.rollup_doc_stats_sql(),
-        "cube_doc_stats": olap.cube_doc_stats_sql(),
-        "pivot_lang_by_source": olap.pivot_lang_by_source_sql(),
-        "unpivot_lang_counts": olap.unpivot_lang_counts_sql(),
-        "chars_histogram": olap.chars_histogram_sql(lo=0, hi=600, n_bins=12),
-        "percentile_chars": olap.percentile_chars_sql(),
-        "topk_per_group": olap.topk_per_group_sql(),
         "salted_doc_counts": (
             "SELECT lang, count(doc_id) AS n_docs, "
             "CAST(sum(n_chars) AS BIGINT) AS total_chars "
             "FROM documents GROUP BY lang"
         ),
-        "key_skew_stats": sk.key_skew_stats_sql("events", _SKEW_KEY, top_k=15),
         "media_table": (
             "SELECT media_ref, width, height FROM ("
             + mm.synthesize_media_sql()
@@ -2447,7 +2185,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "keyword_tag": kw.keyword_tag_sql("documents", _TAXONOMY),
         "winnow_fingerprints": txt.winnow_fingerprints_sql("documents"),
-        "interval_attribution": rj.attribution_join_events_sql(),
         "tfidf_top_terms": tfi.tfidf_top_terms_sql(),
         "cap_per_source": (
             "SELECT doc_id, source FROM ("
@@ -2549,17 +2286,6 @@ def oracle_sql() -> dict[str, str]:
             "(SELECT * FROM documents WHERE doc_id % 29 = 0)",
             w=8,
             min_overlap=2,
-        ),
-        "pagerank": gph.pagerank_sql(
-            "(SELECT doc_id % 97 AS src, (doc_id * 31 + 7) % 97 AS dst"
-            " FROM documents)",
-            iters=3,
-        ),
-        "personalized_pagerank": gph.personalized_pagerank_sql(
-            "(SELECT doc_id % 97 AS src, (doc_id * 31 + 7) % 97 AS dst"
-            " FROM documents)",
-            seeds=[0, 1, 2],
-            iters=3,
         ),
         "vocab_topk": txt.vocab_topk_sql("documents", k=200),
         "bpe_pair_counts": txt.bpe_pair_counts_sql("documents", k=60),

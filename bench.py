@@ -204,10 +204,9 @@ def headline_queries(spark, sf_dir: str, span_dir: str | None = None):
         # array_sort/array_join aggregate (string assembly on the
         # reduce side; chunk_interleaved measures the same Exchange
         # with numeric aggregates, so the delta isolates the string
-        # cost). chunk_integrity / multimodal_near_dups /
-        # key_skew_stats / chunk_dedup reuse measured shapes (chunker
-        # + equi-join / lsh_verified + media_jaccard / hash-agg +
-        # TakeOrdered / hash-agg over rendered strings).
+        # cost). chunk_integrity / multimodal_near_dups / chunk_dedup
+        # reuse measured shapes (chunker + equi-join / lsh_verified +
+        # media_jaccard / hash-agg over rendered strings).
         "render_chunks": lambda: ilv.render_chunks(spans()),
     }
 

@@ -10,10 +10,9 @@ score is the EXACT integer sum of scaled conditional probabilities
 
 summed over a doc's bigrams — integer multiply / integer divide /
 integer sum, so the result is partition-, engine-, and association-
-independent (the same discipline as the tf-idf rational idf and the
-PageRank fixed point). Downstream gates threshold the mean
-``sum_scaled / n_bigrams`` however they like; the stored columns stay
-integers.
+independent (the same discipline as the tf-idf rational idf).
+Downstream gates threshold the mean ``sum_scaled / n_bigrams``
+however they like; the stored columns stay integers.
 
 Scale shape: ONE corpus scan builds the bigram and prefix-unigram
 count tables (explode + map-side partial counts, one shuffle each);
@@ -371,8 +370,7 @@ def fluency_buckets(
     (0 when a doc has no bigrams — such docs are judged least fluent
     and sink toward the tail). Tercile thresholds are nearest-rank
     percentiles of ``mean_scaled``: exact BIGINTs drawn from the data
-    (the ``percentile_chars`` discipline — no float interpolation in
-    the contract), with values EQUAL to a threshold falling into the
+    (no float interpolation in the contract), with values EQUAL to a threshold falling into the
     lower bucket. With default ``accuracy`` the Spark percentile is
     exact up to 10^6 docs; at corpus scale lower it and the thresholds
     become t-digest approximations of the same cut points (the bucket

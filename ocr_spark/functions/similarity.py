@@ -985,8 +985,8 @@ def knn_graph(
     sign-signature band keys (~n²/2^planes_per_band per band, each
     extra bit halves it — the embedding_near_dups scale argument);
     only candidates get an exact cosine, and per-source ranking is a
-    window the optimizer truncates to k map-side (WindowGroupLimit,
-    the topk_per_group shape). The join shuffles on uniform (band,
+    window the optimizer truncates to k map-side (WindowGroupLimit).
+    The join shuffles on uniform (band,
     key); the rank shuffles on vec_id. Vectors whose buckets are
     singletons in every band emit no rows (honest LSH recall miss —
     raise planes/bands or fall back to :func:`cosine_topk` for

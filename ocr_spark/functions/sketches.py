@@ -1,80 +1,26 @@
-"""Mergeable sketches: distinct counting that composes at 100 TB.
+"""Fixed-size sketches that compose at 100 TB.
 
-Exact COUNT(DISTINCT) over a huge keyspace shuffles every distinct
-value; a sketch shuffles a few KB per group. Spark 3.5+ ships Apache
-DataSketches HLL natively (``hll_sketch_agg`` / ``hll_union_agg`` /
-``hll_sketch_estimate``), which gives the property that matters at
-scale: sketches built independently per shard/day/partition MERGE
-into exactly the sketch a single pass would have built — so daily
-jobs can maintain running distinct counts without reprocessing
-history.
+Each sketch shuffles a fixed-size table no matter how large the data
+is:
 
-``approx_distinct`` (HLL++ via ``approx_count_distinct``) is the
-one-shot form; ``shard_sketches``/``merge_sketches`` are the
-incremental form. Tests pin (a) relative error against the exact
-count and (b) shard-then-merge == single-pass equality (bit-exact,
-not approximate — merge is lossless for HLL).
+- count-min (``cms_*``): approximate token frequencies, one-sided
+  over-estimates;
+- Bloom filter (``bloom_*``): approximate set membership, no false
+  negatives;
+- HDR histogram (``hist_*``): quantiles with bounded relative error;
+- bottom-k (``source_overlap``): pairwise source-overlap estimates.
+
+Count-min, Bloom and histogram sketches built independently per
+shard/day merge (``*_merge``) into exactly the sketch a single pass
+would have built, so daily jobs keep running summaries without
+reprocessing history. Hashing and binning are integer work, so each
+sketch table is deterministic and has an exact DuckDB twin.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-LG_K = 12  # DataSketches default; ~1.6% rse, ~2^lg_k = 4 KB per
-           # sketch (HLL_8 layout: one byte per register)
-
-
-def exact_distinct(
-    df: DataFrame, keys: list[str], col: str, out: str = "n_users"
-) -> DataFrame:
-    """Per-group EXACT distinct count — the oracle-able twin of
-    ``approx_distinct`` (shuffles the distinct values; fine while
-    per-group cardinality fits a reducer, swap for the sketch past
-    that)."""
-    return df.groupBy(*keys).agg(F.countDistinct(col).alias(out))
-
-
-def approx_distinct(
-    df: DataFrame,
-    keys: list[str],
-    col: str,
-    rsd: float = 0.05,
-    out: str | None = None,
-) -> DataFrame:
-    """Per-group approximate distinct count (HLL++), one shuffle of
-    fixed-size sketch partials — never of the distinct values.
-    ``out`` names the count column (default ``approx_distinct_<col>``);
-    pass the same name as the exact twin's to keep a published table's
-    schema stable across exact/approx runs."""
-    return df.groupBy(*keys).agg(
-        F.approx_count_distinct(col, rsd).alias(
-            out or f"approx_distinct_{col}"
-        )
-    )
-
-
-def shard_sketches(
-    df: DataFrame, keys: list[str], shard_key: str, col: str, lg_k: int = LG_K
-) -> DataFrame:
-    """Per-(keys, shard) HLL sketches — the incremental artifact a
-    daily pipeline persists (binary column, ~2^lg_k bytes each)."""
-    return df.groupBy(*keys, shard_key).agg(
-        F.hll_sketch_agg(col, F.lit(lg_k)).alias("sketch")
-    )
-
-
-def merge_sketches(sketches: DataFrame, keys: list[str]) -> DataFrame:
-    """Union persisted shard sketches and estimate: (keys,
-    distinct_estimate). Lossless — equals the single-pass sketch."""
-    return (
-        sketches.groupBy(*keys)
-        .agg(F.hll_union_agg("sketch").alias("merged"))
-        .select(
-            *keys,
-            F.hll_sketch_estimate("merged").alias("distinct_estimate"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -411,17 +357,16 @@ def hist_sketch_build(
     sub-buckets per power of two, so any quantile estimate's relative
     error is <= 2^-sub_bits (~3% at the default 5).
 
-    The mergeable complement to the exact nearest-rank percentile
-    (olap.percentile_chars): exact mode needs the value multiset per
-    group; this sketch is a FIXED <= (64 - sub_bits)·2^sub_bits + 1
-    row table (~1.9k rows) no matter the data size, built with one
-    map-side-partial shuffle, and per-shard/day sketches merge by bin
-    addition into exactly the single-pass sketch. Binning is pure
-    integer work — floor(log2 v) is the binary-string length, no
-    libm — so sketch AND estimates are engine-exact and
-    oracle-checkable (the CMS/Bloom discipline). NULLs and values
-    <= 0 occupy the dedicated zero bin (rows are never dropped);
-    values below 2^(sub_bits+1) get exact unit bins;
+    The mergeable complement to an exact nearest-rank percentile,
+    which needs the value multiset per group: this sketch is a FIXED
+    <= (64 - sub_bits)·2^sub_bits + 1 row table (~1.9k rows) no
+    matter the data size, built with one map-side-partial shuffle,
+    and per-shard/day sketches merge by bin addition into exactly the
+    single-pass sketch. Binning is pure integer work — floor(log2 v)
+    is the binary-string length, no libm — so sketch AND estimates are
+    engine-exact and oracle-checkable (the CMS/Bloom discipline).
+    NULLs and values <= 0 occupy the dedicated zero bin (rows are
+    never dropped); values below 2^(sub_bits+1) get exact unit bins;
     counts/lengths/latencies are the intended domain."""
     return (
         df.selectExpr(

@@ -726,7 +726,7 @@ def ngram_diversity(docs: DataFrame, n: int = 2) -> DataFrame:
     to a two-stage partial/merge aggregate on uniform hash keys —
     exact, as a contract query must be; at the 100 TB scale swap the
     distinct for the mergeable HLL sketch
-    (:mod:`ocr_spark.functions.sketches`) and keep this exact form for
+    (:func:`ngram_diversity_approx`) and keep this exact form for
     per-source samples.
     """
     from ocr_spark.functions.dedup import shingles_expr

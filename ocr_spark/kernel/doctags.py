@@ -40,8 +40,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 _WRAPPER_TAGS = {"doctag", "unordered_list", "ordered_list"}
 
 # One content span: <kind><loc..>body</kind>
@@ -135,8 +133,3 @@ def parse_doctags(stream: str) -> list[dict]:
     else:
         _parse_plain(tail, spans, pic_count)
     return spans
-
-
-def parse_doctags_batch(streams: pd.Series) -> pd.Series:
-    """Vectorized-over-batch variant: Series[str] -> Series[list[dict]]."""
-    return streams.map(parse_doctags)

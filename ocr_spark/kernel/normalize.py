@@ -16,15 +16,6 @@ import pandas as pd
 NA = "N/A"
 
 
-def na_coalesce(raw: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """F1: None/""/"N/A" -> "N/A"; returns (value, is_missing).
-
-    /root/reference/pipeline.py:216-225.
-    """
-    missing = raw.isna() | (raw == "") | (raw == NA)
-    return raw.where(~missing, NA), missing
-
-
 def normalize_number(raw: pd.Series) -> tuple[pd.Series, pd.Series]:
     """F2+F3+F4: currency strip + locale-aware number parse.
 
@@ -118,12 +109,6 @@ def validate_regex(value: pd.Series, pattern: str) -> pd.Series:
     # oracle must interpret \d/\w/\s in the user's pattern the same way
     miss = ~value.fillna("").str.contains("(?a)" + anchored, regex=True)
     return miss & (value != NA)
-
-
-def validate_enum(value: pd.Series, allowed: list[str]) -> pd.Series:
-    """F7: not-in-enum -> warning flag; N/A exempt
-    (/root/reference/pipeline.py:291-294)."""
-    return ~value.isin(allowed) & (value != NA)
 
 
 def confidence(n_missing_required: pd.Series, n_other_warnings: pd.Series) -> pd.Series:

@@ -29,10 +29,6 @@ def deterministic_token(doc_id: Column, page_number: Column) -> Column:
     return F.sha2(F.concat_ws("#", doc_id.cast("string"), page_number.cast("string")), 256)
 
 
-def token_sql(doc_id: str, page_number: str) -> str:
-    return f"sha256(CAST({doc_id} AS VARCHAR) || '#' || CAST({page_number} AS VARCHAR))"
-
-
 def append_results(old: DataFrame, new: DataFrame) -> DataFrame:
     """J1: append=true (/root/reference/webapp/api.py:238-251)."""
     return old.unionByName(new)
@@ -165,11 +161,3 @@ def latest_row(df: DataFrame, order_col: str = "run_ts") -> DataFrame:
     /root/reference/webapp/jobs.py:264-267) — max_by over the run
     ordering; ties broken by the token for determinism."""
     return df.orderBy(F.desc(order_col), *df.columns).limit(1)
-
-
-def with_run_meta(df: DataFrame, **meta: str | int | float) -> DataFrame:
-    """A3: run-level constant columns (schema_version, engine, langs...)
-    (/root/reference/webapp/results.py:77-88)."""
-    for k, v in meta.items():
-        df = df.withColumn(k, F.lit(v))
-    return df

@@ -148,8 +148,3 @@ def write_json_envelope(
     with open(path, "w", encoding="utf-8") as f:
         json.dump(envelope, f, ensure_ascii=False, indent=2)
     return path
-
-
-def write_json_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Cluster-scale JSON-lines sink (the distributed version of S9)."""
-    df.write.mode(mode).json(path)

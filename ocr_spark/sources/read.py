@@ -1,4 +1,4 @@
-"""Sources (SURVEY.md S1/S2): table + file-tree readers.
+"""Sources (SURVEY.md S1/S2): file-tree, binary-file and JSONL readers.
 
 The reference's ingestion is a recursive directory walk plus a glob
 filter (/root/reference/pipeline.py:82-95,509-515; dup
@@ -11,13 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ocr_spark.schema import DOC_SCHEMA
-
-
-def read_span_table(spark: SparkSession, path: str) -> DataFrame:
-    """The canonical input: (doc_id, spans) parquet/Iceberg table."""
-    return spark.read.schema(DOC_SCHEMA).parquet(path)
 
 
 def read_file_tree(

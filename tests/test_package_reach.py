@@ -2,14 +2,19 @@
 entry points (jobs, the driver contract, the benchmarks and scripts),
 except a named list of test oracles and support modules. A module that
 only its own tests import is dead code and should be deleted, not kept.
+Within modules, every top-level function and class is named somewhere
+in the repo's Python files besides its own definition.
 
-The walk reads source files with ``ast``; it imports nothing."""
+The checks read source files with ``ast`` and a word scan; they import
+nothing."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+import re
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "ocr_spark"
@@ -101,4 +106,23 @@ def test_allowed_unreached_list_is_current():
     now_reached = ALLOWED_UNREACHED & _reached(mods)
     assert not now_reached, (
         f"ALLOWED_UNREACHED names reached modules: {sorted(now_reached)}"
+    )
+
+
+def test_every_package_function_is_referenced():
+    words: Counter[str] = Counter()
+    for path in glob.glob(os.path.join(REPO, "**", "*.py"), recursive=True):
+        words.update(re.findall(r"\w+", open(path, encoding="utf-8").read()))
+    defs: Counter[str] = Counter()
+    for path in _package_modules().values():
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        for node in tree.body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                defs[node.name] += 1
+    unreferenced = sorted(n for n, k in defs.items() if words[n] <= k)
+    assert not unreferenced, (
+        "top-level functions/classes no *.py file names besides their "
+        f"own definition (delete them): {unreferenced}"
     )

@@ -109,20 +109,6 @@ def test_trained_ivf_assignment_is_scan_stage(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_star_join_broadcasts_every_dim(spark):
-    """sales_by_region: the fact side must never shuffle for the
-    joins — every dimension hop (customer -> nation -> region) is a
-    BroadcastHashJoin; the only Exchange is the final small-key
-    aggregate's."""
-    import __spark_entry__ as entry
-
-    df = entry._sales_by_region_spark(spark, SF_DIR)
-    plan = _plan(df, "simple")
-    assert plan.count("BroadcastHashJoin") == 3, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
 def test_dedup_against_index_is_equi_join(docs):
     from ocr_spark.functions.dedup import dedup_against_index, minhash_band_index
 

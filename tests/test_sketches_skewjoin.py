@@ -1,79 +1,15 @@
-"""Mergeable HLL sketches + salted skew join."""
+"""Salted skew join + mergeable count-min, Bloom, histogram and
+bottom-k sketches."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_spark.functions.sketches import (
-    approx_distinct,
-    merge_sketches,
-    shard_sketches,
-)
 from ocr_spark.functions.skew import salted_join
 from ocr_spark.plans import plan_str
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    return spark.read.parquet(f"{SF_DIR}/events.parquet")
-
-
-def test_approx_distinct_within_rsd(events):
-    exact = {
-        r.event_type: r.n
-        for r in events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    approx = {
-        r.event_type: r.approx_distinct_user_id
-        for r in approx_distinct(events, ["event_type"], "user_id").collect()
-    }
-    assert approx.keys() == exact.keys()
-    for k, n in exact.items():
-        assert abs(approx[k] - n) <= max(3, 0.15 * n), (k, approx[k], n)
-
-
-def test_shard_then_merge_equals_single_pass(events, spark):
-    """The scale property: per-day sketches unioned == one sketch
-    over everything, bit-exact on the estimate."""
-    ev = events.withColumn("day", F.to_date("ts"))
-    sharded = merge_sketches(
-        shard_sketches(ev, ["event_type"], "day", "user_id"),
-        ["event_type"],
-    )
-    single = (
-        ev.groupBy("event_type")
-        .agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("s"))
-        .select(
-            "event_type",
-            F.hll_sketch_estimate("s").alias("distinct_estimate"),
-        )
-    )
-    got = {r.event_type: r.distinct_estimate for r in sharded.collect()}
-    want = {r.event_type: r.distinct_estimate for r in single.collect()}
-    assert got == want
-    # and the estimate is itself sane vs the exact count
-    exact = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    for k, n in exact.items():
-        assert abs(got[k] - n) <= max(3, 0.1 * n)
-
-
-def test_sketch_shuffle_is_fixed_size(events):
-    """The partial aggregate ships sketches, not distinct values."""
-    plan = plan_str(
-        approx_distinct(events, ["event_type"], "user_id"), "simple"
-    )
-    assert "partial_approx_count_distinct" in plan, plan
-    assert plan.count("Exchange") == 1, plan
 
 
 def test_salted_join_equals_plain_join(spark):
