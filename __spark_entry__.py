@@ -78,30 +78,8 @@ from ocr_spark.functions.unicode_norm import (
     normalize_nfc_sql,
 )
 from ocr_spark.functions import urls as curl
-from ocr_spark.functions.zorder import zorder_codes, zorder_codes_sql
-from ocr_spark.functions.quantize import (
-    ann_quantized_topk,
-    ann_quantized_topk_sql,
-    quantize_flat,
-    quantize_flat_sql,
-)
 from ocr_spark.functions import multimodal as mm
 from ocr_spark.functions import tables as tbl
-from ocr_spark.functions import similarity as sim
-from ocr_spark.functions.ivf_centroids import (
-    TRAINED_CENTROIDS_SF001 as _IVF_CENTS,
-)
-from ocr_spark.functions.pq import (
-    ivfpq_nprobe_topk,
-    ivfpq_nprobe_topk_sql,
-    ivfpq_topk,
-    ivfpq_topk_sql,
-    pq_adc_topk,
-    pq_adc_topk_sql,
-    pq_encode_flat,
-    pq_encode_flat_sql,
-)
-from ocr_spark.functions.pq_codebooks import PQ_CODEBOOKS_SF001 as _PQ_CB
 from ocr_spark.functions import sampling as smp
 from ocr_spark.functions import tfidf as tfi
 from ocr_spark.functions import skew as sk
@@ -820,7 +798,7 @@ def _snap_new_spark(s: SparkSession, d: str) -> DataFrame:
 # of queries(). Rounds 1-3 sampled insertion order (extraction-first);
 # round 4 front-loaded 50 never-checked dedup/scrub/packing queries
 # (all green, CORRECTNESS_r04). The block below puts the next
-# never-checked names first: the sketch/PQ/BPE/URL/incremental-
+# never-checked names first: the sketch/BPE/URL/incremental-
 # extraction residue, both real-decode queries (decoded_png_stats,
 # decoded_g711_stats), so decode regressions stay in the sample, and
 # two ever-green sentinels (extract_main_content, span_diff_golden),
@@ -838,7 +816,6 @@ _DRIVER_SAMPLE_FIRST = [
     "extract_input_hashes",
     "incremental_extract",
     "corpus_checksum",
-    "zorder_codes",
     # URL family
     "canonical_urls",
     "url_dedup",
@@ -853,17 +830,7 @@ _DRIVER_SAMPLE_FIRST = [
     "encoding_profile",
     "fix_mojibake",
     "normalize_nfc",
-    # ANN / quantization
-    "ann_recall_eval",
-    "quantize_embeddings",
-    "ann_quantized_topk",
-    "ivf_topk_trained",
-    "ivf_cell_stats",
-    "pq_codes",
-    "ivfpq_topk",
-    "cluster_balanced_sample",
-    "embedding_dup_clusters",
-    "knn_graph",
+    # sampling
     "curriculum_order",
     # text stats / mixtures
     "tfidf_top_terms",
@@ -887,20 +854,18 @@ _DRIVER_CHECKED_R4 = frozenset([
     "novel_docs", "pack_index", "pack_shards", "pack_shards_global",
     "phrase_search", "pii_scrub", "quality_classifier",
     "remove_repeated_passages", "repeated_passages", "repetition_signals",
-    "scrub_spans", "semantic_dedup", "shuffle_order", "snapshot_diff",
+    "scrub_spans", "shuffle_order", "snapshot_diff",
     "snapshot_edit_profile", "span_diff_golden", "stratified_sample",
     "temperature_mix", "weighted_sample", "winnow_fingerprints",
 ])
 
 _DRIVER_CHECKED_R123 = frozenset([
-    "ann_lsh_topk", "ann_multiprobe_topk", "block_density_stats",
-    "caption_pairs", "chunk_dedup", "chunk_integrity", "chunk_interleaved",
-    "chunk_interleaved_bpe", "classify_spans", "cosine_topk",
-    "doc_stats_by_source", "dup_clusters", "edit_update",
-    "edit_update_overwrite", "embedding_near_dups", "exact_dedup",
-    "extract_dense_blocks",
+    "block_density_stats", "caption_pairs", "chunk_dedup",
+    "chunk_integrity", "chunk_interleaved", "chunk_interleaved_bpe",
+    "classify_spans", "doc_stats_by_source", "dup_clusters", "edit_update",
+    "edit_update_overwrite", "exact_dedup", "extract_dense_blocks",
     "extract_main_content", "extraction_metrics", "fingerprint",
-    "interleave_stats", "interleaved_token_counts", "ivf_topk", "lang_id",
+    "interleave_stats", "interleaved_token_counts", "lang_id",
     "lexical_stats", "llm_response_parse", "lsh_verified_pairs",
     "media_context", "media_dup_clusters", "media_features",
     "media_jaccard_pairs", "media_linking", "media_position_stats",
@@ -1205,11 +1170,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_checksum": lambda s, d: adt.table_checksum(
             _read(s, d, "documents")
         ),
-        "zorder_codes": lambda s, d: zorder_codes(
-            _read(s, d, "documents").select("doc_id", "n_chars"),
-            "doc_id",
-            "n_chars",
-        ),
         # URL canonicalization over deterministically synthesized
         # crawl URLs (host case noise, default port, tracking params,
         # fragment — every rule active at contract scale)
@@ -1451,67 +1411,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the expansion from md5(media_ref) in pure integer SQL
         "decoded_g711_stats": lambda s, d: mm.decoded_audio_stats(
             mm.synthesize_g711_wav(_read(s, d, "documents"))
-        ),
-        # --- similarity search
-        "cosine_topk": lambda s, d: sim.cosine_topk(_read(s, d, "embeddings")),
-        "ann_lsh_topk": lambda s, d: sim.ann_lsh_topk(_read(s, d, "embeddings")),
-        "ann_multiprobe_topk": lambda s, d: sim.ann_multiprobe_topk(
-            _read(s, d, "embeddings")
-        ),
-        # recall@k of the multiprobe ANN list vs the brute-force truth
-        # (the retrieval-side lsh_recall_eval)
-        "ann_recall_eval": lambda s, d: sim.ann_recall_eval(
-            _read(s, d, "embeddings")
-        ),
-        "ivf_topk": lambda s, d: sim.ivf_topk(_read(s, d, "embeddings")),
-        "quantize_embeddings": lambda s, d: quantize_flat(
-            _read(s, d, "embeddings")
-        ),
-        "ann_quantized_topk": lambda s, d: ann_quantized_topk(
-            _read(s, d, "embeddings")
-        ),
-        # trained path: baked kmeans_centroids literals (the offline
-        # codebook an IVF deployment ships); assignment is a pure
-        # scan-stage argmax, no join
-        "ivf_topk_trained": lambda s, d: sim.ivf_topk(
-            _read(s, d, "embeddings"), centroids=_IVF_CENTS
-        ),
-        # IVF index health: per-cell population + integer-fixed-point
-        # cohesion over the trained centroids (scan-stage argmax, one
-        # k-row aggregate)
-        "ivf_cell_stats": lambda s, d: sim.ivf_cell_stats(
-            _read(s, d, "embeddings"), centroids=_IVF_CENTS
-        ),
-        # tau matches embedding_near_dups: the synthetic corpus is
-        # near-orthogonal, so 0.35 is where drops actually happen
-        "semantic_dedup": lambda s, d: sim.semantic_dedup(
-            _read(s, d, "embeddings"), _IVF_CENTS, tau=0.35
-        ),
-        "pq_codes": lambda s, d: pq_encode_flat(_read(s, d, "embeddings"), _PQ_CB),
-        "pq_adc_topk": lambda s, d: pq_adc_topk(_read(s, d, "embeddings"), _PQ_CB),
-        "ivfpq_topk": lambda s, d: ivfpq_topk(
-            _read(s, d, "embeddings"), _IVF_CENTS, _PQ_CB
-        ),
-        "ivfpq_nprobe_topk": lambda s, d: ivfpq_nprobe_topk(
-            _read(s, d, "embeddings"), _IVF_CENTS, _PQ_CB, nprobe=2
-        ),
-        # semantic domain balancing: cap each trained k-means cell
-        # (scan-stage argmax assignment + one rank-window shuffle)
-        "cluster_balanced_sample": lambda s, d: sim.cluster_balanced_sample(
-            _read(s, d, "embeddings"), centroids=_IVF_CENTS, cap=20
-        ),
-        "embedding_near_dups": lambda s, d: sim.embedding_near_dups(
-            _read(s, d, "embeddings"), tau=0.35
-        ),
-        # semantic-dedup group selection: connected components over
-        # the verified embedding near-dup graph (shared union-find)
-        "embedding_dup_clusters": lambda s, d: sim.embedding_dup_clusters(
-            _read(s, d, "embeddings"), tau=0.35
-        ),
-        # all-corpus k-NN graph: banded-LSH candidates, exact-cosine
-        # per-source rank (map-side WindowGroupLimit truncation)
-        "knn_graph": lambda s, d: sim.knn_graph(
-            _read(s, d, "embeddings"), k=5
         ),
         # --- deterministic sampling (training-data surface): content-
         # hash bucketing, not sample() — row-stable under task retry /
@@ -2024,9 +1923,6 @@ def oracle_sql() -> dict[str, str]:
         "lexical_stats": txt.lexical_stats_sql(),
         "readability": txt.readability_sql(),
         "corpus_checksum": adt.table_checksum_sql(),
-        "zorder_codes": zorder_codes_sql(
-            "SELECT doc_id, n_chars FROM documents", "doc_id", "n_chars"
-        ),
         "canonical_urls": curl.canonicalize_urls_sql(
             "SELECT doc_id, concat('HTTPS://WWW.', upper(source), "
             "'.Example.COM:443/p/', CAST(doc_id AS VARCHAR), "
@@ -2137,28 +2033,6 @@ def oracle_sql() -> dict[str, str]:
         "decoded_audio_stats": mm.decoded_audio_stats_sql(),
         "decoded_png_stats": mm.decoded_png_stats_sql(),
         "decoded_g711_stats": mm.decoded_g711_stats_sql(),
-        "cosine_topk": sim.cosine_topk_sql(),
-        "ann_lsh_topk": sim.ann_lsh_topk_sql(),
-        "ann_multiprobe_topk": sim.ann_multiprobe_topk_sql(),
-        "ann_recall_eval": sim.ann_recall_eval_sql(),
-        "ivf_topk": sim.ivf_topk_sql(),
-        "quantize_embeddings": quantize_flat_sql(),
-        "ann_quantized_topk": ann_quantized_topk_sql(),
-        "ivf_topk_trained": sim.ivf_topk_trained_sql(_IVF_CENTS),
-        "ivf_cell_stats": sim.ivf_cell_stats_sql(_IVF_CENTS),
-        "semantic_dedup": sim.semantic_dedup_sql(_IVF_CENTS, tau=0.35),
-        "pq_codes": pq_encode_flat_sql(_PQ_CB),
-        "pq_adc_topk": pq_adc_topk_sql(_PQ_CB),
-        "ivfpq_topk": ivfpq_topk_sql(_IVF_CENTS, _PQ_CB),
-        "ivfpq_nprobe_topk": ivfpq_nprobe_topk_sql(
-            _IVF_CENTS, _PQ_CB, nprobe=2
-        ),
-        "cluster_balanced_sample": sim.cluster_balanced_sample_sql(
-            _IVF_CENTS, cap=20
-        ),
-        "embedding_near_dups": sim.embedding_near_dups_sql(tau=0.35),
-        "embedding_dup_clusters": sim.embedding_dup_clusters_sql(tau=0.35),
-        "knn_graph": sim.knn_graph_sql("embeddings", k=5),
         "dataset_split_assign": (
             "SELECT doc_id, split FROM ("
             + smp.dataset_split_sql("documents")

@@ -69,7 +69,6 @@ def headline_queries(spark, sf_dir: str, span_dir: str | None = None):
     changes no values."""
     import __spark_entry__ as entry_mod
     from ocr_spark.functions import dedup as ded
-    from ocr_spark.functions import similarity as sim
     from ocr_spark.functions import text as txt
     from ocr_spark.pipeline import pages as pg
     from ocr_spark.functions import interleave as ilv
@@ -82,9 +81,6 @@ def headline_queries(spark, sf_dir: str, span_dir: str | None = None):
 
     def docs():
         return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(npart)
-
-    def emb():
-        return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(npart)
 
     def validated():
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(npart)
@@ -118,30 +114,15 @@ def headline_queries(spark, sf_dir: str, span_dir: str | None = None):
         "simhash": lambda: ded.simhash(docs()),
         "ngram_jaccard_pairs": lambda: ded.ngram_jaccard_pairs(docs()),
         "lsh_verified_pairs": lambda: ded.lsh_verified_pairs(docs()),
-        "cosine_topk": lambda: sim.cosine_topk(emb()),
-        "ann_lsh_topk": lambda: sim.ann_lsh_topk(emb()),
-        "embedding_near_dups": lambda: sim.embedding_near_dups(emb(), tau=0.9),
-        # round-3 session-6 additions. ann_quantized_topk is NOT here:
-        # its eager int8-index build is ~2 s of fixed job/JIT overhead
-        # at this corpus size (2k vectors), which would read as a fake
-        # regression in the suite total — it stays contract-checked.
         "chunk_docs": lambda: chunk_documents(docs(), max_tokens=64, overlap=16),
         "strip_frequent_spans": lambda: ilv.strip_frequent_spans(spans()),
-        # round-3 session-8 additions. ivfpq_topk is NOT here for the
-        # same reason as ann_quantized_topk: at this corpus size
-        # (2k vectors) its cost is ~15-20 s of FIXED driver-side
-        # codegen compile (the 272-fold code/argmax projection) + an
-        # eager index materialization — re-executing the compiled
-        # plan takes 1.3 s, and at 100 TB the compile is amortized
-        # and the index is a stored table. It stays contract-checked.
         "pack_index": lambda: _pack_index_q(docs()),
-        "semantic_dedup": lambda: _semantic_dedup_q(emb()),
         # round-3 session-9 additions: the classifier is the new
         # explode -> broadcast-dim -> partial-agg shape; bm25 is the
         # query-filtered posting-list shape. fluency_buckets is NOT
         # here (its localCheckpoint barrier is already represented by
-        # lsh_verified_pairs); shuffle_order/knn_graph reuse measured
-        # shapes (rank window / banded self-join).
+        # lsh_verified_pairs); shuffle_order reuses a measured shape
+        # (rank window).
         "quality_classifier": lambda: _classifier_q(docs()),
         "bm25_topk": lambda: _bm25_q(docs()),
         # round-3 session-11 additions: the two nested-span array-fold
@@ -161,11 +142,10 @@ def headline_queries(spark, sf_dir: str, span_dir: str | None = None):
         # (9 delete-and-diff regexp_replace passes per doc; 0.6 s at
         # sf0.1, pure codegen). kn_fluency is NOT here: its 4.4 s at
         # this SF is ~6 tiny-shuffle stage FLOORS over 266k pair rows
-        # (the ivfpq/ann_quantized costing argument — fixed per-stage
-        # overhead, not data cost); it stays contract-checked.
-        # encoding_profile / containment_pairs / cluster_reps /
-        # ann_recall_eval reuse measured shapes (regex-count scan /
-        # lsh_verified joins / window pick / topk joins).
+        # (fixed per-stage overhead, not data cost); it stays
+        # contract-checked. encoding_profile / containment_pairs /
+        # cluster_reps reuse measured shapes (regex-count scan /
+        # lsh_verified joins / window pick).
         "script_profile": lambda: txt.script_profile(docs()),
         # round-3 session-15 additions: the bloom gate is a NEW
         # measured shape (bitset build agg + k broadcast-join probe,
@@ -266,13 +246,6 @@ def _pack_index_q(docs):
     from ocr_spark.functions.packing import pack_index
 
     return pack_index(chunk_documents(docs, max_tokens=64, overlap=16), 128, 64)
-
-
-def _semantic_dedup_q(emb):
-    from ocr_spark.functions.ivf_centroids import TRAINED_CENTROIDS_SF001
-    from ocr_spark.functions.similarity import semantic_dedup
-
-    return semantic_dedup(emb, TRAINED_CENTROIDS_SF001, tau=0.35)
 
 
 def _prev_bench(repo_dir: str) -> tuple[str, dict] | None:

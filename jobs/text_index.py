@@ -2,11 +2,10 @@
 """spark-submit entry: build and query a persisted inverted text index.
 
 The stored-artifact shape of the repo's retrieval family (bm25_topk /
-phrase_search made durable, the way jobs/ann_index.py persists the
-IVF-PQ index): the scan-path operators re-tokenize the corpus per
-query, which is the right correctness baseline and the wrong query
-path at 10^12 documents — a query must read only the probed term
-buckets of a stored index.
+phrase_search made durable): the scan-path operators re-tokenize the
+corpus per query, which is the right correctness baseline and the
+wrong query path at 10^12 documents — a query must read only the
+probed term buckets of a stored index.
 
 build mode (--build):
   one corpus pass -> postings (bucket, term, doc_id, tf, positions,

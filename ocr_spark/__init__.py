@@ -8,8 +8,8 @@ repo maiphh/ocr (snapshot at /root/reference) on Apache Spark:
              validation SQL exprs, merge, lineage/resume, sinks
 - sources/   readers + deterministic doc->spans synthesizer
 - functions/ text analysis, dedup (exact/minhash/simhash/jaccard/
-             clusters), similarity search, LLM-response parsing,
-             multimodal plumbing
+             clusters), sampling, LLM-response parsing, multimodal
+             plumbing
 
 Design stance (SURVEY.md §7.0): reference semantics live in the
 kernel; Spark code stays thin and declarative so Catalyst/AQE pick

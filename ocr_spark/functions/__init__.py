@@ -1,4 +1,4 @@
-"""Training-data pipeline functions: text analysis, dedup, similarity.
+"""Training-data pipeline functions: text analysis, dedup, sampling.
 
 Every operator here comes in two lockstep forms:
 - a Spark DataFrame implementation (pure ``pyspark.sql.functions`` /

@@ -487,8 +487,7 @@ def build_text_index(
     :func:`bm25_from_index` / :func:`phrase_from_index` — the "index
     once, query many" shape. The scan-path operators re-tokenize the
     corpus per query; at 10^12 docs a query must instead read only
-    the probed term buckets of a stored artifact (the jobs/ann_index
-    precedent for text).
+    the probed term buckets of a stored artifact (jobs/text_index.py).
 
     postings = (bucket, term, doc_id, tf, ps, dl):
       - positions `ps` are 1-based in the UNFILTERED token stream

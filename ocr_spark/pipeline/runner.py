@@ -102,6 +102,15 @@ class RunConfig:
     # jobs/extract.py passes its gate flags.
     input_config: dict | None = None
 
+    def __post_init__(self):
+        # checked here, before any manifest pins the value: 0 or
+        # negative buckets would commit an empty "complete" run, and a
+        # zero group size fails only after the manifest is written
+        for name in ("n_buckets", "buckets_per_commit"):
+            value = getattr(self, name)
+            if value < 1:
+                raise ValueError(f"{name} must be >= 1, got {value}")
+
 
 def _row_checksum60():
     """Per-row 60-bit content hash over the FULL output row, rendered

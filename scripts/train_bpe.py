@@ -1,7 +1,7 @@
 """Train BPE merges on the contract corpus and bake them into
-ocr_spark/functions/bpe_merges.py (the ivf_centroids / pq_codebooks /
-classifier_weights precedent: sample-trained, committed, versioned —
-retrain when the corpus distribution shifts).
+ocr_spark/functions/bpe_merges.py (the classifier_weights precedent:
+sample-trained, committed, versioned — retrain when the corpus
+distribution shifts).
 
 Deterministic: the trainer's merge selection breaks count ties on the
 pair string ascending, so re-running regenerates the file

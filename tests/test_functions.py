@@ -8,7 +8,7 @@ import math
 import duckdb
 import pytest
 
-from ocr_spark.functions import dedup, lm, scrub, similarity, text, tfidf
+from ocr_spark.functions import dedup, lm, scrub, text, tfidf
 from ocr_spark.functions.chunking import chunk_documents, chunk_documents_sql
 from ocr_spark.functions.packing import pack_index, pack_index_sql
 
@@ -21,15 +21,9 @@ def docs(spark):
 
 
 @pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-
-@pytest.fixture(scope="module")
 def con():
     c = duckdb.connect()
     c.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
-    c.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{SF_DIR}/embeddings.parquet'")
     return c
 
 
@@ -341,108 +335,6 @@ def test_jaccard_identical_docs(spark):
     assert len(rows) == 1 and rows[0].jaccard == 1.0
 
 
-def test_cosine_topk(emb, con):
-    assert_same(similarity.cosine_topk(emb), con, similarity.cosine_topk_sql())
-
-
-def test_cosine_topk_shape(emb):
-    rows = similarity.cosine_topk(emb, n_queries=3, k=5).collect()
-    assert len(rows) == 15
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r)
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r.rank)
-        cosines = [r.cos for r in rs]
-        assert cosines == sorted(cosines, reverse=True)
-        assert all(-1.0 <= c <= 1.0 for c in cosines)
-
-
-def test_ann_lsh_topk(emb, con):
-    assert_same(similarity.ann_lsh_topk(emb), con, similarity.ann_lsh_topk_sql())
-
-
-def test_ann_recall_vs_exact(emb):
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk(emb, n_queries=5, k=10).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.ann_lsh_topk(emb, n_queries=5, k=10).collect()
-    }
-    # ANN returns a subset of in-bucket candidates; whatever it returns
-    # must be genuinely high-cosine, and bucketing must not be empty.
-    assert len(approx) > 0
-
-
-def test_ann_multiprobe_topk(emb, con):
-    assert_same(
-        similarity.ann_multiprobe_topk(emb), con, similarity.ann_multiprobe_topk_sql()
-    )
-
-
-def test_multiprobe_recall_dominates_single_probe(emb):
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk(emb, n_queries=5, k=10).collect()
-    }
-    single = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.ann_lsh_topk(emb, n_queries=5, k=10).collect()
-    }
-    multi = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.ann_multiprobe_topk(emb, n_queries=5, k=10).collect()
-    }
-    # probing Hamming-1 buckets can only widen the candidate set, so
-    # recall vs exact must not drop
-    assert len(multi & exact) >= len(single & exact)
-    assert len(multi) > 0
-
-
-def test_embedding_near_dups(emb, con):
-    assert_same(
-        similarity.embedding_near_dups(emb, tau=0.5),
-        con,
-        similarity.embedding_near_dups_sql(tau=0.5),
-    )
-
-
-def test_near_dup_band_buckets_are_bounded(spark, emb):
-    # the scale property the banding buys: no band bucket concentrates
-    # the corpus, so in-bucket pair work is ~n^2/2^bits per band, and
-    # widening planes_per_band shrinks the candidate space further
-    from pyspark.sql import functions as F
-
-    banded = emb.select(
-        F.posexplode(F.expr(similarity.band_keys_expr("embedding"))).alias(
-            "band", "key"
-        )
-    )
-    n = emb.count()
-    max_bucket = (
-        banded.groupBy("band", "key").count().agg(F.max("count")).collect()[0][0]
-    )
-    assert max_bucket < n / 2  # 256 buckets/band: nothing hoards the corpus
-
-
-def test_near_dup_banding_recall_and_candidates(spark):
-    # planted near-identical vectors must be recalled through >=1 band
-    import pandas as pd
-
-    base = [(i * 37 % 100) / 50.0 - 1.0 for i in range(similarity.DIM)]
-    near = list(base)
-    near[0] += 0.01  # tiny perturbation -> cosine ~1
-    far = [(i * 61 % 97) / 48.0 - 1.0 for i in range(similarity.DIM)]
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [1, 2, 3], "embedding": [base, near, far]})
-    )
-    pairs = {(r.vec_a, r.vec_b): r.cos for r in similarity.embedding_near_dups(df, tau=0.9).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] > 0.99
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
 def test_lsh_verified_pairs_matches_oracle(docs, con):
     assert_same(dedup.lsh_verified_pairs(docs), con, dedup.lsh_verified_pairs_sql())
 
@@ -500,30 +392,6 @@ def test_dup_clusters_plan_is_lsh_driven(spark, docs):
     plan = dedup.lsh_verified_pairs(docs)._jdf.queryExecution().optimizedPlan().toString()
     assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
     assert "LeftSemi" in plan, plan
-
-
-def test_kmeans_training_and_trained_ivf(emb):
-    # spherical Lloyd's: objective never increases round over round,
-    # and the exact-integer recenter makes training partition-invariant
-    c0 = [
-        [float(v) for v in r.embedding]
-        for r in emb.where("vec_id < 8").orderBy("vec_id").collect()
-    ]
-    import math
-
-    c0 = [[x / math.sqrt(sum(y * y for y in c)) for x in c] for c in c0]
-    i0 = similarity.kmeans_inertia(emb, c0)
-    c3 = similarity.kmeans_centroids(emb, k=8, iters=3)
-    i3 = similarity.kmeans_inertia(emb, c3)
-    assert i3 <= i0 + 1e-12
-    # determinism under repartitioning (exact integer sums)
-    c3b = similarity.kmeans_centroids(emb.repartition(7), k=8, iters=3)
-    assert c3 == c3b
-    # trained IVF probes return full result sets
-    rows = similarity.ivf_topk(emb, n_queries=3, k=5, centroids=c3).collect()
-    assert len(rows) == 15
-    for r in rows:
-        assert -1.0 <= r.cos <= 1.0
 
 
 def test_dup_clusters_transitive(spark):
@@ -646,74 +514,6 @@ def test_cc_string_ids(spark):
     }
 
 
-def test_ivf_topk(emb, con):
-    assert_same(similarity.ivf_topk(emb), con, similarity.ivf_topk_sql())
-
-
-def test_ivf_returns_cell_neighbors(emb):
-    rows = similarity.ivf_topk(emb, n_queries=3, k=5).collect()
-    assert len(rows) > 0
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r.cos)
-    for q, cosines in by_q.items():
-        assert cosines == sorted(cosines, reverse=True)
-
-
-def test_cluster_balanced_sample_caps_every_cell(emb):
-    from __spark_entry__ import _IVF_CENTS
-
-    out = similarity.cluster_balanced_sample(emb, _IVF_CENTS, cap=5)
-    sizes = {
-        r["centroid"]: r["n"]
-        for r in out.groupBy("centroid").count().withColumnRenamed("count", "n").collect()
-    }
-    full = similarity._assignments(emb, len(_IVF_CENTS), _IVF_CENTS)
-    orig = {
-        r["centroid"]: r["n"]
-        for r in full.groupBy("centroid").count().withColumnRenamed("count", "n").collect()
-    }
-    assert sizes, "no cells survived"
-    for cell, n in sizes.items():
-        assert n == min(5, orig[cell]), (cell, n, orig[cell])
-    # deterministic survivors under a different partitioning (retry/resume)
-    a = sorted(r["vec_id"] for r in out.select("vec_id").collect())
-    b = sorted(
-        r["vec_id"]
-        for r in similarity.cluster_balanced_sample(
-            emb.repartition(7), _IVF_CENTS, cap=5
-        ).select("vec_id").collect()
-    )
-    assert a == b
-
-
-def test_cluster_balanced_sample_matches_oracle(emb, con):
-    from __spark_entry__ import _IVF_CENTS
-
-    assert_same(
-        similarity.cluster_balanced_sample(emb, _IVF_CENTS, cap=7).select(
-            "vec_id", "centroid"
-        ),
-        con,
-        "SELECT vec_id, centroid FROM ("
-        + similarity.cluster_balanced_sample_sql(_IVF_CENTS, cap=7)
-        + ")",
-    )
-
-
-def test_cluster_balanced_sample_plan_shape(emb):
-    """Trained argmax assignment is scan-stage (no join anywhere), and
-    the cap truncates map-side before the one rank-window exchange."""
-    from __spark_entry__ import _IVF_CENTS
-    from ocr_spark.plans import plan_str
-
-    df = similarity.cluster_balanced_sample(emb, _IVF_CENTS, cap=5)
-    plan = plan_str(df, "simple")
-    assert "WindowGroupLimit" in plan, plan
-    assert "Join" not in plan, plan
-    assert plan.count("Exchange") == 1, plan
-
-
 def test_simhash_pairs(docs, con):
     assert_same(dedup.simhash_pairs(docs), con, dedup.simhash_pairs_sql())
 
@@ -777,49 +577,6 @@ def test_novel_docs_matches_duckdb_twin(docs, con):
     )
     oracle = sorted(map(tuple, con.execute(sql).fetchall()))
     assert got == oracle and len(got) == 100  # exactly the modified fifth
-
-
-def test_knn_graph_matches_twin(emb, con):
-    assert_same(
-        similarity.knn_graph(emb, k=5), con, similarity.knn_graph_sql(k=5)
-    )
-
-
-def test_knn_graph_semantics(emb):
-    """Directed lists: per-source ranks dense from 1, no self-edges,
-    at most k rows per source, cosine non-increasing in rank."""
-    rows = similarity.knn_graph(emb, k=4).collect()
-    per_src: dict[int, list] = {}
-    for r in rows:
-        assert r.vec_id != r.nbr_id
-        per_src.setdefault(r.vec_id, []).append(r)
-    for src, lst in per_src.items():
-        lst.sort(key=lambda r: r.rank)
-        assert [r.rank for r in lst] == list(range(1, len(lst) + 1))
-        assert len(lst) <= 4
-        for lo, hi in zip(lst, lst[1:]):
-            assert lo.cos >= hi.cos
-
-
-def test_knn_graph_planted_neighbor_recalled(spark):
-    """A planted near-identical pair must appear as each other's #1
-    neighbor (identical signs in every band -> candidate in all)."""
-    import pandas as pd
-
-    base = [(i * 31 % 97) / 48.0 - 1.0 for i in range(similarity.DIM)]
-    near = list(base)
-    near[0] += 0.001
-    far = [((i * 53 + 7) % 89) / 44.0 - 1.0 for i in range(similarity.DIM)]
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"vec_id": [1, 2, 3], "embedding": [base, near, far]}
-        )
-    )
-    got = {
-        (r.vec_id, r.rank): r.nbr_id
-        for r in similarity.knn_graph(df, k=2).collect()
-    }
-    assert got.get((1, 1)) == 2 and got.get((2, 1)) == 1
 
 
 def test_winnow_fingerprints_matches_twin(docs, con):
@@ -972,44 +729,6 @@ def test_lsh_recall_eval_cross_engine(spark, docs, con):
     assert_same(
         dedup.lsh_recall_eval(docs), con, dedup.lsh_recall_eval_sql()
     )
-
-
-# ---------------------------------------------------------------------------
-# ann_recall_eval
-# ---------------------------------------------------------------------------
-
-
-def test_ann_recall_eval_matches_oracle(emb, con):
-    assert_same(
-        similarity.ann_recall_eval(emb), con, similarity.ann_recall_eval_sql()
-    )
-
-
-def test_ann_recall_eval_invariants_and_multiprobe_repair(emb):
-    """recall arithmetic holds per query, and multiprobe recall
-    dominates single-bucket recall (probing MORE buckets can only add
-    candidates — the repair the operator exists to quantify)."""
-    mp = {
-        r["query_id"]: r
-        for r in similarity.ann_recall_eval(emb, method="multiprobe").collect()
-    }
-    single = {
-        r["query_id"]: r
-        for r in similarity.ann_recall_eval(emb, method="lsh").collect()
-    }
-    assert set(mp) == set(single) == {0, 1, 2, 3, 4}
-    for qid, r in mp.items():
-        assert r["n_truth"] == 10
-        assert 0 <= r["n_hit"] <= min(r["n_truth"], r["n_approx"])
-        assert r["recall_ppm"] == (r["n_hit"] * 1000000) // r["n_truth"]
-        assert r["recall_ppm"] >= single[qid]["recall_ppm"]
-
-
-def test_ann_recall_eval_rejects_unknown_method(emb):
-    with pytest.raises(ValueError):
-        similarity.ann_recall_eval(emb, method="ivf")
-    with pytest.raises(ValueError):
-        similarity.ann_recall_eval_sql(method="ivf")
 
 
 # ---------------------------------------------------------------------------
@@ -1182,49 +901,8 @@ def test_containment_pairs_exact_dups_score_one(spark):
 
 
 # ---------------------------------------------------------------------------
-# ivf_cell_stats
+# cluster_representatives_sql
 # ---------------------------------------------------------------------------
-
-
-def test_ivf_cell_stats_matches_oracle(emb, con):
-    from ocr_spark.functions.ivf_centroids import TRAINED_CENTROIDS_SF001
-
-    assert_same(
-        similarity.ivf_cell_stats(emb, centroids=TRAINED_CENTROIDS_SF001),
-        con,
-        similarity.ivf_cell_stats_sql(TRAINED_CENTROIDS_SF001),
-    )
-
-
-def test_ivf_cell_stats_invariants(emb):
-    from ocr_spark.functions.ivf_centroids import TRAINED_CENTROIDS_SF001
-
-    total = emb.count()
-    rows = similarity.ivf_cell_stats(
-        emb, centroids=TRAINED_CENTROIDS_SF001
-    ).collect()
-    assert sum(r.n_vecs for r in rows) == total  # every vector in a cell
-    for r in rows:
-        # min <= mean in micro-units; cosine bounded
-        assert r.min_cos6 * r.n_vecs <= r.sum_cos6
-        assert -1_000_000 <= r.min_cos6 <= 1_000_000
-
-
-def test_ivf_cell_stats_untrained_path_counts(emb):
-    rows = similarity.ivf_cell_stats(emb).collect()
-    assert sum(r.n_vecs for r in rows) == emb.count()
-    assert len(rows) <= 16
-
-
-def test_ivf_cell_stats_plan_trained_is_scan_stage_argmax(emb):
-    from ocr_spark.functions.ivf_centroids import TRAINED_CENTROIDS_SF001
-    from ocr_spark.plans import plan_str as _plan2
-
-    p = _plan2(
-        similarity.ivf_cell_stats(emb, centroids=TRAINED_CENTROIDS_SF001),
-        "simple",
-    )
-    assert "Join" not in p  # argmax assignment, no centroid join
 
 
 def test_cluster_representatives_sql_string_ids(spark, con):

@@ -1,7 +1,6 @@
 """Training-data operators: vocabulary heavy hitters (text.vocab_topk),
-quality-weighted deterministic sampling (sampling.weighted_sample),
-embedding duplicate clusters and BPE pair counts
-(text.bpe_pair_counts). Each checked for semantics,
+quality-weighted deterministic sampling (sampling.weighted_sample)
+and BPE pair counts (text.bpe_pair_counts). Each checked for semantics,
 execution-stability, and cross-engine twin equality."""
 
 from __future__ import annotations
@@ -107,51 +106,6 @@ def test_weighted_sample_matches_duckdb_twin(docs, con):
 def test_weighted_sample_plan_is_scan_stage(docs):
     p = _plan(weighted_sample(docs, _w()), "simple")
     assert "Exchange" not in p  # pure codegen filter, zero shuffle
-
-
-# ---------------------------------------------------------------------------
-# embedding_dup_clusters (semantic-dedup composition)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-
-@pytest.fixture(scope="module")
-def con_emb():
-    c = duckdb.connect()
-    c.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF_DIR}/embeddings.parquet'"
-    )
-    return c
-
-
-def test_embedding_dup_clusters_matches_duckdb_twin(emb, con_emb):
-    from ocr_spark.functions import similarity as sim
-
-    got = sorted(
-        map(tuple, sim.embedding_dup_clusters(emb, tau=0.35).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            con_emb.execute(sim.embedding_dup_clusters_sql(tau=0.35)).fetchall(),
-        )
-    )
-    assert got == want and len(got) > 0
-
-
-def test_embedding_dup_clusters_rep_is_min_member(emb):
-    from ocr_spark.functions import similarity as sim
-
-    rows = sim.embedding_dup_clusters(emb, tau=0.35).collect()
-    by_rep = {}
-    for r in rows:
-        by_rep.setdefault(r["cluster_rep"], []).append(r["vec_id"])
-    for rep, members in by_rep.items():
-        assert rep == min(members)  # label = component minimum, rep in members
 
 
 def test_vocab_topk_plan_shape(docs):

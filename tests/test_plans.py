@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.functions.dedup import lsh_verified_pairs, simhash
-from ocr_spark.functions.similarity import embedding_near_dups
 from ocr_spark.functions.text import quality_score
 from ocr_spark.pipeline.extract import extract_main_content
 from ocr_spark.sources.synth import synthesize_spans
@@ -80,33 +79,10 @@ def test_lsh_verified_pairs_aggregates_partially(docs):
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan, plan
 
 
-def test_embedding_near_dups_joins_on_band_key(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(embedding_near_dups(emb))
-    # candidate generation is an equi-join keyed on (band, key) —
-    # never an all-pairs product
-    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan, plan
-    assert "band" in plan and "key" in plan, plan
-
-
 def test_whole_stage_codegen_covers_scalar_path(docs):
     plan = _plan(quality_score(docs))
     assert "codegen id" in plan, plan  # codegen'd stages present
     assert "Exchange" not in plan, plan  # pure per-row exprs: no shuffle
-
-
-def test_trained_ivf_assignment_is_scan_stage(spark):
-    """The trained-centroid cell assignment must be a pure scan-stage
-    argmax expression — no join anywhere in the assignment subtree
-    (the untrained stand-in uses a broadcast join; the trained path,
-    the one a production IVF index runs, must not)."""
-    from ocr_spark.functions.ivf_centroids import TRAINED_CENTROIDS_SF001
-    from ocr_spark.functions.similarity import _assignments
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(_assignments(emb, 16, TRAINED_CENTROIDS_SF001))
-    assert "Join" not in plan, plan
-    assert "Exchange" not in plan, plan
 
 
 def test_dedup_against_index_is_equi_join(docs):

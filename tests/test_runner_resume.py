@@ -142,6 +142,19 @@ def test_empty_commit_groups_do_not_crash(spark, docs, tmp_path):
     assert run.output().select("doc_id").distinct().count() == 3
 
 
+def test_run_config_rejects_bucket_counts_below_one(spark, docs, tmp_path):
+    """Bucket counts below 1 are refused when the config is built:
+    such a run would process no bucket yet report itself complete, or
+    crash after its manifest pinned the bad value."""
+    for i, kw in enumerate(
+        [{"n_buckets": 0}, {"n_buckets": -2}, {"buckets_per_commit": 0}]
+    ):
+        out = tmp_path / f"out{i}"
+        with pytest.raises(ValueError, match="must be >= 1"):
+            ExtractionRun(spark, docs, str(out), RunConfig(f"bad{i}", **kw)).run()
+        assert not (out / "_lineage").exists()
+
+
 def test_abort_then_resume_equals_single_shot(spark, docs, tmp_path):
     """T6: an aborted run is resumable; output identical to one-shot."""
     ref = ExtractionRun(spark, docs, str(tmp_path / "ref"), RunConfig("aref", n_buckets=8))
