@@ -164,7 +164,10 @@ def _span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed corpus + a stored expected table, regenerated only on
 # intentional semantics changes (scripts/make_golden_extract.py)
 _GOLDEN_SF_DIR = "/root/testdata/sf0.001"
-_GOLDEN_EXTRACT = "/root/repo/tests/fixtures/golden_extract_sf0001.parquet"
+_GOLDEN_EXTRACT = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)),
+    "tests", "fixtures", "golden_extract_sf0001.parquet",
+)
 
 
 def _string_id_docs(docs: DataFrame) -> DataFrame:

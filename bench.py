@@ -651,6 +651,26 @@ def run_data_scaling(levels=(2, 4, 8, 16), trials: int = 2) -> None:
     spark.stop()
 
 
+def _curated_checksum(out_dir: str) -> str:
+    """Order-insensitive (doc_id, text) content checksum of a written
+    curated table, per source, computed by DuckDB over the parquet
+    files (audit.table_checksum_sql)."""
+    import duckdb
+
+    from ocr_spark.functions.audit import table_checksum_sql
+
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE VIEW curated AS SELECT * FROM "
+            f"read_parquet('{out_dir}/**/*.parquet', hive_partitioning = true)"
+        )
+        rows = con.execute(
+            table_checksum_sql("curated", cols=("doc_id", "text"))
+            + " ORDER BY source"
+        ).fetchall()
+    return json.dumps(rows)
+
+
 def run_curate_soak(levels=(8, 32), copies: int = 16) -> None:
     """Composed-pipeline soak: jobs/curate.py END TO END (extract ->
     NFC/line-dedup/PII scrub -> novelty anti-join -> Gopher + quality/
@@ -750,6 +770,7 @@ def run_curate_soak(levels=(8, 32), copies: int = 16) -> None:
                 "stage_secs": summary["stage_secs"],
                 "n_curated": summary["n_curated"],
                 "n_packs": summary["n_packs"],
+                "checksum": _curated_checksum(out_dir),
             }
             shutil.rmtree(out_dir, ignore_errors=True)
     finally:
@@ -782,11 +803,11 @@ def run_curate_soak(levels=(8, 32), copies: int = 16) -> None:
                 "sf": _sf_label(SF_DIR),
                 "copies": copies,
                 "levels": {str(k): v for k, v in results.items()},
-                # compares kept-doc COUNTS only: equal counts across
-                # parallelism levels, not a check that the same docs
-                # were kept
+                # equal order-insensitive (doc_id, text) checksums
+                # across parallelism levels: the same docs were kept,
+                # with the same text
                 "deterministic_across_levels": len(
-                    {v["n_curated"] for v in results.values()}
+                    {v["checksum"] for v in results.values()}
                 ) == 1,
                 "hw_ceiling": round(hw / ratio, 3),
                 "eff_vs_hw": round(eff / (hw / ratio), 3) if hw else None,

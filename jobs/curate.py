@@ -2,10 +2,15 @@
 """spark-submit entry: the COMPLETE training-data curation pipeline,
 end to end — the composition a 100 TB corpus actually runs:
 
-0.5 structure — optional (--interleave-gate): drop image-farm /
-               gallery-run / prose-free documents on the NESTED span
-               table (scan-stage array folds, zero shuffle) before
-               the kernel ever runs;
+0.5 shape    — optional, on the NESTED span table before the kernel
+               ever runs, in this order: --integrity-gate quarantines
+               documents that break the span-table contract (full
+               rows written aside for re-parse); --interleave-gate
+               drops image-farm / gallery-run / prose-free documents
+               (scan-stage array folds, zero shuffle); --template-cap
+               bounds each structural template to K members;
+               --media-dedup-tau drops gallery re-posts, one
+               representative kept;
 1. extract   — interleaved span table -> boilerplate-stripped main
                content (single-pass Arrow kernel, per-doc metrics);
 1.2 freqstrip — optional (--strip-boilerplate N): remove text spans
@@ -75,7 +80,15 @@ end to end — the composition a 100 TB corpus actually runs:
                shard) and `<output>_pack_index` (the concat-then-cut
                sample index: which chunk segments compose each
                L-token training sequence), both partitioned by shard
-               so a loader's per-shard read is partition-pruned.
+               so a loader's per-shard read is partition-pruned;
+9.7 sidecars — optional span-table sidecars computed from the
+               stage-0.5 table (span-scrubbed under --pii-scrub):
+               --emit-structure (captions, section paths, media
+               context, template census, media re-post pairs, table
+               shapes), --emit-rendered (tokenizer-ready strings) and
+               --emit-chunks (multimodal training windows, optionally
+               slot-packed with --pack-slots and audited with
+               --verify-chunks).
 
 Every stage is an already-oracle-checked operator; this job is the
 glue. Scale shape: one kernel pass, scan-stage filters, candidate-
@@ -92,6 +105,113 @@ from __future__ import annotations
 
 import argparse
 import json
+
+
+def _write_span_sidecars(spark, args, docs, summary: dict) -> int:
+    """Stage 9.7: write the --emit-* sidecars of the span table
+    ``docs`` and add their counts to ``summary``. Returns the number
+    of documents the --verify-chunks audit found unaccounted for (0
+    when the audit is off)."""
+    if args.emit_structure:
+        from ocr_spark.functions.interleave import (
+            caption_pairs,
+            section_paths,
+            template_stats,
+        )
+        from ocr_spark.functions.media import media_context, media_jaccard_pairs
+        from ocr_spark.functions.tables import table_shapes
+
+        for name, df in (
+            ("caption_pairs", caption_pairs(docs)),
+            ("section_paths", section_paths(docs)),
+            ("media_context", media_context(docs)),
+            # corpus template census (content-blind structural
+            # fingerprints) + gallery re-post pairs: the two
+            # dedup-adjacent signals only the span table carries
+            ("templates", template_stats(docs)),
+            ("media_pairs", media_jaccard_pairs(docs)),
+            # per-table shape census over the kernel's OTSL cell
+            # spans (empty when the corpus carries no tables)
+            ("tables", table_shapes(docs)),
+        ):
+            out = f"{args.emit_structure}/{name}"
+            df.write.mode("overwrite").parquet(out)
+            summary[f"n_{name}"] = spark.read.parquet(out).count()
+    if args.emit_rendered:
+        from ocr_spark.functions.interleave import render_interleaved
+
+        out = f"{args.emit_rendered}/rendered"
+        render_interleaved(docs).write.mode("overwrite").parquet(out)
+        summary["n_rendered_docs"] = spark.read.parquet(out).count()
+    if not args.emit_chunks:
+        return 0
+    from ocr_spark.functions.interleave import MEDIA_TOKEN_COST, chunk_interleaved
+
+    media_cost = (
+        MEDIA_TOKEN_COST if args.media_token_cost is None else args.media_token_cost
+    )
+    cost_fn = None
+    if args.chunk_cost == "bpe":
+        from ocr_spark.functions.bpe import bpe_token_count_expr
+        from ocr_spark.functions.bpe_merges import MERGES
+
+        def cost_fn(col):
+            return (
+                f"coalesce({bpe_token_count_expr(MERGES, col)}, "
+                "CAST(0 AS BIGINT))"
+            )
+
+    out = f"{args.emit_chunks}/chunks"
+    chunk_interleaved(
+        docs,
+        max_tokens=args.chunk_tokens,
+        media_token_cost=media_cost,
+        text_cost=cost_fn,
+    ).write.mode("overwrite").parquet(out)
+    # sidecar metadata: without a record of the cost model the sidecar
+    # was cut under, a later audit with the wrong cost is
+    # indistinguishable from corruption (the bloom (m_bits, k)
+    # metadata precedent)
+    with open(f"{args.emit_chunks}/chunks_meta.json", "w") as fh:
+        json.dump(
+            {
+                "chunk_cost": args.chunk_cost,
+                "chunk_tokens": args.chunk_tokens,
+                "media_token_cost": media_cost,
+            },
+            fh,
+        )
+    summary["chunk_cost"] = args.chunk_cost
+    summary["n_span_chunks"] = spark.read.parquet(out).count()
+    if args.pack_slots:
+        from ocr_spark.functions.packing import pack_interleaved
+
+        # pack the WRITTEN chunk table (one chunking execution)
+        packs_out = f"{args.emit_chunks}/packs"
+        pack_interleaved(
+            spark.read.parquet(out), slots=args.pack_slots
+        ).write.mode("overwrite").parquet(packs_out)
+        summary["n_pack_rows"] = spark.read.parquet(packs_out).count()
+    if not args.verify_chunks:
+        return 0
+    from ocr_spark.functions.interleave import chunk_integrity
+
+    # audit the WRITTEN sidecar (not the in-memory frame): this is the
+    # read path training will use, so it also covers parquet
+    # round-trip corruption
+    bad_docs = (
+        chunk_integrity(
+            docs,
+            max_tokens=args.chunk_tokens,
+            media_token_cost=media_cost,
+            chunks=spark.read.parquet(out),
+            text_cost=cost_fn,
+        )
+        .where("NOT ok")
+        .count()
+    )
+    summary["chunk_integrity_bad_docs"] = bad_docs
+    return bad_docs
 
 
 def main() -> None:
@@ -137,7 +257,8 @@ def main() -> None:
         "--pii-scrub",
         action="store_true",
         help="redact emails/IPv4s/phones (staged, <EMAIL>/<IP>/<PHONE> "
-        "tokens) before any content-hash stage",
+        "tokens) before any content-hash stage; the span table the "
+        "--emit-* sidecars read is redacted per text span too",
     )
     ap.add_argument(
         "--line-dedup",
@@ -222,10 +343,131 @@ def main() -> None:
         "shard (global distributed prefix sum); 0 = off",
     )
     ap.add_argument(
+        "--integrity-gate",
+        default=None,
+        metavar="DIR",
+        help="audit the span-table input contract (span_integrity: "
+        "distinct non-NULL offsets, media/text shape, kinds) before "
+        "extraction; violating documents are quarantined to DIR — full "
+        "original rows, for re-parse — and excluded from the run. The "
+        "violator id set is tiny by construction, so both the "
+        "quarantine semi-join and the exclusion anti-join broadcast "
+        "under AQE. NULL-doc_id rows never match either join and stay "
+        "in the run, where the kernels already turn them into error "
+        "rows (the NULL-id contract)",
+    )
+    ap.add_argument(
         "--interleave-gate",
         action="store_true",
         help="drop image-farm/gallery/prose-free docs on the nested "
         "span table before extraction (zero-shuffle structural gate)",
+    )
+    ap.add_argument(
+        "--template-cap",
+        type=int,
+        default=None,
+        metavar="K",
+        help="cap each structural template to K deterministic members "
+        "before extraction (template_sample — template-farm mass "
+        "bounded without deleting the template; keep-set decided on "
+        "the tiny fingerprint projection, applied as a left-semi "
+        "join). Costs up to two accounting count() scans",
+    )
+    ap.add_argument(
+        "--media-dedup-tau",
+        type=float,
+        default=None,
+        metavar="TAU",
+        help="drop non-representative members of media-set duplicate "
+        "clusters (media_dup_clusters at this Jaccard threshold — "
+        "gallery re-posts keep one copy). The drop set is "
+        "materialized once (localCheckpoint) and anti-joined; "
+        "normalize refs with --media-key",
+    )
+    ap.add_argument(
+        "--media-key",
+        default="media_ref",
+        metavar="SQL",
+        help="SQL expression normalizing media_ref to an asset key "
+        "for --media-dedup-tau (e.g. strip CDN prefixes/size "
+        "suffixes); default: the raw ref",
+    )
+    ap.add_argument(
+        "--emit-structure",
+        default=None,
+        metavar="DIR",
+        help="also write document-structure sidecars derived from the "
+        "shaped span table: DIR/caption_pairs (media<->caption "
+        "attachment), DIR/section_paths (heading-context breadcrumbs), "
+        "DIR/media_context (nearest-prose window per media span), "
+        "DIR/templates (corpus census of content-blind structural "
+        "fingerprints — template-farm detection), DIR/media_pairs "
+        "(gallery re-posts: exact Jaccard over distinct media-asset "
+        "sets) and DIR/tables (per-table shape census). The first "
+        "three are zero-shuffle scan-stage operators; templates adds "
+        "one grouped pass, media_pairs a df-capped key equi-join",
+    )
+    ap.add_argument(
+        "--emit-rendered",
+        default=None,
+        metavar="DIR",
+        help="also write DIR/rendered: each document's ordered span "
+        "sequence materialized into the tokenizer-ready string "
+        "(render_interleaved — media spans become the placeholder "
+        "token). Zero shuffle, one scan-stage pass",
+    )
+    ap.add_argument(
+        "--emit-chunks",
+        default=None,
+        metavar="DIR",
+        help="also write DIR/chunks: the shaped span table cut into "
+        "multimodal training windows (chunk_interleaved — spans "
+        "atomic, media at a fixed token cost, budget-aligned "
+        "boundaries). One extra pruned pass: explode + one doc_id "
+        "window shuffle",
+    )
+    ap.add_argument(
+        "--chunk-tokens",
+        type=int,
+        default=2048,
+        help="training-window token budget for --emit-chunks",
+    )
+    ap.add_argument(
+        "--media-token-cost",
+        type=int,
+        default=None,
+        help="per-media-span token cost for --emit-chunks (default: "
+        "the library-wide interleave.MEDIA_TOKEN_COST)",
+    )
+    ap.add_argument(
+        "--pack-slots",
+        type=int,
+        default=None,
+        metavar="K",
+        help="with --emit-chunks: also write DIR/packs, the chunks "
+        "slot-packed K whole chunks per training sequence "
+        "(pack_interleaved — media-atomic, seq_len = K * "
+        "--chunk-tokens; overflow chunks isolated one-per-pack)",
+    )
+    ap.add_argument(
+        "--chunk-cost",
+        choices=("ws", "bpe"),
+        default="ws",
+        help="text-span cost model for --emit-chunks/--verify-chunks: "
+        "'ws' = whitespace tokens (the library default), 'bpe' = the "
+        "trained tokenizer's count (bpe_merges.py) — what a training "
+        "budget actually measures; same chunker skeleton, swapped "
+        "scan-stage cost expression",
+    )
+    ap.add_argument(
+        "--verify-chunks",
+        action="store_true",
+        help="with --emit-chunks: after the chunk sidecar is written, "
+        "re-read it and audit span/media/token conservation per "
+        "document against the shaped span table (chunk_integrity). "
+        "Fails the job if any document is unaccounted for, catching "
+        "corruption between chunking and commit. Runs after packing "
+        "and fails only after the summary line is printed",
     )
     def _strip_n(v: str) -> int:
         n = int(v)
@@ -309,6 +551,17 @@ def main() -> None:
             # compare — still a usage error, not a traceback
             ap.error(str(exc))
 
+    # sidecar knobs fail at parse time, not after the whole funnel ran
+    if args.pack_slots is not None:
+        if not args.emit_chunks:
+            ap.error("--pack-slots requires --emit-chunks")
+        if args.pack_slots < 1:
+            ap.error("--pack-slots must be >= 1")
+    if args.verify_chunks and not args.emit_chunks:
+        ap.error("--verify-chunks requires --emit-chunks")
+    if args.chunk_cost != "ws" and not args.emit_chunks:
+        ap.error("--chunk-cost requires --emit-chunks")
+
     # packing knobs fail at parse time, not after the whole funnel ran
     if args.pack_seq_len < 0:
         ap.error("--pack-seq-len must be >= 0")
@@ -378,9 +631,33 @@ def main() -> None:
     if args.synthesize:
         docs = synthesize_spans(docs)
 
-    # 0.5 structural gate on the NESTED table — before the kernel, so
-    # image farms and gallery runs never pay for extraction. The two
-    # counts cost one extra scan each, only when the gate is on.
+    # 0.5 input shaping on the NESTED table — before the kernel, so
+    # quarantined, gated, capped and re-posted documents never pay for
+    # extraction. Each stage's drop count is its output count taken
+    # from the previous count; the counts cost one scan each, only
+    # when their stage is on. `extra` holds the summary keys of the
+    # stages that exist only as options (absent when they are off).
+    extra: dict = {}
+    if args.integrity_gate:
+        from ocr_spark.functions.interleave import span_integrity
+
+        # violator set is tiny: materialize it ONCE (localCheckpoint)
+        # so the audit folds don't re-execute in each of the two joins
+        bad_ids = (
+            span_integrity(docs)
+            .where(~F.col("ok"))
+            .select("doc_id")
+            .localCheckpoint()
+        )
+        docs.join(bad_ids, "doc_id", "left_semi").write.mode(
+            "overwrite"
+        ).parquet(args.integrity_gate)
+        # read-back count: the write above is the one audit execution;
+        # counting the source df again would re-run the folds
+        extra["n_quarantined"] = spark.read.parquet(args.integrity_gate).count()
+        if extra["n_quarantined"]:
+            docs = docs.join(bad_ids, "doc_id", "left_anti")
+    # n_input counts the documents entering the structural gate
     n_input = n_structural = None
     if args.interleave_gate:
         from ocr_spark.functions.interleave import interleave_gate
@@ -388,6 +665,29 @@ def main() -> None:
         n_input = docs.count()
         docs = interleave_gate(docs)
         n_structural = docs.count()
+    if args.template_cap is not None:
+        from ocr_spark.functions.interleave import template_sample
+
+        n_pre = n_structural if n_structural is not None else docs.count()
+        docs = template_sample(docs, max_per_template=args.template_cap)
+        extra["n_template_dropped"] = n_pre - docs.count()
+    if args.media_dedup_tau is not None:
+        from ocr_spark.functions.media import media_dup_clusters
+
+        # the drop set (cluster members minus the rep) is tiny by
+        # construction: materialize ONCE so the LSH/pair pipeline
+        # does not re-run in the anti-join
+        non_reps = (
+            media_dup_clusters(
+                docs, tau=args.media_dedup_tau, key_sql=args.media_key
+            )
+            .where(F.col("doc_id") != F.col("cluster_rep"))
+            .select("doc_id")
+            .localCheckpoint()
+        )
+        extra["n_media_dup_dropped"] = non_reps.count()
+        if extra["n_media_dup_dropped"]:
+            docs = docs.join(non_reps, "doc_id", "left_anti")
 
     # 1. extract: stripped span stream -> one text per doc (order-safe:
     # spans are emitted in reading order by the kernel, and the
@@ -745,6 +1045,19 @@ def main() -> None:
         n_mix = spark.read.parquet(args.output.rstrip("/") + "_mix").count()
         _tick("mixture")
 
+    # 9.7 span-table sidecars over the stage-0.5 table; under
+    # --pii-scrub they read it redacted per text span, so nothing this
+    # job writes carries unredacted PII (the kernel input stays as is)
+    chunks_bad = 0
+    if args.emit_structure or args.emit_rendered or args.emit_chunks:
+        span_table = docs
+        if args.pii_scrub:
+            from ocr_spark.functions.scrub import scrub_spans
+
+            span_table = scrub_spans(docs)
+        chunks_bad = _write_span_sidecars(spark, args, span_table, extra)
+        _tick("sidecars")
+
     print(
         json.dumps(
             {
@@ -794,9 +1107,15 @@ def main() -> None:
                 "n_packs": n_packs,
                 "n_mix_rows": n_mix,
                 "stage_secs": stage_secs,
+                **extra,
             }
         )
     )
+    # the chunk audit fails only after the full accounting is printed
+    if chunks_bad:
+        raise SystemExit(
+            f"chunk integrity audit FAILED for {chunks_bad} document(s)"
+        )
     for df in (corpus, gated, survivors, curated_base):
         df.unpersist()
     spark.stop()

@@ -7,6 +7,11 @@ Reads an interleaved span table (or a flat documents table with
 writes partitioned parquet + per-bucket lineage. Re-invoking with the
 same --run-id resumes: only uncommitted buckets are processed.
 
+This job extracts and nothing else. Shaping the span table before
+extraction (integrity quarantine, structural gate, template cap,
+media dedup, PII scrub) and the span-table sidecars (structure,
+rendered text, multimodal chunks and packs) live in jobs/curate.py.
+
 Example:
   spark-submit --driver-memory 16g --py-files dist/ocr_spark.zip \\
     jobs/extract.py --input /data/documents.parquet --synthesize \\
@@ -54,21 +59,6 @@ def main() -> None:
         "without it; total I/O 2x the corpus with it)",
     )
     ap.add_argument(
-        "--emit-structure",
-        default=None,
-        metavar="DIR",
-        help="also write document-structure sidecars derived from the "
-        "input span table: DIR/caption_pairs (media<->caption "
-        "attachment), DIR/section_paths (heading-context breadcrumbs), "
-        "DIR/media_context (nearest-prose window per media span), "
-        "DIR/templates (corpus census of content-blind structural "
-        "fingerprints — template-farm detection) and DIR/media_pairs "
-        "(gallery re-posts: exact Jaccard over distinct media-asset "
-        "sets). The first three are zero-shuffle scan-stage "
-        "operators; templates adds one grouped pass, media_pairs a "
-        "df-capped key equi-join",
-    )
-    ap.add_argument(
         "--lineage-checksums",
         action="store_true",
         help="record an order-insensitive content checksum per bucket "
@@ -78,144 +68,8 @@ def main() -> None:
         "each group's freshly-written output plus one audit scan, no "
         "extra shuffle",
     )
-    ap.add_argument(
-        "--interleave-gate",
-        action="store_true",
-        help="drop documents failing the structural interleave gate "
-        "(image farms, gallery runs, prose-free docs — "
-        "interleave_gate defaults) BEFORE extraction. Zero shuffle: "
-        "one scan-stage predicate on the spans array; the count of "
-        "dropped docs lands in the summary",
-    )
-    ap.add_argument(
-        "--emit-rendered",
-        default=None,
-        metavar="DIR",
-        help="also write DIR/rendered: each document's ordered span "
-        "sequence materialized into the tokenizer-ready string "
-        "(render_interleaved — media spans become the placeholder "
-        "token). Zero shuffle, one scan-stage pass",
-    )
-    ap.add_argument(
-        "--emit-chunks",
-        default=None,
-        metavar="DIR",
-        help="also write DIR/chunks: the input span table cut into "
-        "multimodal training windows (chunk_interleaved — spans "
-        "atomic, media at a fixed token cost, budget-aligned "
-        "boundaries). One extra pruned pass: explode + one doc_id "
-        "window shuffle",
-    )
-    ap.add_argument(
-        "--chunk-tokens",
-        type=int,
-        default=2048,
-        help="training-window token budget for --emit-chunks",
-    )
-    ap.add_argument(
-        "--media-token-cost",
-        type=int,
-        default=None,
-        help="per-media-span token cost for --emit-chunks (default: "
-        "the library-wide interleave.MEDIA_TOKEN_COST)",
-    )
-    ap.add_argument(
-        "--pack-slots",
-        type=int,
-        default=None,
-        metavar="K",
-        help="with --emit-chunks: also write DIR/packs, the chunks "
-        "slot-packed K whole chunks per training sequence "
-        "(pack_interleaved — media-atomic, seq_len = K * "
-        "--chunk-tokens; overflow chunks isolated one-per-pack)",
-    )
-    ap.add_argument(
-        "--chunk-cost",
-        choices=("ws", "bpe"),
-        default="ws",
-        help="text-span cost model for --emit-chunks/--verify-chunks: "
-        "'ws' = whitespace tokens (the library default), 'bpe' = the "
-        "trained tokenizer's count (bpe_merges.py) — what a training "
-        "budget actually measures; same chunker skeleton, swapped "
-        "scan-stage cost expression",
-    )
-    ap.add_argument(
-        "--verify-chunks",
-        action="store_true",
-        help="with --emit-chunks: after the chunk sidecar is written, "
-        "re-read it and audit span/media/token conservation per "
-        "document against the input span table (chunk_integrity). "
-        "Fails the job if any document is unaccounted for — the chunk "
-        "analog of --lineage-checksums, catching corruption between "
-        "chunking and commit. Runs after packing so a failure still "
-        "reports the full sidecar accounting",
-    )
-    ap.add_argument(
-        "--integrity-gate",
-        default=None,
-        metavar="DIR",
-        help="audit the span-table input contract (span_integrity: "
-        "distinct non-NULL offsets, media/text shape, kinds) before "
-        "extraction; violating documents are quarantined to DIR — full "
-        "original rows, for re-parse — and excluded from the run. The "
-        "violator id set is tiny by construction, so both the "
-        "quarantine semi-join and the exclusion anti-join broadcast "
-        "under AQE. NULL-doc_id rows never match either join and stay "
-        "in the run, where the kernels already turn them into error "
-        "rows (the NULL-id contract)",
-    )
-    ap.add_argument(
-        "--template-cap",
-        type=int,
-        default=None,
-        metavar="K",
-        help="cap each structural template to K deterministic members "
-        "before extraction (template_sample — template-farm mass "
-        "bounded without deleting the template; keep-set decided on "
-        "the tiny fingerprint projection, applied as a left-semi "
-        "join). Costs two accounting count() scans",
-    )
-    ap.add_argument(
-        "--media-dedup-tau",
-        type=float,
-        default=None,
-        metavar="TAU",
-        help="drop non-representative members of media-set duplicate "
-        "clusters (media_dup_clusters at this Jaccard threshold — "
-        "gallery re-posts keep one copy). The drop set is "
-        "materialized once (localCheckpoint) and anti-joined; "
-        "normalize refs with --media-key",
-    )
-    ap.add_argument(
-        "--media-key",
-        default="media_ref",
-        metavar="SQL",
-        help="SQL expression normalizing media_ref to an asset key "
-        "for --media-dedup-tau (e.g. strip CDN prefixes/size "
-        "suffixes); default: the raw ref",
-    )
-    ap.add_argument(
-        "--scrub-pii",
-        action="store_true",
-        help="redact PII in every text span before extraction "
-        "(scrub_spans: emails, IPv4, Luhn-validated cards, phones — "
-        "the staged pii_scrub sequence per span; media spans and "
-        "structure untouched). Zero shuffle, fused into the run's "
-        "scan",
-    )
     ap.add_argument("--master", default=None, help="override master URL")
     args = ap.parse_args()
-    # argument cross-checks up front — a flag misuse must fail before
-    # the (potentially hours-long) extraction run, not after it
-    if args.pack_slots is not None:
-        if not args.emit_chunks:
-            ap.error("--pack-slots requires --emit-chunks")
-        if args.pack_slots < 1:
-            ap.error("--pack-slots must be >= 1")
-    if args.verify_chunks and not args.emit_chunks:
-        ap.error("--verify-chunks requires --emit-chunks")
-    if args.chunk_cost != "ws" and not args.emit_chunks:
-        ap.error("--chunk-cost requires --emit-chunks")
 
     from ocr_spark.pipeline.runner import ExtractionRun, RunConfig
     from ocr_spark.pipeline.session import get_spark
@@ -225,69 +79,6 @@ def main() -> None:
     docs = spark.read.parquet(args.input)
     if args.synthesize:
         docs = synthesize_spans(docs)
-    n_quarantined = 0
-    if args.integrity_gate:
-        from pyspark.sql import functions as F
-
-        from ocr_spark.functions.interleave import span_integrity
-
-        # violator set is tiny: materialize it ONCE (localCheckpoint)
-        # so the audit folds don't re-execute in each of the two joins
-        bad_ids = (
-            span_integrity(docs)
-            .where(~F.col("ok"))
-            .select("doc_id")
-            .localCheckpoint()
-        )
-        docs.join(bad_ids, "doc_id", "left_semi").write.mode(
-            "overwrite"
-        ).parquet(args.integrity_gate)
-        # read-back count: the write above is the one audit execution;
-        # counting the source df again would re-run the folds
-        n_quarantined = spark.read.parquet(args.integrity_gate).count()
-        if n_quarantined:
-            docs = docs.join(bad_ids, "doc_id", "left_anti")
-    n_pre_gate = None
-    if args.interleave_gate:
-        from ocr_spark.functions.interleave import interleave_gate
-
-        # one doc_id-count scan for the drop accounting; the gate
-        # itself is a scan-stage predicate fused into the run's read
-        n_pre_gate = docs.count()
-        docs = interleave_gate(docs)
-    n_template_dropped = None
-    n_post_gate = None
-    if args.template_cap is not None:
-        from ocr_spark.functions.interleave import template_sample
-
-        n_post_gate = docs.count()
-        docs = template_sample(docs, max_per_template=args.template_cap)
-        n_template_dropped = n_post_gate - docs.count()
-    n_media_dup_dropped = None
-    if args.media_dedup_tau is not None:
-        from pyspark.sql import functions as F
-
-        from ocr_spark.functions.media import media_dup_clusters
-
-        # the drop set (cluster members minus the rep) is tiny by
-        # construction: materialize ONCE so the LSH/pair pipeline
-        # does not re-run in the anti-join
-        non_reps = (
-            media_dup_clusters(
-                docs, tau=args.media_dedup_tau, key_sql=args.media_key
-            )
-            .where(F.col("doc_id") != F.col("cluster_rep"))
-            .select("doc_id")
-            .localCheckpoint()
-        )
-        n_media_dup_dropped = non_reps.count()
-        if n_media_dup_dropped:
-            docs = docs.join(non_reps, "doc_id", "left_anti")
-    if args.scrub_pii:
-        # LAST shaping stage: scrub only what survived the drops
-        from ocr_spark.functions.scrub import scrub_spans
-
-        docs = scrub_spans(docs)
     run = ExtractionRun(
         spark,
         docs,
@@ -299,157 +90,13 @@ def main() -> None:
             size_weighted_partitions=args.size_weighted_partitions or None,
             stage_input=args.stage_input,
             checksum_output=args.lineage_checksums,
-            # pin the input-shaping flags: resuming a half-done run
-            # with a different gate would mix gated and ungated
-            # buckets in one table (manifest check rejects it)
-            input_config={
-                "synthesize": bool(args.synthesize),
-                "integrity_gate": bool(args.integrity_gate),
-                "interleave_gate": bool(args.interleave_gate),
-                "template_cap": args.template_cap,
-                "scrub_pii": bool(args.scrub_pii),
-                "media_dedup_tau": args.media_dedup_tau,
-                "media_key": (
-                    args.media_key
-                    if args.media_dedup_tau is not None
-                    else None
-                ),
-            },
+            # pin how the input was derived: resuming a half-done run
+            # over flat docs as if they were spans (or the reverse)
+            # would mix two inputs in one table
+            input_config={"synthesize": bool(args.synthesize)},
         ),
     )
     summary = run.run()
-    if n_pre_gate is not None:
-        # later shaping stages also drop docs — attribute only the
-        # gate's own share: post-gate count is the template stage's
-        # pre-count when that stage ran, else reconstructed from the
-        # run's doc count plus the (exactly known) media drop
-        post_gate = (
-            n_post_gate
-            if n_post_gate is not None
-            else summary["n_docs"] + (n_media_dup_dropped or 0)
-        )
-        summary["n_gate_dropped"] = n_pre_gate - post_gate
-    if n_template_dropped is not None:
-        summary["n_template_dropped"] = n_template_dropped
-    if n_media_dup_dropped is not None:
-        summary["n_media_dup_dropped"] = n_media_dup_dropped
-    if args.integrity_gate:
-        summary["n_quarantined"] = n_quarantined
-    if args.emit_structure:
-        from ocr_spark.functions.interleave import (
-            caption_pairs,
-            section_paths,
-            template_stats,
-        )
-        from ocr_spark.functions.media import media_context, media_jaccard_pairs
-        from ocr_spark.functions.tables import table_shapes
-
-        for name, df in (
-            ("caption_pairs", caption_pairs(docs)),
-            ("section_paths", section_paths(docs)),
-            ("media_context", media_context(docs)),
-            # corpus template census (content-blind structural
-            # fingerprints) + gallery re-post pairs: the two
-            # dedup-adjacent signals only the span table carries
-            ("templates", template_stats(docs)),
-            ("media_pairs", media_jaccard_pairs(docs)),
-            # per-table shape census over the kernel's OTSL cell
-            # spans (empty when the corpus carries no tables)
-            ("tables", table_shapes(docs)),
-        ):
-            out = f"{args.emit_structure}/{name}"
-            df.write.mode("overwrite").parquet(out)
-            summary[f"n_{name}"] = spark.read.parquet(out).count()
-    if args.emit_rendered:
-        from ocr_spark.functions.interleave import render_interleaved
-
-        out = f"{args.emit_rendered}/rendered"
-        render_interleaved(docs).write.mode("overwrite").parquet(out)
-        summary["n_rendered_docs"] = spark.read.parquet(out).count()
-    if args.emit_chunks:
-        from ocr_spark.functions.interleave import (
-            MEDIA_TOKEN_COST,
-            chunk_interleaved,
-        )
-
-        cost_fn = None
-        if args.chunk_cost == "bpe":
-            from ocr_spark.functions.bpe import bpe_token_count_expr
-            from ocr_spark.functions.bpe_merges import MERGES
-
-            def cost_fn(col):
-                return (
-                    f"coalesce({bpe_token_count_expr(MERGES, col)}, "
-                    "CAST(0 AS BIGINT))"
-                )
-
-        out = f"{args.emit_chunks}/chunks"
-        chunk_interleaved(
-            docs,
-            max_tokens=args.chunk_tokens,
-            media_token_cost=(
-                MEDIA_TOKEN_COST
-                if args.media_token_cost is None
-                else args.media_token_cost
-            ),
-            text_cost=cost_fn,
-        ).write.mode("overwrite").parquet(out)
-        # sidecar metadata: without a record of the cost model the
-        # sidecar was cut under, a later audit with the wrong cost is
-        # indistinguishable from corruption (the bloom (m_bits, k)
-        # metadata precedent)
-        with open(f"{args.emit_chunks}/chunks_meta.json", "w") as fh:
-            json.dump(
-                {
-                    "chunk_cost": args.chunk_cost,
-                    "chunk_tokens": args.chunk_tokens,
-                    "media_token_cost": (
-                        MEDIA_TOKEN_COST
-                        if args.media_token_cost is None
-                        else args.media_token_cost
-                    ),
-                },
-                fh,
-            )
-        summary["chunk_cost"] = args.chunk_cost
-        summary["n_chunks"] = spark.read.parquet(out).count()
-        if args.pack_slots:
-            from ocr_spark.functions.packing import pack_interleaved
-
-            # pack the WRITTEN chunk table (one chunking execution)
-            packs_out = f"{args.emit_chunks}/packs"
-            pack_interleaved(
-                spark.read.parquet(out), slots=args.pack_slots
-            ).write.mode("overwrite").parquet(packs_out)
-            summary["n_pack_rows"] = spark.read.parquet(packs_out).count()
-        if args.verify_chunks:
-            from ocr_spark.functions.interleave import chunk_integrity
-
-            # audit the WRITTEN sidecar (not the in-memory frame):
-            # this is the read path training will use, so it also
-            # covers parquet round-trip corruption
-            bad_docs = (
-                chunk_integrity(
-                    docs,
-                    max_tokens=args.chunk_tokens,
-                    media_token_cost=(
-                        MEDIA_TOKEN_COST
-                        if args.media_token_cost is None
-                        else args.media_token_cost
-                    ),
-                    chunks=spark.read.parquet(out),
-                    text_cost=cost_fn,
-                )
-                .where("NOT ok")
-                .count()
-            )
-            summary["chunk_integrity_bad_docs"] = bad_docs
-            if bad_docs:
-                print(json.dumps(summary))
-                raise SystemExit(
-                    f"chunk integrity audit FAILED for {bad_docs} "
-                    "document(s)"
-                )
     # the byte-audit runs LAST so a failure still prints the full
     # accounting (same summary schema on success and failure)
     if args.lineage_checksums:

@@ -804,7 +804,7 @@ def _chunk_assigned(
         .cast("bigint")
     )
     # NULL offsets (span-table contract violations — span_integrity
-    # quarantines them, but --emit-chunks may run ungated) sort FIRST
+    # quarantines them, but curate's --emit-chunks may run ungated) sort FIRST
     # explicitly: Spark's ASC default is NULLS FIRST, DuckDB's is
     # NULLS LAST, and the cumsum order decides chunk assignment.
     w = Window.partitionBy("doc_id").orderBy(
@@ -1373,8 +1373,8 @@ def chunk_integrity(
       so corruption in either direction fails the audit.
 
     ``ok`` is the conjunction. Pass ``chunks`` to audit a
-    MATERIALIZED chunk sidecar (the real deployment shape: the job
-    writes chunks with ``--emit-chunks``, the audit re-reads the
+    MATERIALIZED chunk sidecar (the real deployment shape: the curate
+    job writes chunks with ``--emit-chunks``, the audit re-reads the
     written files against the source table — the
     ``RunConfig.verify_output`` discipline, which is the only way to
     catch corruption introduced BETWEEN chunking and commit); omit it

@@ -93,13 +93,13 @@ class RunConfig:
     # one extra full read of each group's freshly-written output, no
     # extra shuffle. Off by default for that reason.
     checksum_output: bool = False
-    # caller-declared description of how the INPUT frame was shaped
-    # (gates, synthesis, filters) — pinned in the manifest and
+    # caller-declared description of how the INPUT frame was derived
+    # (synthesis, gates, filters) — pinned in the manifest and
     # verified on resume, because done-bucket records are only valid
-    # if later invocations feed the identically-shaped input (resuming
+    # if later invocations feed the identically-derived input (resuming
     # a half-done run with a different gate would mix gated and
     # ungated buckets in one table). Any JSON-serializable dict;
-    # jobs/extract.py passes its gate flags.
+    # jobs/extract.py passes {"synthesize": ...}.
     input_config: dict | None = None
 
     def __post_init__(self):

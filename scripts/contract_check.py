@@ -5,10 +5,11 @@ against its DuckDB oracle and report mismatches.
 Usage: python scripts/contract_check.py [/root/testdata/sf0.01] [query ...]
 (optional trailing args restrict the check to the named queries)
 """
-import importlib.util, math, sys
+import importlib.util, math, os, sys
 import duckdb
-sys.path.insert(0, "/root/repo")  # noqa
-spec = importlib.util.spec_from_file_location("spark_entry", "/root/repo/__spark_entry__.py")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)  # noqa
+spec = importlib.util.spec_from_file_location("spark_entry", os.path.join(REPO, "__spark_entry__.py"))
 m = importlib.util.module_from_spec(spec); spec.loader.exec_module(m)
 from ocr_spark.pipeline.session import get_spark
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"

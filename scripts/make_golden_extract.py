@@ -23,13 +23,14 @@ import sys
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")  # noqa
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)  # noqa
 
 from ocr_spark.pipeline.extract import extract_main_content  # noqa: E402
 from ocr_spark.pipeline.session import get_spark  # noqa: E402
 from ocr_spark.sources.synth import synthesize_spans  # noqa: E402
 
-OUT = "/root/repo/tests/fixtures/golden_extract_sf0001.parquet"
+OUT = os.path.join(REPO, "tests", "fixtures", "golden_extract_sf0001.parquet")
 SF_DIR = "/root/testdata/sf0.001"
 
 if os.path.exists(OUT) and os.environ.get("KERNEL_SEMANTICS_CHANGED") != "1":

@@ -3,11 +3,16 @@
 from __future__ import annotations
 
 import json
+import os
 import sys
 from unittest.mock import patch
 
 import pandas as pd
 from pyspark.sql import SparkSession
+
+JOBS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"
+)
 
 
 def test_dedup_job(spark, tmp_path, capsys):
@@ -25,7 +30,7 @@ def test_dedup_job(spark, tmp_path, capsys):
     out = str(tmp_path / "keep")
     spark.createDataFrame(df).write.parquet(inp)
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
 
     argv = ["dedup.py", "--input", inp, "--output", out, "--tau", "0.5"]
@@ -59,7 +64,7 @@ def test_dedup_job_string_ids(spark, tmp_path, capsys):
     out = str(tmp_path / "keep")
     spark.createDataFrame(df).write.parquet(inp)
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
 
     argv = ["dedup.py", "--input", inp, "--output", out, "--tau", "0.5"]
@@ -98,7 +103,7 @@ def test_dedup_job_incremental_index(spark, tmp_path, capsys):
         pd.DataFrame({"doc_id": [10, 11, 12], "text": [base, near, novel]})
     ).write.parquet(d2)
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
 
     argv1 = ["dedup.py", "--input", d1, "--output", keep1, "--save-index", idx1]
@@ -128,7 +133,7 @@ def test_dedup_job_incremental_index(spark, tmp_path, capsys):
 
 
 def test_dedup_job_rejects_inplace_index(tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
     import pytest
 
@@ -149,7 +154,7 @@ def test_batch_cli_job(spark, tmp_path, capsys):
     ).write.parquet(src)
     out = str(tmp_path / "out")
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import batch_cli as job
 
     argv = ["batch_cli.py", "--input", str(tmp_path / "tree"), "--glob",
@@ -174,7 +179,7 @@ def test_dedup_job_bloom_two_day_flow(spark, tmp_path, capsys):
     """Day 1 saves a bloom seen-set of the kept docs; day 2's batch is
     gated against it — re-crawled texts drop at stage 0.5 without ever
     rescanning day-1 data."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
 
     day1 = pd.DataFrame(
@@ -236,7 +241,7 @@ def test_dedup_job_bloom_two_day_flow(spark, tmp_path, capsys):
 
 
 def test_dedup_job_bloom_guards(spark, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
     import pytest
 
@@ -274,7 +279,7 @@ def test_dedup_job_bloom_guards(spark, tmp_path):
 def test_dedup_job_canonical_exact(spark, tmp_path, capsys):
     """--canonical-exact merges case/punct/whitespace variants in the
     exact pass; without it they all survive."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
 
     df = pd.DataFrame(
@@ -305,7 +310,7 @@ def test_dedup_job_empty_bloom_reloads_as_nothing_seen(spark, tmp_path, capsys):
     """A day-1 batch whose kept docs all have NULL text writes a
     zero-row filter; day 2 must treat it as 'nothing seen', not trip
     the size guard."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import dedup as job
 
     in1, in2 = str(tmp_path / "d1"), str(tmp_path / "d2")

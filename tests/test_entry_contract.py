@@ -19,7 +19,7 @@ TABLES = ["customer", "orders", "documents"]
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
+        "spark_entry", Path(__file__).resolve().parents[1] / "__spark_entry__.py"
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

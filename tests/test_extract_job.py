@@ -1,6 +1,7 @@
 """In-process coverage of jobs/extract.py flags (the spark-submit
-path is covered by tests/test_spark_submit.py): the span_integrity
-quarantine gate and the structure sidecars."""
+path is covered by tests/test_spark_submit.py). Input shaping and the
+span-table sidecars are jobs/curate.py's, tested in
+tests/test_curate_job.py."""
 
 from __future__ import annotations
 
@@ -27,101 +28,6 @@ def _run_main(argv):
     return json.loads(printed[-1])
 
 
-def test_extract_job_integrity_gate_and_sidecars(spark, tmp_path):
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    q = str(tmp_path / "quarantine")
-    struct = str(tmp_path / "structure")
-    rows = [
-        ("good1", [("text", "hello world", "", 0), ("picture", "", "img-a", 1)]),
-        ("good2", [("text", "more prose", "", 0), ("text", "tail", "", 1)]),
-        # duplicate offsets: violates the span-table contract
-        ("dup_off", [("text", "a", "", 1), ("text", "b", "", 1)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    summary = _run_main(
-        [
-            "extract.py",
-            "--input", inp,
-            "--output", out,
-            "--run-id", "gate-test",
-            "--buckets", "2",
-            "--integrity-gate", q,
-            "--emit-structure", struct,
-        ]
-    )
-    assert summary["n_quarantined"] == 1
-    quarantined = spark.read.parquet(q)
-    assert [r.doc_id for r in quarantined.collect()] == ["dup_off"]
-    # the quarantined rows are the FULL original rows (re-parseable)
-    assert set(quarantined.columns) == {"doc_id", "spans"}
-    extracted = spark.read.parquet(out)
-    assert {r.doc_id for r in extracted.select("doc_id").distinct().collect()} == {
-        "good1",
-        "good2",
-    }
-    # sidecars: every media span yields a caption_pairs row (NULL
-    # caption allowed) and a media_context row
-    assert summary["n_caption_pairs"] == 1
-    assert summary["n_media_context"] == 1
-    assert summary["n_section_paths"] > 0
-    mc = spark.read.parquet(f"{struct}/media_context").collect()
-    assert mc[0].media_ref == "img-a" and mc[0].text_before == "hello world"
-    # template census + media-pair sidecars exist (gated corpus: two
-    # structurally-distinct docs -> two fingerprints, no re-posts)
-    assert summary["n_templates"] == 2
-    assert summary["n_media_pairs"] == 0
-    assert summary["n_tables"] == 0  # no table spans in this corpus
-    ts = spark.read.parquet(f"{struct}/templates").collect()
-    assert all(not r.is_template for r in ts)  # nothing repeats
-
-
-def test_extract_job_emit_rendered(spark, tmp_path):
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    rend = str(tmp_path / "rendered")
-    rows = [
-        ("r1", [("text", "hello world", "", 0), ("picture", "", "img-a", 1),
-                ("caption", "a cat", "", 2)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    summary = _run_main(
-        [
-            "extract.py",
-            "--input", inp,
-            "--output", out,
-            "--run-id", "rend",
-            "--buckets", "1",
-            "--emit-rendered", rend,
-        ]
-    )
-    assert summary["n_rendered_docs"] == 1
-    r = spark.read.parquet(f"{rend}/rendered").collect()[0]
-    assert r.rendered_text == "hello world\n<|image|>\na cat"
-    assert (r.n_rendered, r.n_media) == (3, 1)
-
-
-def test_extract_job_gate_clean_corpus_is_noop(spark, tmp_path):
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    q = str(tmp_path / "quarantine")
-    rows = [("d1", [("text", "prose", "", 0)])]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    summary = _run_main(
-        [
-            "extract.py",
-            "--input", inp,
-            "--output", out,
-            "--run-id", "gate-clean",
-            "--buckets", "1",
-            "--integrity-gate", q,
-        ]
-    )
-    assert summary["n_quarantined"] == 0
-    assert spark.read.parquet(q).count() == 0
-    assert spark.read.parquet(out).count() > 0
-
-
 def test_extract_job_lineage_checksums_audit(spark, tmp_path):
     """--lineage-checksums records per-bucket checksums AND runs the
     byte-audit before reporting: a clean run reports no mismatches."""
@@ -145,290 +51,3 @@ def test_extract_job_lineage_checksums_audit(spark, tmp_path):
     assert s["checksum_mismatched_buckets"] == []
     rec = json.load(open(f"{out}/_lineage/chk/bucket-00000.json"))
     assert "checksum60" in rec
-
-
-def test_extract_job_emit_chunks(spark, tmp_path):
-    """--emit-chunks writes the chunk_interleaved sidecar over the
-    input span table, equal to the operator applied directly."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.functions.interleave import chunk_interleaved
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    chunks_dir = str(tmp_path / "chunks")
-    rows = [
-        ("d1", [("text", "a b c d e", "", 0), ("picture", "", "img", 1)]),
-        ("d2", [("text", "one two", "", 0)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    s = _run_main(
-        [
-            "extract.py",
-            "--input", inp,
-            "--output", out,
-            "--run-id", "ch",
-            "--buckets", "2",
-            "--emit-chunks", chunks_dir,
-            "--chunk-tokens", "4",
-            "--media-token-cost", "3",
-        ]
-    )
-    got = sorted(map(tuple, spark.read.parquet(f"{chunks_dir}/chunks").collect()))
-    want = sorted(map(tuple, chunk_interleaved(
-        spark.read.parquet(inp), max_tokens=4, media_token_cost=3
-    ).collect()))
-    assert got == want and s["n_chunks"] == len(got)
-
-
-def test_extract_job_pack_slots(spark, tmp_path):
-    """--pack-slots slot-packs the written chunk table; requires
-    --emit-chunks."""
-    import pytest
-
-    import jobs.extract  # noqa: F401  (argparse surface)
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    chunks_dir = str(tmp_path / "chunks")
-    rows = [
-        ("d1", [("text", "a b c d e", "", 0), ("picture", "", "img", 1)]),
-        ("d2", [("text", "one two", "", 0)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    s = _run_main(
-        [
-            "extract.py",
-            "--input", inp,
-            "--output", out,
-            "--run-id", "pk",
-            "--buckets", "2",
-            "--emit-chunks", chunks_dir,
-            "--chunk-tokens", "4",
-            "--media-token-cost", "3",
-            "--pack-slots", "2",
-        ]
-    )
-    packs = spark.read.parquet(f"{chunks_dir}/packs")
-    assert s["n_pack_rows"] == packs.count() > 0
-    # every chunk row packed exactly once
-    assert packs.count() == spark.read.parquet(
-        f"{chunks_dir}/chunks"
-    ).where("n_tokens > 0").count()
-    # misuse is rejected at argparse time (exit 2) — see
-    # test_pack_slots_validated_before_any_work
-    with pytest.raises(SystemExit) as e:
-        _run_main(
-            ["extract.py", "--input", inp, "--output", str(tmp_path / "o2"),
-             "--run-id", "pk2", "--buckets", "1", "--pack-slots", "2"]
-        )
-    assert e.value.code == 2
-
-
-def test_extract_job_interleave_gate(spark, tmp_path):
-    """--interleave-gate drops structurally bad docs (gallery runs /
-    prose-free) before the kernel and accounts for them."""
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    rows = [
-        # passes: two text spans, no media
-        ("ok", [("text", "hello world", "", 0), ("text", "more", "", 1)]),
-        # fails: media-only gallery (no text spans, run of 4)
-        ("gallery", [("picture", "", f"img-{i}", i) for i in range(4)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    s = _run_main(
-        [
-            "extract.py",
-            "--input", inp,
-            "--output", out,
-            "--run-id", "gate",
-            "--buckets", "2",
-            "--interleave-gate",
-        ]
-    )
-    assert s["n_docs"] == 1 and s["n_gate_dropped"] == 1
-    ids = {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
-    assert ids == {"ok"}
-
-
-def test_pack_slots_validated_before_any_work(spark, tmp_path):
-    """Flag misuse fails at argparse time (exit 2), before extraction
-    touches the input — not after an hours-long run."""
-    import pytest
-
-    with pytest.raises(SystemExit) as e:
-        _run_main(
-            ["extract.py", "--input", "/nonexistent", "--output", "/tmp/x",
-             "--run-id", "v", "--pack-slots", "2"]
-        )
-    assert e.value.code == 2
-    with pytest.raises(SystemExit) as e2:
-        _run_main(
-            ["extract.py", "--input", "/nonexistent", "--output", "/tmp/x",
-             "--run-id", "v", "--emit-chunks", "/tmp/c", "--pack-slots", "0"]
-        )
-    assert e2.value.code == 2
-
-
-def test_extract_job_verify_chunks(spark, tmp_path):
-    """--verify-chunks audits the WRITTEN chunk sidecar against the
-    input span table (happy path: zero bad docs, key in the summary);
-    the flag without --emit-chunks is rejected at argparse time. The
-    failure path (a sidecar that does not conserve spans) cannot be
-    reached through the CLI — the job always writes fresh chunks
-    immediately before auditing — and is falsification-tested at the
-    operator level (test_chunk_integrity_catches_corruption)."""
-    import pytest
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    chunks_dir = str(tmp_path / "chunks")
-    rows = [
-        ("d1", [("text", "a b c d e", "", 0), ("picture", "", "img", 1)]),
-        ("d2", [("text", "one two", "", 0)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    s = _run_main(
-        [
-            "extract.py",
-            "--input", inp, "--output", out,
-            "--run-id", "vc", "--buckets", "2",
-            "--emit-chunks", chunks_dir,
-            "--chunk-tokens", "4", "--media-token-cost", "3",
-            "--verify-chunks",
-        ]
-    )
-    assert s["chunk_integrity_bad_docs"] == 0
-    assert s["n_chunks"] > 0
-    with pytest.raises(SystemExit) as e:
-        _run_main(
-            ["extract.py", "--input", inp,
-             "--output", str(tmp_path / "o2"), "--run-id", "vc2",
-             "--buckets", "1", "--verify-chunks"]
-        )
-    assert e.value.code == 2
-
-
-def test_extract_job_template_cap_and_media_dedup(spark, tmp_path):
-    """--template-cap bounds template-farm mass; --media-dedup-tau
-    drops gallery re-posts keeping one representative; both are
-    accounted in the summary and pinned in the run manifest (a resume
-    with different shaping flags must be rejected)."""
-    import json as _json
-
-    import pytest
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-
-    def farm(i):
-        return (f"farm{i:02d}",
-                [("text", f"unique prose {i} alpha", "", 0),
-                 ("picture", "", f"img-{i}", 1),
-                 ("caption", f"cap {i}", "", 2),
-                 ("text", f"tail {i} words", "", 3)])
-
-    rows = [farm(i) for i in range(8)]                 # one template x8
-    # gallery re-posts: same asset set, distinct structures (one has
-    # an extra text span so the template family differs)
-    rows += [
-        ("post_a", [("text", "story one here", "", 0),
-                    ("picture", "", "g1", 1),
-                    ("text", "middle text", "", 2),
-                    ("picture", "", "g2", 3)]),
-        ("post_b", [("picture", "", "g1", 0), ("picture", "", "g2", 1),
-                    ("text", "rewritten story", "", 2),
-                    ("text", "extra paragraph", "", 3)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    s = _run_main(
-        [
-            "extract.py",
-            "--input", inp, "--output", out,
-            "--run-id", "shape", "--buckets", "2",
-            "--interleave-gate",
-            "--template-cap", "3",
-            "--media-dedup-tau", "0.9",
-        ]
-    )
-    # 8 farm docs capped to 3 -> 5 dropped; one of post_a/post_b
-    # dropped as a media dup (rep = min doc_id = post_a survives).
-    # Every doc passes the structural gate, and the gate accounting
-    # must NOT absorb the later stages' drops (attribution fix)
-    assert s["n_gate_dropped"] == 0
-    assert s["n_template_dropped"] == 5
-    assert s["n_media_dup_dropped"] == 1
-    kept = {r.doc_id for r in spark.read.parquet(out).select(
-        "doc_id").distinct().collect()}
-    assert "post_a" in kept and "post_b" not in kept
-    assert sum(k.startswith("farm") for k in kept) == 3
-    # shaping flags pinned: resuming without them is rejected
-    man = _json.load(open(f"{out}/_lineage/shape/manifest.json"))
-    assert man["input_config"]["template_cap"] == 3
-    assert man["input_config"]["media_dedup_tau"] == 0.9
-    with pytest.raises(ValueError, match="would corrupt"):
-        _run_main(
-            ["extract.py", "--input", inp, "--output", out,
-             "--run-id", "shape", "--buckets", "2"]
-        )
-
-
-def test_extract_job_scrub_pii(spark, tmp_path):
-    """--scrub-pii redacts text-span PII before extraction; the flag
-    is pinned in the manifest."""
-    import json as _json
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    rows = [
-        ("d1", [("text", "mail bob@x.co today please do", "", 0),
-                ("text", "more prose here", "", 1),
-                ("text", "tail words", "", 2)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-    _run_main(
-        ["extract.py", "--input", inp, "--output", out,
-         "--run-id", "pii", "--buckets", "1", "--scrub-pii"]
-    )
-    texts = [
-        sp.text
-        for r in spark.read.parquet(out).collect()
-        for sp in (r.spans or [])
-    ]
-    assert any("<EMAIL>" in t for t in texts)
-    assert not any("bob@x.co" in t for t in texts)
-    man = _json.load(open(f"{out}/_lineage/pii/manifest.json"))
-    assert man["input_config"]["scrub_pii"] is True
-
-
-def test_extract_job_chunk_cost_bpe(spark, tmp_path):
-    """--chunk-cost bpe cuts and AUDITS under the trained tokenizer's
-    budget (one cost expression drives both); boundaries differ from
-    the ws default on subword-heavy text."""
-    inp = str(tmp_path / "in")
-    rows = [
-        ("d1", [("text", "information understanding transformation "
-                         "considering", "", 0),
-                ("text", "quarterly international organizations "
-                         "repeatedly", "", 1)]),
-    ]
-    spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
-
-    def run(tag, cost):
-        return _run_main(
-            ["extract.py", "--input", inp,
-             "--output", str(tmp_path / f"out{tag}"),
-             "--run-id", tag, "--buckets", "1",
-             "--emit-chunks", str(tmp_path / f"ch{tag}"),
-             "--chunk-tokens", "8", "--media-token-cost", "4",
-             "--chunk-cost", cost, "--verify-chunks"]
-        )
-
-    s_bpe = run("bpe", "bpe")
-    s_ws = run("ws", "ws")
-    assert s_bpe["chunk_integrity_bad_docs"] == 0
-    assert s_ws["chunk_integrity_bad_docs"] == 0
-    bpe = spark.read.parquet(str(tmp_path / "chbpe/chunks")).collect()
-    ws = spark.read.parquet(str(tmp_path / "chws/chunks")).collect()
-    assert sorted(map(tuple, bpe)) != sorted(map(tuple, ws))

@@ -69,9 +69,9 @@ def _imported_names(path: str, module: str | None, is_pkg: bool):
                 yield f"{base}.{alias.name}"
 
 
-def _reached(mods: dict[str, str]) -> set[str]:
+def _reached(mods: dict[str, str], roots=ROOT_GLOBS) -> set[str]:
     todo = []
-    for pattern in ROOT_GLOBS:
+    for pattern in roots:
         for path in glob.glob(os.path.join(REPO, pattern)):
             todo.extend(_imported_names(path, None, False))
     seen: set[str] = set()
@@ -126,3 +126,29 @@ def test_every_package_function_is_referenced():
         "top-level functions/classes no *.py file names besides their "
         f"own definition (delete them): {unreferenced}"
     )
+
+
+def test_extract_job_reaches_only_the_extraction_closure():
+    """jobs/extract.py is a thin CLI over the runner, the session and
+    the synthesizer: of the operator modules it may reach only the two
+    the runner's checksum lineage uses. Input shaping and sidecars
+    belong to jobs/curate.py."""
+    reached = _reached(_package_modules(), roots=("jobs/extract.py",))
+    operators = {
+        m for m in reached if m.startswith(f"{PKG}.functions.")
+    } - {f"{PKG}.functions.audit", f"{PKG}.functions.hashing"}
+    assert not operators, (
+        f"jobs/extract.py reaches operator modules: {sorted(operators)}"
+    )
+
+
+def test_no_file_hardcodes_the_checkout_path():
+    """Paths inside the checkout resolve from ``__file__``: a literal
+    checkout path makes a suite run from a second clone silently
+    check the first clone's code."""
+    offenders = sorted(
+        os.path.relpath(path, REPO)
+        for path in glob.glob(os.path.join(REPO, "**", "*.py"), recursive=True)
+        if REPO in open(path, encoding="utf-8").read()
+    )
+    assert not offenders, f"files naming the checkout path {REPO}: {offenders}"

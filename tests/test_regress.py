@@ -3,10 +3,14 @@ semantics on hand-built diffs, twin parity, hostile NULLs."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
 from ocr_spark.pipeline.regress import span_diff, span_diff_sql
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SCHEMA = "doc_id string, kind string, text string, media_ref string, offset int"
 
@@ -150,7 +154,7 @@ def test_live_build_identical_to_golden_snapshot(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     golden = spark.read.parquet(
-        "/root/repo/tests/fixtures/golden_extract_sf0001.parquet"
+        os.path.join(REPO, "tests", "fixtures", "golden_extract_sf0001.parquet")
     )
     d = span_diff(extract_main_content(synthesize_spans(docs)), golden)
     assert d.where("NOT identical").count() == 0

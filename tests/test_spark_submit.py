@@ -45,7 +45,6 @@ def test_spark_submit_extract_job(tmp_path):
         "--output", out,
         "--run-id", "submit-test",
         "--buckets", "4",
-        "--emit-structure", str(tmp_path / "structure"),
     ]
     env = {**os.environ, "PYTHONPATH": ""}  # package must come from --py-files
     res = subprocess.run(cmd, capture_output=True, text=True, timeout=600, env=env)
@@ -54,12 +53,11 @@ def test_spark_submit_extract_job(tmp_path):
     assert summary["buckets_done"] == 4
     assert summary["n_docs"] == 500
     assert os.path.isdir(out)
-    assert summary["n_caption_pairs"] > 0
-    assert summary["n_section_paths"] > 0
-    assert summary["n_media_context"] > 0
-    assert os.path.isdir(str(tmp_path / "structure" / "caption_pairs"))
-    assert os.path.isdir(str(tmp_path / "structure" / "section_paths"))
-    assert os.path.isdir(str(tmp_path / "structure" / "media_context"))
+    lineage = os.path.join(out, "_lineage", "submit-test")
+    records = sorted(f for f in os.listdir(lineage) if f.startswith("bucket-"))
+    assert records == [f"bucket-{b:05d}.json" for b in range(4)]
+    with open(os.path.join(lineage, "manifest.json")) as fh:
+        assert json.load(fh)["input_config"] == {"synthesize": True}
 
 
 @pytest.mark.slow

@@ -4,6 +4,8 @@ parity on the synthetic table corpus, plan shape (one Exchange)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -14,6 +16,10 @@ from ocr_spark.functions.tables import (
 from ocr_spark.plans import plan_str
 
 SF_DIR = "/root/testdata/sf0.001"
+ENTRY_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py",
+)
 
 _NESTED_SCHEMA = (
     "doc_id string, spans array<struct<"
@@ -100,7 +106,7 @@ def test_reconstruct_oracle_parity(spark, con):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", ENTRY_PATH
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -126,7 +132,7 @@ def test_reconstruct_plan_single_exchange(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", ENTRY_PATH
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -152,7 +158,7 @@ def test_table_shapes(spark, con):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", ENTRY_PATH
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
