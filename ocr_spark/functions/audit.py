@@ -94,15 +94,16 @@ def table_checksum_sql(
     cols: tuple[str, ...] = ("doc_id", "text", "lang", "source"),
 ) -> str:
     """DuckDB twin of :func:`table_checksum` (sum(BIGINT) is HUGEINT —
-    exact, like Spark's DECIMAL(38,0))."""
+    exact, like Spark's DECIMAL(38,0)). ``group_cols=()`` gives the one
+    whole-table row."""
     g = ", ".join(group_cols)
     return f"""
-      SELECT {g},
+      SELECT {g + "," if g else ""}
              CAST(count(*) AS BIGINT) AS n_rows,
              CAST(sum({md5_long_sql(_row_sql(cols))}) % {MOD60} AS BIGINT)
                AS checksum60
       FROM {table}
-      GROUP BY {g}
+      {"GROUP BY " + g if g else ""}
     """
 
 

@@ -7,22 +7,29 @@ per-page cursor). A run:
 
 1. writes a manifest once: (run_id, n_buckets, config snapshot) —
    T1 job creation;
-2. processes pending buckets in groups; each group is one Spark job
-   that writes ``bucket=<k>/`` parquet partitions (overwrite-by-
+2. processes pending buckets in commit groups; each group is ONE Spark
+   job that writes ``bucket=<k>/`` parquet partitions (overwrite-by-
    partition discipline -> idempotent re-runs; the Iceberg analog is
-   a MERGE/replacePartitions commit) — T3/T4. With
-   ``RunConfig.stage_input`` the input is first materialized ONCE as
-   bucket-partitioned parquet so each group partition-prunes to its
-   buckets instead of re-scanning the full input (G groups = G full
-   corpus scans otherwise — the dominant I/O term at 100 TB);
-3. after each group commits, writes one lineage record per bucket:
+   a MERGE/replacePartitions commit) — T3/T4. A few groups are in
+   flight at once (submitted from a small driver thread pool), so one
+   group's planning, straggler tail and commit overlap the next
+   group's tasks. With ``RunConfig.stage_input`` the input is first
+   materialized ONCE, before the groups start, as bucket-partitioned
+   parquet so each group partition-prunes to its buckets instead of
+   re-scanning the full input (G groups = G full corpus scans
+   otherwise — the dominant I/O term at 100 TB);
+3. the write itself collects each bucket's lineage (``observe`` with
+   one conditional aggregate per bucket, in the write's result stage —
+   no read-back of the output); after the group commits, writes one
+   lineage record per bucket:
    (run_id, bucket, status, attempt, n_docs, n_spans_in, n_spans_out,
    parse_failures, wall_ms[, checksum60 with
    ``RunConfig.checksum_output``]) as a single JSON file per bucket —
    the write is atomic (tmp + rename), so a crash mid-group leaves
    those buckets pending and the next invocation redoes exactly them —
-   T2/T5 rollback-free retry; ``verify_output()`` byte-audits the
-   table against the recorded checksums;
+   T2/T5 rollback-free retry; a failed group leaves only its own
+   buckets pending. ``verify_output()`` byte-audits the table against
+   the recorded checksums;
 4. ``resume()`` = skip buckets whose lineage record exists (the
    anti-join against done work).
 
@@ -41,11 +48,11 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ocr_spark.kernel.extract import DEFAULT_CONFIG, ExtractConfig
@@ -54,12 +61,16 @@ from ocr_spark.pipeline.sinks import bucket_col
 from ocr_spark.schema import DOC_WITH_METRICS_SCHEMA
 
 # what the runner's parquet table holds: kernel output + the bucket
-# partition column. Passed explicitly to the metrics read so a commit
-# group that wrote ZERO rows (possible when n_buckets >> corpus) still
-# reads back as an empty frame instead of failing schema inference.
+# partition column. Passed explicitly to verify_output's read (the only
+# read of the table) so buckets that hold ZERO rows (possible when
+# n_buckets >> corpus) still read back as an empty frame instead of
+# failing schema inference.
 OUTPUT_SCHEMA = StructType(
     DOC_WITH_METRICS_SCHEMA.fields + [StructField("bucket", IntegerType(), True)]
 )
+
+# commit groups in flight at once (one Spark job each)
+_GROUPS_IN_FLIGHT = 4
 
 
 @dataclass(frozen=True)
@@ -85,13 +96,13 @@ class RunConfig:
     stage_input: bool = False
     # record an order-insensitive content checksum per bucket in the
     # lineage (functions/audit.py modular-sum scheme over the full
-    # output row incl. spans). Turns lineage into a byte-level audit:
-    # verify_output() re-derives the sums from the files and flags any
-    # bucket whose bytes drifted from what its commit recorded. COST:
-    # the post-commit metrics scan must read the spans column too (the
-    # bulk of the output bytes) instead of the 3 pruned metric ints —
-    # one extra full read of each group's freshly-written output, no
-    # extra shuffle. Off by default for that reason.
+    # output row incl. spans), summed from the rows as they are
+    # written. Turns lineage into a byte-level audit: verify_output()
+    # re-derives the sums from the files and flags any bucket whose
+    # bytes drifted from what its commit recorded. COST: every written
+    # row is hashed, including to_json(spans) (the bulk of the output
+    # bytes), during the write — no extra read, no extra shuffle. Off
+    # by default for that reason.
     checksum_output: bool = False
     # caller-declared description of how the INPUT frame was derived
     # (synthesis, gates, filters) — pinned in the manifest and
@@ -130,6 +141,29 @@ def _row_checksum60():
         F.coalesce(F.col("parse_failed").cast("string"), F.lit("\x00")),
     ]
     return md5_long(F.concat_ws("\x01", *parts))
+
+
+# lineage counter -> the output column it sums per bucket (n_docs
+# counts the bucket's rows)
+_SUMS = {"n_spans_in": "n_spans_in", "n_spans_out": "n_spans_out", "parse_failures": "parse_failed"}
+
+
+def _lineage_aggs(buckets: list[int], with_checksum: bool) -> list:
+    """One conditional aggregate per (counter, bucket), named
+    ``<counter>:<bucket>`` — the observed metrics of a commit group.
+    ``_checksum60`` is the per-row hash column the writer adds."""
+    from ocr_spark.functions.audit import checksum_agg
+
+    aggs = []
+    for b in buckets:
+        in_b = F.col("bucket") == b
+        aggs.append(F.count(F.when(in_b, True)).alias(f"n_docs:{b}"))
+        aggs += [F.sum(F.when(in_b, F.col(c))).alias(f"{k}:{b}") for k, c in _SUMS.items()]
+        if with_checksum:
+            aggs.append(
+                checksum_agg(F.when(in_b, F.col("_checksum60"))).alias(f"checksum60:{b}")
+            )
+    return aggs
 
 
 class ExtractionRun:
@@ -208,7 +242,7 @@ class ExtractionRun:
     def _staging_dir(self) -> str:
         # underscore prefix: Spark's file listing skips _-prefixed
         # paths, so the staging tree inside the output dir is invisible
-        # to the metrics read and to output()
+        # to verify_output()'s read and to output()
         return f"{self.out}/_staging/{self.cfg.run_id}"
 
     def _stage_marker(self) -> str:
@@ -250,8 +284,17 @@ class ExtractionRun:
         return self.spark.read.schema(staged_schema).parquet(stg)
 
     # -- T3/T4: process + commit ------------------------------------------
-    def _group_df(self, buckets: list[int]) -> DataFrame:
+    def _input(self) -> DataFrame:
+        """The run's input with its ``bucket`` column: the staged copy
+        (written on first use) or the bucket hash over ``docs``."""
+        if self.cfg.stage_input:
+            return self._staged_docs()
+        return self.docs.withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
+
+    def _group_df(self, buckets: list[int], src: DataFrame | None = None) -> DataFrame:
         """The commit-group plan: ONE kernel execution, no joins.
+        ``src`` is :meth:`_input`, passed in by ``run()`` so that the
+        groups in flight share one staged copy.
 
         bucket is a pure function of doc_id (sinks.bucket_col), so it is
         filtered on the input and recomputed on the kernel output with
@@ -263,11 +306,8 @@ class ExtractionRun:
         the staged table (PartitionFilters in the scan — only the
         group's bucket directories are read); without it the filter is
         a full-scan predicate on the derived hash."""
-        src = (
-            self._staged_docs()
-            if self.cfg.stage_input
-            else self.docs.withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
-        )
+        if src is None:
+            src = self._input()
         subset = src.where(F.col("bucket").isin(buckets)).drop("bucket")
         if self.cfg.size_weighted_partitions:
             subset = weight_partition(subset, self.cfg.size_weighted_partitions)
@@ -283,60 +323,54 @@ class ExtractionRun:
             .where(F.col("bucket").isin(buckets))
         )
 
-    def _process_group(self, buckets: list[int], attempt: int) -> None:
+    def _process_group(self, src: DataFrame, buckets: list[int], attempt: int) -> None:
+        """One Spark job: write the group's ``bucket=<k>/`` partitions
+        and collect their lineage counts on the way through
+        (``observe``), then write the lineage records."""
         t0 = time.time()
-        out = self._group_df(buckets)
+        out = self._group_df(buckets, src).repartition(len(buckets), "bucket")
+        cols = out.columns
+        if self.cfg.checksum_output:
+            # hashed once per row here; the per-bucket sums pick it up
+            out = out.withColumn("_checksum60", _row_checksum60())
+        # observe sits after the last exchange, in the write's result
+        # stage: Spark applies a result task's accumulator update once
+        # per partition, so a retried task cannot double-count
+        obs = Observation(f"lineage:{self.cfg.run_id}:{buckets[0]}")
         (
-            out.repartition(len(buckets), "bucket")
+            out.observe(obs, *_lineage_aggs(buckets, self.cfg.checksum_output))
+            .select(*cols)
             .write.partitionBy("bucket")
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(self.out)
         )
-        # per-bucket lineage metrics: a column-pruned, partition-pruned
-        # scan of the files just written — NOT a kernel re-execution.
-        # (With checksum_output the scan also reads spans; see RunConfig.)
-        by_bucket = {r.bucket: r for r in self._bucket_metrics(buckets)}
+        m = obs.get
         wall_ms = int((time.time() - t0) * 1000)
         for b in buckets:
-            r = by_bucket.get(b)
-            rec = {
-                "run_id": self.cfg.run_id,
-                "bucket": b,
-                "status": "done",
-                "attempt": attempt,
-                "n_docs": int(r.n_docs) if r else 0,
-                "n_spans_in": int(r.n_spans_in) if r else 0,
-                "n_spans_out": int(r.n_spans_out) if r else 0,
-                "parse_failures": int(r.parse_failures) if r else 0,
-                "wall_ms": wall_ms,
-            }
+            rec = {"run_id": self.cfg.run_id, "bucket": b, "status": "done", "attempt": attempt}
+            # a NULL sum is an empty bucket: 0, also for the checksum
+            # (the additive identity, what the modular sum over zero
+            # rows yields)
+            rec.update({k: int(m[f"{k}:{b}"] or 0) for k in ("n_docs", *_SUMS)})
+            rec["wall_ms"] = wall_ms
             if self.cfg.checksum_output:
-                # empty bucket checksums as 0 — the additive identity,
-                # matching what the modular sum over zero rows yields
-                rec["checksum60"] = int(r.checksum60) if r else 0
+                rec["checksum60"] = int(m[f"checksum60:{b}"] or 0)
             self._atomic_write(self._record_path(b), json.dumps(rec))
 
-    def _bucket_metrics(
-        self, buckets: list[int], with_checksum: bool | None = None
-    ) -> list:
-        if with_checksum is None:
-            with_checksum = self.cfg.checksum_output
-        aggs = [
-            F.count("*").alias("n_docs"),
-            F.sum("n_spans_in").alias("n_spans_in"),
-            F.sum("n_spans_out").alias("n_spans_out"),
-            F.sum("parse_failed").alias("parse_failures"),
-        ]
-        if with_checksum:
-            from ocr_spark.functions.audit import checksum_agg
+    def _bucket_metrics(self, buckets: list[int]) -> list:
+        """(bucket, n_docs, checksum60) re-derived from the files on
+        disk — the audit side of :meth:`verify_output`."""
+        from ocr_spark.functions.audit import checksum_agg
 
-            aggs.append(checksum_agg(_row_checksum60()).alias("checksum60"))
         return (
             self.spark.read.schema(OUTPUT_SCHEMA).parquet(self.out)
             .where(F.col("bucket").isin(buckets))
             .groupBy("bucket")
-            .agg(*aggs)
+            .agg(
+                F.count("*").alias("n_docs"),
+                checksum_agg(_row_checksum60()).alias("checksum60"),
+            )
             .collect()
         )
 
@@ -359,7 +393,7 @@ class ExtractionRun:
             return []
         actual = {
             r.bucket: (int(r.checksum60), int(r.n_docs))
-            for r in self._bucket_metrics(sorted(recorded), with_checksum=True)
+            for r in self._bucket_metrics(sorted(recorded))
         }
         return sorted(
             b for b, want in recorded.items()
@@ -386,8 +420,12 @@ class ExtractionRun:
 
     # -- T2/T5: run with resume -------------------------------------------
     def run(self, fail_after_groups: int | None = None) -> dict:
-        """Process all pending buckets. ``fail_after_groups`` is a test
-        hook simulating a mid-run crash. Returns the run summary."""
+        """Process all pending buckets, a few commit groups at a time.
+        A failed group leaves its buckets pending; its error is
+        re-raised (the first, in group order) once every group has
+        finished. ``fail_after_groups`` is a test hook simulating a
+        mid-run crash: groups from that index on fail before they
+        write. Returns the run summary."""
         self.write_manifest()
         if self.is_aborted():
             os.remove(self._abort_path())  # resuming an aborted run
@@ -398,10 +436,25 @@ class ExtractionRun:
             pending[i : i + self.cfg.buckets_per_commit]
             for i in range(0, len(pending), self.cfg.buckets_per_commit)
         ]
-        for gi, group in enumerate(groups):
-            if fail_after_groups is not None and gi >= fail_after_groups:
+        n_ok = len(groups) if fail_after_groups is None else fail_after_groups
+        # staged once, before the fan-out: staging on first use inside
+        # the groups would have every group in flight stage at once
+        src = self._input() if groups[:n_ok] else None
+
+        def commit(gi: int, group: list[int]) -> None:
+            if gi >= n_ok:
                 raise RuntimeError(f"simulated crash before group {gi}")
-            self._process_group(group, attempt)
+            self._process_group(src, group, attempt)
+
+        # the default FIFO scheduler runs the earliest group's tasks
+        # first; later groups fill the cores its planning, straggler
+        # tail and commit leave idle. Each group commits or leaves its
+        # buckets pending on its own, so a failure waits for the rest.
+        with ThreadPoolExecutor(max_workers=_GROUPS_IN_FLIGHT) as pool:
+            futures = [pool.submit(commit, gi, g) for gi, g in enumerate(groups)]
+        for f in futures:
+            if f.exception() is not None:
+                raise f.exception()
         # run complete: the staged copy is scratch space — GC it (and
         # its marker, so a hypothetical later re-stage starts clean)
         if self.cfg.stage_input and len(self.done_buckets()) == self.cfg.n_buckets:

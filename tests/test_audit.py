@@ -32,6 +32,22 @@ def test_table_checksum_matches_oracle(docs, con):
     assert got == want and len(got) > 1
 
 
+@pytest.mark.parametrize("group_cols", [(), ("source",)])
+def test_twins_agree_with_and_without_groups(spark, group_cols):
+    """The Spark and DuckDB twins give the same rows on the same input,
+    including the single whole-table row of ``group_cols=()``."""
+    rows = [(1, "alpha", "en", "s"), (2, None, "de", "t"), (3, "gamma", None, "s")]
+    schema = "doc_id long, text string, lang string, source string"
+    got = sorted(
+        map(tuple, audit.table_checksum(spark.createDataFrame(rows, schema), group_cols).collect())
+    )
+    c = duckdb.connect()
+    c.execute("CREATE TABLE t (doc_id BIGINT, text VARCHAR, lang VARCHAR, source VARCHAR)")
+    c.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+    want = sorted(map(tuple, c.execute(audit.table_checksum_sql("t", group_cols)).fetchall()))
+    assert got == want and len(got) == (1 if not group_cols else 2)
+
+
 def test_checksum_is_partitioning_invariant(docs):
     base = sorted(map(tuple, audit.table_checksum(docs).collect()))
     reparted = sorted(

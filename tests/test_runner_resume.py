@@ -431,3 +431,166 @@ def test_verify_output_skips_records_without_checksums(spark, docs, tmp_path):
     )
     run.run()
     assert run.verify_output() == []  # nothing auditable, not a failure
+
+
+# ---------------------------------------------------------------------------
+# groups in flight: lineage from observed metrics, faults
+# ---------------------------------------------------------------------------
+
+
+def _records(run) -> dict:
+    """bucket -> lineage record without its timing/attempt fields."""
+    recs = {}
+    for b in range(run.cfg.n_buckets):
+        p = run._record_path(b)
+        if os.path.exists(p):
+            with open(p) as f:
+                rec = json.load(f)
+            recs[b] = {k: v for k, v in rec.items() if k not in ("wall_ms", "attempt")}
+    return recs
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys, uuid
+
+from pyspark import TaskContext
+
+from ocr_spark.pipeline.runner import ExtractionRun, RunConfig
+from ocr_spark.pipeline.session import get_spark
+
+out, marks, inputs = sys.argv[1:4]
+
+
+def fail_first_attempt(batches):
+    # identity that fails each task's first attempt AFTER yielding all
+    # of its rows, so a double-counted attempt would show in the sums
+    yield from batches
+    if TaskContext.get().attemptNumber() == 0:
+        open(os.path.join(marks, uuid.uuid4().hex), "w").close()
+        raise RuntimeError("injected failure on attempt 0")
+
+
+# local[N, maxFailures]: each task may fail once and is retried
+spark = get_spark("local[4,2]", shuffle_partitions=4)
+docs = spark.read.parquet(inputs)
+result = {}
+for name, src in (("clean", docs), ("retried", docs.mapInArrow(fail_first_attempt, docs.schema))):
+    cfg = RunConfig("rt", n_buckets=8, buckets_per_commit=2, checksum_output=True)
+    run = ExtractionRun(spark, src, f"{out}/{name}", cfg)
+    run.run()
+    recs = {}
+    for b in range(8):
+        with open(run._record_path(b)) as f:
+            rec = json.load(f)
+        recs[b] = {k: v for k, v in rec.items() if k not in ("wall_ms", "attempt")}
+    rows = sorted(
+        [r.doc_id, r.bucket, r.n_spans_in, r.n_spans_out, r.parse_failed,
+         [list(s) for s in (r.spans or [])]]
+        for r in run.output().collect()
+    )
+    result[name] = {"records": recs, "rows": rows, "verify": run.verify_output()}
+spark.stop()
+print(json.dumps(result))
+"""
+
+
+def test_task_retry_does_not_double_count(docs, tmp_path):
+    """Every kernel-input task fails its first attempt after emitting
+    all its rows and succeeds on the retry: the observed lineage
+    (counts and checksum60) and the table equal a clean run's. Runs in
+    its own process: retries need ``local[N, maxFailures]``."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    docs.write.parquet(str(tmp_path / "in"))
+    env = {**os.environ, "PYTHONPATH": repo, "OCR_SPARK_DRIVER_MEM": "1g"}
+    res = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path / "out"), str(marks),
+         str(tmp_path / "in")],
+        capture_output=True, text=True, timeout=900, env=env, cwd=repo,
+    )
+    assert res.returncode == 0, res.stderr[-4000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    assert len(os.listdir(marks)) > 0  # the injection fired: tasks were retried
+    clean, retried = got["clean"], got["retried"]
+    assert retried["records"] == clean["records"]
+    assert all("checksum60" in r for r in retried["records"].values())
+    assert sum(r["n_docs"] for r in retried["records"].values()) == 500
+    assert retried["rows"] == clean["rows"]
+    assert retried["verify"] == [] and clean["verify"] == []
+
+
+def test_failing_group_leaves_only_its_buckets_pending(spark, docs, tmp_path, monkeypatch):
+    """A group whose kernel input always fails, while the other groups
+    are in flight: the others commit (records and rows), the failing
+    group's buckets stay pending with no record and no partition,
+    run() raises, and a resume on the clean input equals a single-shot
+    run."""
+    from ocr_spark.pipeline import runner as runner_mod
+
+    ref = ExtractionRun(spark, docs, str(tmp_path / "ref"), RunConfig("gf", n_buckets=8))
+    ref.run()
+    n_buckets, victim = 8, 0  # groups [0,1] [2,3] [4,5] [6,7]
+    kernel = runner_mod.extract_documents_with_metrics
+
+    def poisoned(df, cfg):
+        def fail_on_victim(batches):
+            for batch in batches:
+                if victim in batch.column("_b").to_pylist():
+                    raise RuntimeError(f"injected failure on bucket {victim}")
+                yield batch
+
+        tagged = df.withColumn("_b", bucket_col("doc_id", n_buckets))
+        return kernel(tagged.mapInArrow(fail_on_victim, tagged.schema).drop("_b"), cfg)
+
+    out = str(tmp_path / "out")
+    cfg = RunConfig("gf", n_buckets=n_buckets, buckets_per_commit=2)
+    monkeypatch.setattr(runner_mod, "extract_documents_with_metrics", poisoned)
+    run = ExtractionRun(spark, docs, out, cfg)
+    with pytest.raises(Exception, match=f"injected failure on bucket {victim}"):
+        run.run()
+    monkeypatch.undo()
+
+    assert run.done_buckets() == set(range(2, 8))
+    want = _records(ref)
+    assert _records(run) == {b: want[b] for b in range(2, 8)}
+    assert not any(os.path.exists(f"{out}/bucket={b}") for b in (0, 1))
+    assert _nested_rows(run.output().select("doc_id", "spans")) == _nested_rows(
+        ref.output().where(~F.col("bucket").isin(0, 1)).select("doc_id", "spans")
+    )
+
+    resumed = ExtractionRun(spark, docs, out, cfg)
+    assert resumed.run()["buckets_done"] == 8
+    assert _records(resumed) == want
+    assert _nested_rows(resumed.output().select("doc_id", "spans")) == _nested_rows(
+        ref.output().select("doc_id", "spans")
+    )
+
+
+def test_run_never_reads_its_own_output(spark, docs, tmp_path, monkeypatch):
+    """Lineage counts come from the write itself: a default run
+    succeeds with every parquet read of its output table refused,
+    and its records equal an unguarded run's."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    ref = ExtractionRun(spark, docs, str(tmp_path / "ref"), RunConfig("nr", n_buckets=8))
+    ref.run()
+
+    out = str(tmp_path / "out")
+    read = DataFrameReader.parquet
+
+    def guarded(self, *paths, **options):
+        for p in paths:
+            rel = os.path.relpath(str(p), out)
+            if not rel.startswith("..") and not rel.startswith("_staging"):
+                raise AssertionError(f"run read its own output: {p}")
+        return read(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", guarded)
+    run = ExtractionRun(spark, docs, out, RunConfig("nr", n_buckets=8))
+    assert run.run()["n_docs"] == 500
+    monkeypatch.undo()
+    assert _records(run) == _records(ref)
