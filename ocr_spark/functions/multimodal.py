@@ -26,6 +26,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.pipeline.session import settle_python_worker
+
 MEDIA_KINDS = ("image", "audio", "video")
 FEATURE_DIM = 16
 FPS = 4  # frame-sampling rate for the video schedule
@@ -624,6 +626,7 @@ def decoded_image_stats(media: DataFrame) -> DataFrame:
     tiny (ref, 6 ints) rows leave the scan stage."""
 
     def stats(batches):
+        settle_python_worker()
         for b in batches:
             refs = b.column("media_ref").to_pylist()
             blobs = b.column("data").to_pylist()
@@ -754,6 +757,7 @@ def decoded_audio_stats(media: DataFrame) -> DataFrame:
     aggregate stats (int64 — no float drift vs the oracle)."""
 
     def stats(batches):
+        settle_python_worker()
         for b in batches:
             refs = b.column("media_ref").to_pylist()
             blobs = b.column("data").to_pylist()
@@ -849,6 +853,7 @@ def image_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     torch session invoked once per Arrow batch)."""
 
     def featurize(batches):
+        settle_python_worker()
         for b in batches:
             refs = b.column("media_ref")
             data = b.column("data")

@@ -24,12 +24,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.pipeline.session import settle_python_worker
+
 
 def _nfc_udf():
     # created lazily: the pandas_udf decorator needs an active Spark
     # session, and this module must stay importable without one
     @F.pandas_udf("string")
     def nfc(s: pd.Series) -> pd.Series:
+        settle_python_worker()
         return s.str.normalize("NFC")
 
     return nfc

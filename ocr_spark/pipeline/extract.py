@@ -19,6 +19,15 @@ or the span order invariant dies):
   holds a bounded number of docs, and each batch is re-sliced to at
   most MAX_SPANS_PER_KERNEL_CALL spans per kernel call.
 
+What a Python task costs: on this stack the fixed per-task set-up of
+a Python worker, not the Arrow transfer, dominates the boundary. A
+reused worker re-parses every zip archive on its path (pyspark.zip,
+the py4j zip, the spark-core jar, a --py-files zip) and collects the
+whole module heap between tasks: 0.2-0.5 s per task, more than the
+kernel and the transfer of a typical task together. The UDF body in
+_run_kernel calls session.settle_python_worker() first, which removes
+both costs after a worker's first task.
+
 At 100 TB the same plan holds: the scan is parquet/Iceberg with doc_id
 bucketing, extraction itself adds no shuffle (any repartition is the
 caller's), and the UDF is embarrassingly parallel.
@@ -31,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark.kernel import arrow_extract as ak
 from ocr_spark.kernel.extract import DEFAULT_CONFIG, PARITY_CONFIG, ExtractConfig
+from ocr_spark.pipeline.session import settle_python_worker
 from ocr_spark.schema import (
     ANNOTATED_SPAN_SCHEMA,
     DOC_METRICS_SCHEMA,
@@ -63,7 +73,9 @@ def _subslice_batches(batches, max_spans: int):
     """Yield zero-copy row-slices of each RecordBatch such that every
     slice holds <= max_spans total spans (single giant docs still go
     through alone — the kernel is linear in spans, so one doc is the
-    floor)."""
+    floor). Greedy: a slice takes docs while its span total stays <=
+    max_spans; one Python step per emitted slice, none per doc."""
+    import numpy as np
     import pyarrow.compute as pc
 
     for b in batches:
@@ -75,18 +87,20 @@ def _subslice_batches(batches, max_spans: int):
         if lens.sum() <= max_spans:
             yield b
             continue
-        start, acc = 0, 0
-        for i, n in enumerate(lens):
-            if acc + n > max_spans and i > start:
-                yield b.slice(start, i - start)
-                start, acc = i, 0
-            acc += int(n)
-        if start < b.num_rows:
-            yield b.slice(start, b.num_rows - start)
+        # ends[k] = spans in docs [0, k); a slice from `start` ends
+        # before the first doc that would push it past max_spans
+        ends = np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
+        start = 0
+        while start < b.num_rows:
+            over = int(np.searchsorted(ends, ends[start] + max_spans, side="right"))
+            stop = max(over - 1, start + 1)
+            yield b.slice(start, stop - start)
+            start = stop
 
 
 def _run_kernel(df: DataFrame, arrow_fn, schema, cfg: ExtractConfig) -> DataFrame:
     def apply(batches):
+        settle_python_worker()
         for b in _subslice_batches(batches, MAX_SPANS_PER_KERNEL_CALL):
             yield arrow_fn(b, cfg)
 

@@ -260,6 +260,62 @@ def test_subslice_batches_identical_results(spark, hostile_docs):
     assert flat_sliced == flat_full
 
 
+def _subslice_loop_oracle(batches, max_spans: int):
+    """The per-document greedy loop _subslice_batches replaced."""
+    import pyarrow.compute as pc
+
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        lens = pc.fill_null(pc.list_value_length(b.column("spans")), 0).to_numpy(
+            zero_copy_only=False
+        )
+        if lens.sum() <= max_spans:
+            yield b
+            continue
+        start, acc = 0, 0
+        for i, n in enumerate(lens):
+            if acc + n > max_spans and i > start:
+                yield b.slice(start, i - start)
+                start, acc = i, 0
+            acc += int(n)
+        if start < b.num_rows:
+            yield b.slice(start, b.num_rows - start)
+
+
+def test_subslice_batches_match_the_loop_oracle():
+    """Same slice boundaries as the per-document loop: empty and NULL
+    span arrays, docs over the cap (alone), batches at or under the
+    cap (whole)."""
+    import numpy as np
+
+    from ocr_spark.pipeline.extract import _subslice_batches
+
+    def bounds(slices):
+        return [(s.column("i")[0].as_py(), s.num_rows) for s in slices]
+
+    rng = np.random.default_rng(11)
+    batches = []
+    for n_rows in (0, 1, 2, 7, 64, 300):
+        lens = rng.integers(0, 12, n_rows)
+        lens[rng.random(n_rows) < 0.2] = 0
+        lens[rng.random(n_rows) < 0.05] = 90  # over every cap below
+        spans = [
+            None if (n == 0 and k % 3 == 0) else [{"offset": j} for j in range(n)]
+            for k, n in enumerate(lens)
+        ]
+        batches.append(
+            pa.RecordBatch.from_pydict({"i": list(range(n_rows)), "spans": spans})
+        )
+    n_sliced = 0
+    for cap in (1, 5, 16, 40, 89, 90, 10**6):
+        for b in batches:
+            want = bounds(_subslice_loop_oracle([b], cap))
+            assert bounds(_subslice_batches([b], cap)) == want, (cap, b.num_rows)
+            n_sliced += len(want) > 1
+    assert n_sliced > 10
+
+
 def test_block_density_filter(spark):
     """min_block_chars drops sparse body blocks whole; headers/media
     survive; the kernel agrees with the pandas spec."""

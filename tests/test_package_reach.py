@@ -152,3 +152,79 @@ def test_no_file_hardcodes_the_checkout_path():
         if REPO in open(path, encoding="utf-8").read()
     )
     assert not offenders, f"files naming the checkout path {REPO}: {offenders}"
+
+
+# Calls that ship a Python function to the workers, and the decorators
+# that make one a UDF.
+_UDF_METHODS = {"mapInArrow", "mapInPandas", "applyInArrow", "applyInPandas"}
+_UDF_DECORATORS = {"pandas_udf", "udf"}
+
+
+def _callee_name(node) -> str | None:
+    if isinstance(node, ast.Call):
+        node = node.func
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.Name):
+        return node.id
+    return None
+
+
+def _settles_first(fn) -> bool:
+    body = fn.body
+    if (
+        len(body) > 1
+        and isinstance(body[0], ast.Expr)
+        and isinstance(body[0].value, ast.Constant)
+        and isinstance(body[0].value.value, str)
+    ):
+        body = body[1:]  # docstring
+    first = body[0]
+    return (
+        isinstance(first, ast.Expr)
+        and isinstance(first.value, ast.Call)
+        and _callee_name(first.value) == "settle_python_worker"
+    )
+
+
+def test_every_udf_body_settles_the_worker_first():
+    """Every function under ocr_spark/ that runs in a Python worker
+    (passed to mapInArrow and its kin, or decorated as a UDF) calls
+    ``session.settle_python_worker()`` as its first statement; without
+    it each task of a reused worker re-reads every zip archive on the
+    path and garbage-collects the whole module heap."""
+    sites, offenders = set(), []
+    for path in sorted(_package_modules().values()):
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        rel = os.path.relpath(path, REPO)
+        defs: dict[str, list] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(node.name, []).append(node)
+        udfs = []  # a name bound by several defs checks them all
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and any(
+                _callee_name(d) in _UDF_DECORATORS for d in node.decorator_list
+            ):
+                udfs.append(node)
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _UDF_METHODS
+            ):
+                arg = node.args[0] if node.args else None
+                if not isinstance(arg, ast.Name) or arg.id not in defs:
+                    offenders.append(f"{rel}:{node.lineno} (not a named def)")
+                    continue
+                udfs.extend(defs[arg.id])
+        for fn in udfs:
+            site = f"{rel}:{fn.lineno} {fn.name}"
+            if site not in sites:
+                sites.add(site)
+                if not _settles_first(fn):
+                    offenders.append(site)
+    assert sites, "no UDF found: the scan is broken"
+    assert not offenders, (
+        "UDF bodies that do not call settle_python_worker() first: "
+        f"{offenders}"
+    )
