@@ -21,9 +21,9 @@ rewrite_data_files; this is the parquet-layout twin):
 - rows are bit-identical before/after: compaction moves bytes, never
   values, and never re-buckets (the partition VALUE is the identity).
 
-Uses the Hadoop FileSystem API through the live JVM so the same code
-paths work on hdfs:///s3a:// in a real deployment, not just local
-disk.
+Lists through the storage layer (``ocr_spark.pipeline.storage``, the
+Hadoop FileSystem API through the live JVM) so the same code paths
+work on hdfs:///s3a:// in a real deployment, not just local disk.
 
 Example:
   spark-submit --py-files dist/ocr_spark.zip jobs/compact.py \\
@@ -37,31 +37,24 @@ import json
 import math
 
 
-def plan_compaction(spark, path: str, target_bytes: int):
-    """[(bucket_dir, n_files, n_bytes, ideal_files)] for buckets whose
-    layout is worse than ideal. Pure metadata; no data is read."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    plans = []
-    if not fs.exists(p):
+def plan_compaction(spark, path: str, target_bytes: int) -> list[dict]:
+    """The buckets whose layout is worse than ideal, with their file
+    count, bytes and ideal file count. Pure metadata; no data is read."""
+    from ocr_spark.pipeline.storage import FileStore
+
+    store = FileStore(path, spark)
+    if not store.exists(path):
         raise SystemExit(f"no such table path: {path}")
-    for st in fs.listStatus(p):
-        if not st.isDirectory():
-            continue
-        name = st.getPath().getName()
+    plans = []
+    for name in store.list_dirs(path):
         if not name.startswith("bucket="):
             continue
-        files = [
-            f
-            for f in fs.listStatus(st.getPath())
-            if f.isFile() and f.getPath().getName().endswith(".parquet")
-        ]
-        n_bytes = sum(f.getLen() for f in files)
-        ideal = max(1, math.ceil(n_bytes / target_bytes))
-        if len(files) > ideal:
-            plans.append((name, len(files), n_bytes, ideal))
+        sizes = [n for f, n in store.list_files(f"{path}/{name}").items() if f.endswith(".parquet")]
+        ideal = max(1, math.ceil(sum(sizes) / target_bytes))
+        if len(sizes) > ideal:
+            plans.append(
+                {"bucket": name, "files": len(sizes), "bytes": sum(sizes), "ideal_files": ideal}
+            )
     return plans
 
 
@@ -82,35 +75,27 @@ def main() -> None:
     plans = plan_compaction(spark, args.path, target)
 
     rewritten = []
-    if not args.dry_run:
-        for name, n_files, n_bytes, ideal in plans:
-            k = int(name.split("=", 1)[1])
-            part = spark.read.parquet(f"{args.path}/{name}")
-            # coalesce, not repartition: a narrow merge of splits with
-            # no shuffle; the rows already belong to this bucket
-            (
-                part.coalesce(ideal)
-                .selectExpr("*", f"CAST({k} AS INT) AS bucket")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(args.path)
-            )
-            rewritten.append(name)
+    for plan in [] if args.dry_run else plans:
+        name = plan["bucket"]
+        k = int(name.split("=", 1)[1])
+        part = spark.read.parquet(f"{args.path}/{name}")
+        # coalesce, not repartition: a narrow merge of splits with
+        # no shuffle; the rows already belong to this bucket
+        (
+            part.coalesce(plan["ideal_files"])
+            .selectExpr("*", f"CAST({k} AS INT) AS bucket")
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(args.path)
+        )
+        rewritten.append(name)
 
     print(
         json.dumps(
             {
                 "job": "compact",
-                "planned": [
-                    {
-                        "bucket": name,
-                        "files": n_files,
-                        "bytes": n_bytes,
-                        "ideal_files": ideal,
-                    }
-                    for name, n_files, n_bytes, ideal in plans
-                ],
+                "planned": plans,
                 "rewritten": rewritten,
                 "target_mb": args.target_mb,
                 "dry_run": bool(args.dry_run),

@@ -172,15 +172,16 @@ def _write_span_sidecars(spark, args, docs, summary: dict) -> int:
     # was cut under, a later audit with the wrong cost is
     # indistinguishable from corruption (the bloom (m_bits, k)
     # metadata precedent)
-    with open(f"{args.emit_chunks}/chunks_meta.json", "w") as fh:
-        json.dump(
-            {
-                "chunk_cost": args.chunk_cost,
-                "chunk_tokens": args.chunk_tokens,
-                "media_token_cost": media_cost,
-            },
-            fh,
-        )
+    from ocr_spark.pipeline.storage import FileStore
+
+    FileStore(args.emit_chunks, spark).write_json(
+        f"{args.emit_chunks}/chunks_meta.json",
+        {
+            "chunk_cost": args.chunk_cost,
+            "chunk_tokens": args.chunk_tokens,
+            "media_token_cost": media_cost,
+        },
+    )
     summary["chunk_cost"] = args.chunk_cost
     summary["n_span_chunks"] = spark.read.parquet(out).count()
     if args.pack_slots:

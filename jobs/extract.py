@@ -64,9 +64,9 @@ def main() -> None:
         help="record an order-insensitive content checksum per bucket "
         "in the lineage, then byte-audit the finished table against "
         "those records (verify_output; mismatched buckets fail the job "
-        "and are listed in the summary). Costs one extra full read of "
-        "each group's freshly-written output plus one audit scan, no "
-        "extra shuffle",
+        "and are listed in the summary). Costs a hash of each row as it "
+        "is written plus the one audit scan of verify_output, no extra "
+        "shuffle",
     )
     ap.add_argument("--master", default=None, help="override master URL")
     args = ap.parse_args()

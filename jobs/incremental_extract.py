@@ -37,43 +37,6 @@ import argparse
 import json
 
 
-def _rename(fs, src, dst) -> None:
-    # Hadoop FileSystem.rename reports failure by returning False,
-    # not by raising
-    if not fs.rename(src, dst):
-        raise RuntimeError(f"state rename {src} -> {dst} failed")
-
-
-def recover_state(fs, jpath, jold) -> bool:
-    """True when hash state is live at ``jpath``, after recovering it
-    from the aside copy ``jold`` if a crash landed between the publish
-    renames (live state moved aside, new state not yet renamed in) —
-    so the run stays incremental instead of silently re-extracting
-    the full corpus."""
-    if fs.exists(jpath):
-        return True
-    if fs.exists(jold):
-        _rename(fs, jold, jpath)
-        return True
-    return False
-
-
-def publish_state(fs, jtmp, jpath, jold) -> None:
-    """Two-rename publish of the state written at ``jtmp``, never
-    delete-then-rename: the live state is moved ASIDE to ``jold`` (not
-    deleted) before the new state renames in, so no crash or failed
-    rename loses state entirely — a failure between the renames leaves
-    the complete aside copy, which :func:`recover_state` brings back.
-    The aside is removed only once the new state is live."""
-    if fs.exists(jold):
-        fs.delete(jold, True)  # leftover aside from a prior crash
-    if fs.exists(jpath):
-        _rename(fs, jpath, jold)
-    _rename(fs, jtmp, jpath)
-    if fs.exists(jpath) and fs.exists(jold):
-        fs.delete(jold, True)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="today's span-table parquet")
@@ -101,6 +64,7 @@ def main() -> None:
         incremental_extract,
     )
     from ocr_spark.pipeline.session import get_spark
+    from ocr_spark.pipeline.storage import FileStore, publish_state, recover_state
     from ocr_spark.sources.synth import synthesize_spans
 
     spark = get_spark(args.master, app_name="ocr_spark_incremental_extract")
@@ -109,11 +73,9 @@ def main() -> None:
         docs = synthesize_spans(docs)
 
     hashes_path = args.state.rstrip("/") + "/hashes"
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(hashes_path)  # type: ignore[union-attr]
-    jold = jvm.org.apache.hadoop.fs.Path(hashes_path + "._old")  # type: ignore[union-attr]
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    has_state = recover_state(fs, jpath, jold)
+    store = FileStore(hashes_path, spark)
+    jpath, jold = store.path(hashes_path), store.path(hashes_path + "._old")
+    has_state = recover_state(store.fs, jpath, jold)
 
     if has_state:
         if args.prev is None:
@@ -142,8 +104,7 @@ def main() -> None:
     )
     tmp_path = hashes_path + "._tmp"
     doc_input_hash(docs).write.mode("overwrite").parquet(tmp_path)
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp_path)  # type: ignore[union-attr]
-    publish_state(fs, jtmp, jpath, jold)
+    publish_state(store.fs, store.path(tmp_path), jpath, jold)
 
     print(
         json.dumps(

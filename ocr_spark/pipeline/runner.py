@@ -6,7 +6,9 @@ Unit of work = a doc_id hash bucket (the analog of the reference's
 per-page cursor). A run:
 
 1. writes a manifest once: (run_id, n_buckets, config snapshot) —
-   T1 job creation;
+   T1 job creation. Like every record and marker of the run, it is
+   written through the output path's Hadoop ``FileSystem``
+   (``pipeline.storage``), beside the table on any file system;
 2. processes pending buckets in commit groups; each group is ONE Spark
    job that writes ``bucket=<k>/`` parquet partitions (overwrite-by-
    partition discipline -> idempotent re-runs; the Iceberg analog is
@@ -25,13 +27,14 @@ per-page cursor). A run:
    (run_id, bucket, status, attempt, n_docs, n_spans_in, n_spans_out,
    parse_failures, wall_ms[, checksum60 with
    ``RunConfig.checksum_output``]) as a single JSON file per bucket —
-   the write is atomic (tmp + rename), so a crash mid-group leaves
+   the storage layer's write is atomic (tmp + rename; a failed rename
+   raises), so a crash mid-group leaves
    those buckets pending and the next invocation redoes exactly them —
    T2/T5 rollback-free retry; a failed group leaves only its own
    buckets pending. ``verify_output()`` byte-audits the table against
    the recorded checksums;
-4. ``resume()`` = skip buckets whose lineage record exists (the
-   anti-join against done work).
+4. resume = skip buckets whose lineage record exists (the anti-join
+   against done work): one listing of the lineage directory.
 
 Determinism guarantees idempotence: bucket assignment is a pure hash
 of doc_id, the kernel is deterministic, and output files are
@@ -44,9 +47,6 @@ bucket -> ``bucket(N, doc_id)`` partition transform.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
@@ -58,6 +58,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 from ocr_spark.kernel.extract import DEFAULT_CONFIG, ExtractConfig
 from ocr_spark.pipeline.extract import extract_documents_with_metrics, weight_partition
 from ocr_spark.pipeline.sinks import bucket_col
+from ocr_spark.pipeline.storage import FileStore
 from ocr_spark.schema import DOC_WITH_METRICS_SCHEMA
 
 # what the runner's parquet table holds: kernel output + the bucket
@@ -85,13 +86,10 @@ class RunConfig:
     # the input's partitioning.
     size_weighted_partitions: int | None = None
     # stage the input ONCE as bucket-partitioned parquet before the
-    # commit loop. Without staging every commit group re-scans the
-    # FULL input and filters to its buckets (the bucket is a derived
-    # hash — no pushdown can prune it), so a run with G commit groups
-    # reads the corpus G times: at 100 TB with G=16 that is 1.6 PB of
-    # scan for 100 TB of work. Staging costs one extra full
+    # commit loop (module docstring, step 2): one extra full
     # write+shuffle, after which each group's read partition-prunes to
-    # exactly its buckets — total I/O 2x the corpus instead of Gx.
+    # its buckets — total I/O 2x the corpus instead of one full scan
+    # per group (the bucket is a derived hash; no pushdown prunes it).
     # Leave False only when the run fits in one or two commit groups.
     stage_input: bool = False
     # record an order-insensitive content checksum per bucket in the
@@ -179,7 +177,13 @@ class ExtractionRun:
         self.out = output_dir.rstrip("/")
         self.cfg = cfg
         self.lineage_dir = f"{self.out}/_lineage/{cfg.run_id}"
-        os.makedirs(self.lineage_dir, exist_ok=True)
+        # underscore prefix: Spark's file listing skips _-prefixed
+        # paths, so the staging tree inside the output dir is invisible
+        # to verify_output()'s read and to output()
+        self._staging_dir = f"{self.out}/_staging/{cfg.run_id}"
+        self._stage_marker = f"{self.lineage_dir}/staged.json"
+        self._abort_marker = f"{self.lineage_dir}/aborted.json"
+        self.store = FileStore(self.out, spark)
 
     # -- T1: manifest ------------------------------------------------------
     def write_manifest(self) -> None:
@@ -189,26 +193,6 @@ class ExtractionRun:
         e.g. a different n_buckets would skip buckets that now hold
         different docs and silently corrupt the table."""
         path = f"{self.lineage_dir}/manifest.json"
-        if os.path.exists(path):
-            with open(path) as f:
-                stored = json.load(f)
-            current = {
-                "n_buckets": self.cfg.n_buckets,
-                "kernel": asdict(self.cfg.kernel),
-                "input_config": self.cfg.input_config,
-            }
-            recorded = {
-                "n_buckets": stored.get("n_buckets"),
-                "kernel": stored.get("kernel"),
-                "input_config": stored.get("input_config"),
-            }
-            if current != recorded:
-                raise ValueError(
-                    f"run '{self.cfg.run_id}' was created with {recorded}; "
-                    f"resuming with {current} would corrupt the output — "
-                    "use a new run_id (or cleanup_orphan_runs) to reprocess"
-                )
-            return  # resume: manifest is immutable per run_id
         manifest = {
             "run_id": self.cfg.run_id,
             "n_buckets": self.cfg.n_buckets,
@@ -216,63 +200,57 @@ class ExtractionRun:
             "kernel": asdict(self.cfg.kernel),
             "input_config": self.cfg.input_config,
         }
-        self._atomic_write(path, json.dumps(manifest, indent=2))
+        if not self.store.exists(path):
+            self.store.write_json(path, manifest, indent=2)
+            return
+        # resume: the manifest is immutable per run_id
+        stored = self.store.read_json(path)
+        pinned = ("n_buckets", "kernel", "input_config")
+        current = {k: manifest[k] for k in pinned}
+        recorded = {k: stored.get(k) for k in pinned}
+        if current != recorded:
+            raise ValueError(
+                f"run '{self.cfg.run_id}' was created with {recorded}; "
+                f"resuming with {current} would corrupt the output — "
+                "use a new run_id (or cleanup_orphan_runs) to reprocess"
+            )
 
     # -- lineage ----------------------------------------------------------
     def _record_path(self, bucket: int) -> str:
         return f"{self.lineage_dir}/bucket-{bucket:05d}.json"
 
-    def done_buckets(self) -> set[int]:
-        done = set()
-        for b in range(self.cfg.n_buckets):
-            p = self._record_path(b)
-            if os.path.exists(p):
-                with open(p) as f:
-                    if json.load(f).get("status") == "done":
-                        done.add(b)
-        return done
+    def _records(self) -> dict[int, dict]:
+        """bucket -> record of every done bucket, from one listing (the
+        manifest, markers, ``.crc``s and ``.tmp`` leftovers are skipped)."""
+        recs = {}
+        for name in self.store.list_files(self.lineage_dir):
+            if name.startswith("bucket-") and name.endswith(".json"):
+                rec = self.store.read_json(f"{self.lineage_dir}/{name}")
+                if rec.get("status") == "done":
+                    recs[rec["bucket"]] = rec
+        return recs
 
-    def _atomic_write(self, path: str, content: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(content)
-        os.replace(tmp, path)
+    def done_buckets(self) -> set[int]:
+        return set(self._records())
 
     # -- input staging (opt-in, see RunConfig.stage_input) ------------------
-    def _staging_dir(self) -> str:
-        # underscore prefix: Spark's file listing skips _-prefixed
-        # paths, so the staging tree inside the output dir is invisible
-        # to verify_output()'s read and to output()
-        return f"{self.out}/_staging/{self.cfg.run_id}"
-
-    def _stage_marker(self) -> str:
-        return f"{self.lineage_dir}/staged.json"
-
     def _staged_docs(self) -> DataFrame:
         """Materialize the input as bucket-partitioned parquet once per
         run (resume skips it via the marker — same discipline as the
         bucket lineage records: the write is only trusted after the
         atomic marker write that follows it)."""
-        stg = self._staging_dir()
-        if not os.path.exists(self._stage_marker()):
+        if not self.store.exists(self._stage_marker):
             t0 = time.time()
             (
                 self.docs.withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
                 .repartition(self.cfg.n_buckets, "bucket")
                 .write.partitionBy("bucket")
                 .mode("overwrite")
-                .parquet(stg)
+                .parquet(self._staging_dir)
             )
-            self._atomic_write(
-                self._stage_marker(),
-                json.dumps(
-                    {
-                        "run_id": self.cfg.run_id,
-                        "n_buckets": self.cfg.n_buckets,
-                        "wall_ms": int((time.time() - t0) * 1000),
-                    }
-                ),
-            )
+            marker = {"run_id": self.cfg.run_id, "n_buckets": self.cfg.n_buckets}
+            marker["wall_ms"] = int((time.time() - t0) * 1000)
+            self.store.write_json(self._stage_marker, marker)
         # explicit schema (input schema + bucket partition col): an
         # EMPTY corpus stages as _SUCCESS-only with no parquet footers,
         # and inference would then throw on every resume (marker
@@ -281,7 +259,7 @@ class ExtractionRun:
         staged_schema = StructType(
             self.docs.schema.fields + [StructField("bucket", IntegerType(), True)]
         )
-        return self.spark.read.schema(staged_schema).parquet(stg)
+        return self.spark.read.schema(staged_schema).parquet(self._staging_dir)
 
     # -- T3/T4: process + commit ------------------------------------------
     def _input(self) -> DataFrame:
@@ -298,9 +276,7 @@ class ExtractionRun:
 
         bucket is a pure function of doc_id (sinks.bucket_col), so it is
         filtered on the input and recomputed on the kernel output with
-        a withColumn — the round-1 version re-attached it via a doc_id
-        join and ran a second kernel pass for metrics, doubling the
-        most expensive stage and adding two shuffles per commit.
+        a withColumn (no doc_id join, no second kernel pass).
 
         With ``stage_input`` the filter lands on a PARTITION column of
         the staged table (PartitionFilters in the scan — only the
@@ -323,10 +299,11 @@ class ExtractionRun:
             .where(F.col("bucket").isin(buckets))
         )
 
-    def _process_group(self, src: DataFrame, buckets: list[int], attempt: int) -> None:
+    def _process_group(self, src: DataFrame, buckets: list[int], attempt: int) -> dict[int, dict]:
         """One Spark job: write the group's ``bucket=<k>/`` partitions
         and collect their lineage counts on the way through
-        (``observe``), then write the lineage records."""
+        (``observe``), then write the lineage records. Returns them,
+        by bucket."""
         t0 = time.time()
         out = self._group_df(buckets, src).repartition(len(buckets), "bucket")
         cols = out.columns
@@ -347,6 +324,7 @@ class ExtractionRun:
         )
         m = obs.get
         wall_ms = int((time.time() - t0) * 1000)
+        recs = {}
         for b in buckets:
             rec = {"run_id": self.cfg.run_id, "bucket": b, "status": "done", "attempt": attempt}
             # a NULL sum is an empty bucket: 0, also for the checksum
@@ -356,23 +334,9 @@ class ExtractionRun:
             rec["wall_ms"] = wall_ms
             if self.cfg.checksum_output:
                 rec["checksum60"] = int(m[f"checksum60:{b}"] or 0)
-            self._atomic_write(self._record_path(b), json.dumps(rec))
-
-    def _bucket_metrics(self, buckets: list[int]) -> list:
-        """(bucket, n_docs, checksum60) re-derived from the files on
-        disk — the audit side of :meth:`verify_output`."""
-        from ocr_spark.functions.audit import checksum_agg
-
-        return (
-            self.spark.read.schema(OUTPUT_SCHEMA).parquet(self.out)
-            .where(F.col("bucket").isin(buckets))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                checksum_agg(_row_checksum60()).alias("checksum60"),
-            )
-            .collect()
-        )
+            self.store.write_json(self._record_path(b), rec)
+            recs[b] = rec
+        return recs
 
     def verify_output(self) -> list[int]:
         """Byte-audit the written table against its lineage: re-derive
@@ -383,40 +347,39 @@ class ExtractionRun:
         ``checksum_output=True``; records without a checksum are
         skipped — they predate the flag and can't be audited. One scan
         of the audited buckets, one partial-agg shuffle."""
-        recorded = {}
-        for b in sorted(self.done_buckets()):
-            with open(self._record_path(b)) as f:
-                rec = json.load(f)
-            if "checksum60" in rec:
-                recorded[b] = (rec["checksum60"], rec["n_docs"])
+        from ocr_spark.functions.audit import checksum_agg
+
+        recorded = {
+            b: (rec["checksum60"], rec["n_docs"])
+            for b, rec in self._records().items()
+            if "checksum60" in rec
+        }
         if not recorded:
             return []
-        actual = {
-            r.bucket: (int(r.checksum60), int(r.n_docs))
-            for r in self._bucket_metrics(sorted(recorded))
-        }
-        return sorted(
-            b for b, want in recorded.items()
-            if actual.get(b, (0, 0)) != want
+        rows = (
+            self.spark.read.schema(OUTPUT_SCHEMA).parquet(self.out)
+            .where(F.col("bucket").isin(sorted(recorded)))
+            .groupBy("bucket")
+            .agg(
+                F.count("*").alias("n_docs"),
+                checksum_agg(_row_checksum60()).alias("checksum60"),
+            )
+            .collect()
         )
+        actual = {r.bucket: (int(r.checksum60), int(r.n_docs)) for r in rows}
+        return sorted(b for b, want in recorded.items() if actual.get(b, (0, 0)) != want)
 
     # -- T6: cancel / cleanup ---------------------------------------------
-    def _abort_path(self) -> str:
-        return f"{self.lineage_dir}/aborted.json"
-
     def abort(self, reason: str = "") -> None:
         """T6 run-abort (reference cancel analog,
         /root/reference/webapp/jobs.py:293-321): mark the run aborted.
         Committed buckets keep their lineage (idempotent output is
         already durable); pending buckets stay pending. The next
         ``run()`` on this run_id clears the marker and resumes."""
-        self._atomic_write(
-            self._abort_path(),
-            json.dumps({"run_id": self.cfg.run_id, "reason": reason}),
-        )
+        self.store.write_json(self._abort_marker, {"run_id": self.cfg.run_id, "reason": reason})
 
     def is_aborted(self) -> bool:
-        return os.path.exists(self._abort_path())
+        return self.store.exists(self._abort_marker)
 
     # -- T2/T5: run with resume -------------------------------------------
     def run(self, fail_after_groups: int | None = None) -> dict:
@@ -427,11 +390,11 @@ class ExtractionRun:
         mid-run crash: groups from that index on fail before they
         write. Returns the run summary."""
         self.write_manifest()
-        if self.is_aborted():
-            os.remove(self._abort_path())  # resuming an aborted run
-        done = self.done_buckets()
-        pending = [b for b in range(self.cfg.n_buckets) if b not in done]
-        attempt = 1 if not done else 2
+        self.store.delete(self._abort_marker)  # resuming an aborted run
+        # the lineage is read once: later records are the groups' own
+        recs = self._records()
+        pending = [b for b in range(self.cfg.n_buckets) if b not in recs]
+        attempt = 1 if not recs else 2
         groups = [
             pending[i : i + self.cfg.buckets_per_commit]
             for i in range(0, len(pending), self.cfg.buckets_per_commit)
@@ -441,10 +404,10 @@ class ExtractionRun:
         # the groups would have every group in flight stage at once
         src = self._input() if groups[:n_ok] else None
 
-        def commit(gi: int, group: list[int]) -> None:
+        def commit(gi: int, group: list[int]) -> dict[int, dict]:
             if gi >= n_ok:
                 raise RuntimeError(f"simulated crash before group {gi}")
-            self._process_group(src, group, attempt)
+            return self._process_group(src, group, attempt)
 
         # the default FIFO scheduler runs the earliest group's tasks
         # first; later groups fill the cores its planning, straggler
@@ -455,27 +418,17 @@ class ExtractionRun:
         for f in futures:
             if f.exception() is not None:
                 raise f.exception()
+            recs.update(f.result())
         # run complete: the staged copy is scratch space — GC it (and
         # its marker, so a hypothetical later re-stage starts clean)
-        if self.cfg.stage_input and len(self.done_buckets()) == self.cfg.n_buckets:
-            shutil.rmtree(self._staging_dir(), ignore_errors=True)
-            if os.path.exists(self._stage_marker()):
-                os.remove(self._stage_marker())
-        return self.summary()
-
-    def summary(self) -> dict:
-        recs = []
-        for b in sorted(self.done_buckets()):
-            with open(self._record_path(b)) as f:
-                recs.append(json.load(f))
+        if self.cfg.stage_input and len(recs) == self.cfg.n_buckets:
+            self.store.delete(self._staging_dir)
+            self.store.delete(self._stage_marker)
         return {
             "run_id": self.cfg.run_id,
             "buckets_done": len(recs),
             "n_buckets": self.cfg.n_buckets,
-            "n_docs": sum(r["n_docs"] for r in recs),
-            "n_spans_in": sum(r["n_spans_in"] for r in recs),
-            "n_spans_out": sum(r["n_spans_out"] for r in recs),
-            "parse_failures": sum(r["parse_failures"] for r in recs),
+            **{k: sum(r[k] for r in recs.values()) for k in ("n_docs", *_SUMS)},
         }
 
     def output(self) -> DataFrame:
@@ -484,10 +437,7 @@ class ExtractionRun:
 
 def list_runs(output_dir: str) -> list[str]:
     """run_ids with lineage state under ``output_dir``."""
-    root = f"{output_dir.rstrip('/')}/_lineage"
-    if not os.path.isdir(root):
-        return []
-    return sorted(d for d in os.listdir(root) if os.path.isdir(f"{root}/{d}"))
+    return FileStore(output_dir).list_dirs(f"{output_dir.rstrip('/')}/_lineage")
 
 
 def cleanup_orphan_runs(output_dir: str, keep: set[str] | frozenset[str]) -> list[str]:
@@ -497,14 +447,15 @@ def cleanup_orphan_runs(output_dir: str, keep: set[str] | frozenset[str]) -> lis
     touched — lineage dirs are bookkeeping; output partitions are owned
     by whichever run last committed them (idempotent overwrite-by-
     partition). Returns the removed run_ids."""
+    store = FileStore(output_dir)
     removed = []
     root = f"{output_dir.rstrip('/')}/_lineage"
     stg_root = f"{output_dir.rstrip('/')}/_staging"
     for run_id in list_runs(output_dir):
         if run_id not in keep:
-            shutil.rmtree(f"{root}/{run_id}")
+            store.delete(f"{root}/{run_id}")
             # a crashed staged run leaves its bucket-partitioned input
             # copy behind — scratch space, GC'd with the lineage
-            shutil.rmtree(f"{stg_root}/{run_id}", ignore_errors=True)
+            store.delete(f"{stg_root}/{run_id}")
             removed.append(run_id)
     return removed

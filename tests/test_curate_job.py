@@ -781,9 +781,11 @@ def test_curate_integrity_gate_clean_corpus_is_noop(spark, tmp_path):
     assert spark.read.parquet(out).count() > 0
 
 
-def test_curate_emit_chunks(spark, tmp_path):
+def test_curate_emit_chunks(spark, tmp_path, monkeypatch):
     """--emit-chunks writes the chunk_interleaved sidecar over the
-    input span table, equal to the operator applied directly."""
+    input span table, equal to the operator applied directly, and its
+    chunks_meta.json beside it — also when the directory is given as
+    a file:// URI."""
     from ocr_spark.functions.interleave import chunk_interleaved
 
     inp = str(tmp_path / "in")
@@ -794,13 +796,16 @@ def test_curate_emit_chunks(spark, tmp_path):
         ("d2", [("text", "one two", "", 0)]),
     ]
     spark.createDataFrame(rows, _NESTED_SCHEMA).write.parquet(inp)
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
     s = _run_main(
         [
             "curate.py",
             "--input", inp,
             "--output", out,
             "--min-quality", "0",
-            "--emit-chunks", chunks_dir,
+            "--emit-chunks", f"file://{chunks_dir}",
             "--chunk-tokens", "4",
             "--media-token-cost", "3",
         ]
@@ -810,6 +815,11 @@ def test_curate_emit_chunks(spark, tmp_path):
         spark.read.parquet(inp), max_tokens=4, media_token_cost=3
     ).collect()))
     assert got == want and s["n_span_chunks"] == len(got)
+    with open(f"{chunks_dir}/chunks_meta.json") as fh:
+        assert json.load(fh) == {
+            "chunk_cost": "ws", "chunk_tokens": 4, "media_token_cost": 3
+        }
+    assert os.listdir(cwd) == []
 
 
 def test_curate_pack_slots(spark, tmp_path):

@@ -188,7 +188,7 @@ class _FakeFs:
 def test_publish_state_failed_rename_keeps_aside_state():
     """A False from the tmp -> live rename must raise, and the aside
     copy (the complete previous state) must survive for recovery."""
-    from jobs.incremental_extract import publish_state, recover_state
+    from ocr_spark.pipeline.storage import publish_state, recover_state
 
     fs = _FakeFs({"h": "day0", "h._tmp": "day1"}, failing_renames={("h._tmp", "h")})
     with pytest.raises(RuntimeError, match="rename"):
@@ -201,7 +201,7 @@ def test_publish_state_failed_rename_keeps_aside_state():
 
 
 def test_publish_state_failed_aside_rename_keeps_live_state():
-    from jobs.incremental_extract import publish_state
+    from ocr_spark.pipeline.storage import publish_state
 
     fs = _FakeFs({"h": "day0", "h._tmp": "day1"}, failing_renames={("h", "h._old")})
     with pytest.raises(RuntimeError, match="rename"):
@@ -210,7 +210,7 @@ def test_publish_state_failed_aside_rename_keeps_live_state():
 
 
 def test_recover_state_failed_rename_raises():
-    from jobs.incremental_extract import recover_state
+    from ocr_spark.pipeline.storage import recover_state
 
     fs = _FakeFs({"h._old": "day0"}, failing_renames={("h._old", "h")})
     with pytest.raises(RuntimeError, match="rename"):

@@ -154,6 +154,31 @@ def test_no_file_hardcodes_the_checkout_path():
     assert not offenders, f"files naming the checkout path {REPO}: {offenders}"
 
 
+def test_hadoop_fs_is_named_only_in_the_storage_module():
+    """Run bookkeeping has one storage layer: of the package and job
+    files only ``pipeline/storage.py`` names ``org.apache.hadoop.fs``."""
+    naming = {
+        os.path.relpath(path, REPO)
+        for pattern in (f"{PKG}/**/*.py", "jobs/*.py")
+        for path in glob.glob(os.path.join(REPO, pattern), recursive=True)
+        if "org.apache.hadoop.fs" in open(path, encoding="utf-8").read()
+    }
+    storage = os.path.join(PKG, "pipeline", "storage.py")
+    assert naming == {storage}, f"files naming org.apache.hadoop.fs: {sorted(naming)}"
+
+
+def test_runner_imports_neither_os_nor_shutil():
+    """The runner's manifest, lineage and markers go through the
+    storage layer, never through local-disk calls."""
+    path = os.path.join(REPO, PKG, "pipeline", "runner.py")
+    local = sorted(
+        name
+        for name in _imported_names(path, f"{PKG}.pipeline.runner", False)
+        if name.split(".")[0] in ("os", "shutil")
+    )
+    assert not local, f"pipeline/runner.py imports {local}"
+
+
 # Calls that ship a Python function to the workers, and the decorators
 # that make one a UDF.
 _UDF_METHODS = {"mapInArrow", "mapInPandas", "applyInArrow", "applyInPandas"}

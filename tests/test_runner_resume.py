@@ -594,3 +594,72 @@ def test_run_never_reads_its_own_output(spark, docs, tmp_path, monkeypatch):
     assert run.run()["n_docs"] == 500
     monkeypatch.undo()
     assert _records(run) == _records(ref)
+
+
+# ---------------------------------------------------------------------------
+# bookkeeping through the storage layer
+# ---------------------------------------------------------------------------
+
+
+def test_file_uri_output_keeps_lineage_beside_the_table(spark, docs, tmp_path, monkeypatch):
+    """An output given as a ``file://`` URI: the manifest and the
+    bucket records land under the output path, not under a literal
+    ``file:`` directory in the working directory, and the same run_id
+    started from another directory resumes as a no-op."""
+    out = tmp_path / "out"
+    lineage = out / "_lineage" / "fu"
+    cfg = RunConfig("fu", n_buckets=4)
+
+    def records():
+        return {b: json.loads((lineage / f"bucket-{b:05d}.json").read_text()) for b in range(4)}
+
+    first, second = tmp_path / "cwd1", tmp_path / "cwd2"
+    first.mkdir()
+    second.mkdir()
+    monkeypatch.chdir(first)
+    ExtractionRun(spark, docs, f"file://{out}", cfg).run()
+    assert (lineage / "manifest.json").is_file()
+    before = records()
+    assert "file:" not in os.listdir(first)
+
+    monkeypatch.chdir(second)
+    s = ExtractionRun(spark, docs, f"file://{out}", cfg).run()
+    assert s["buckets_done"] == 4 and s["n_docs"] == 500
+    assert records() == before  # wall_ms included: nothing re-ran
+    assert "file:" not in os.listdir(second)
+
+
+def test_failed_record_rename_leaves_its_bucket_pending(spark, docs, tmp_path, monkeypatch):
+    """Hadoop's rename reports failure by returning False. When the
+    rename of one bucket's lineage record does, its group raises, that
+    bucket stays pending (its ``.tmp`` leftover is not a record), and
+    the next run() completes it."""
+    from ocr_spark.pipeline import storage
+
+    rename = storage._rename
+
+    class _RefusingFs:
+        def rename(self, src, dst):
+            return False
+
+    def flaky(fs, src, dst):
+        refuse = src.getName() == "bucket-00001.json.tmp"
+        return rename(_RefusingFs() if refuse else fs, src, dst)
+
+    cfg = RunConfig("rf", n_buckets=4, buckets_per_commit=2)
+    ref = ExtractionRun(spark, docs, str(tmp_path / "ref"), cfg)
+    ref.run()
+    run = ExtractionRun(spark, docs, str(tmp_path / "out"), cfg)
+    monkeypatch.setattr(storage, "_rename", flaky)
+    with pytest.raises(RuntimeError, match="rename"):
+        run.run()
+    monkeypatch.undo()
+
+    assert run.done_buckets() == {0, 2, 3}
+    assert os.path.exists(run._record_path(1) + ".tmp")
+    assert not os.path.exists(run._record_path(1))
+    assert run.run()["buckets_done"] == 4
+    assert _records(run) == _records(ref)
+    assert _nested_rows(run.output().select("doc_id", "spans")) == _nested_rows(
+        ref.output().select("doc_id", "spans")
+    )
