@@ -100,24 +100,6 @@ def main() -> None:
     )
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
-    import os.path
-
-    if (
-        args.save_index
-        and args.against_index
-        and os.path.realpath(args.save_index) == os.path.realpath(args.against_index)
-    ):
-        # Spark reads lazily: overwriting the index dir while the merge
-        # still scans it corrupts both. Write to a fresh dir and swap.
-        # realpath: trailing slashes / relative paths / symlinks must
-        # not sneak past the guard.
-        ap.error("--save-index must differ from --against-index")
-    if (
-        args.save_bloom
-        and args.against_bloom
-        and os.path.realpath(args.save_bloom) == os.path.realpath(args.against_bloom)
-    ):
-        ap.error("--save-bloom must differ from --against-bloom")
     if not 10 <= args.bloom_bits <= 40:
         ap.error("--bloom-bits must be in [10, 40]")
 
@@ -135,8 +117,23 @@ def main() -> None:
         minhash_band_index,
     )
     from ocr_spark.pipeline.session import get_spark
+    from ocr_spark.pipeline.storage import FileStore
 
     spark = get_spark(args.master, app_name="ocr_spark_dedup")
+
+    def same_dir(a: str, b: str) -> bool:
+        # compared as the file system names them: a scheme
+        # ("file:///x" vs "/x"), relative paths, trailing slashes and
+        # symlinks must not sneak past the guard
+        return FileStore(a, spark).qualify(a) == FileStore(b, spark).qualify(b)
+
+    # Spark reads lazily: overwriting the index dir while the merge
+    # still scans it corrupts both. Write to a fresh dir and swap.
+    if args.save_index and args.against_index and same_dir(args.save_index, args.against_index):
+        ap.error("--save-index must differ from --against-index")
+    if args.save_bloom and args.against_bloom and same_dir(args.save_bloom, args.against_bloom):
+        ap.error("--save-bloom must differ from --against-bloom")
+
     # doc_id rides through AS-IS: the operator layer is id-type-agnostic
     # (int or string 'sha1:...' both work). The old cast("long") here
     # NULLed every string id and silently emptied the keep-list.

@@ -4,8 +4,11 @@
 
 Reads an interleaved span table (or a flat documents table with
 --synthesize), runs the checkpoint-resumable bucketed extraction, and
-writes partitioned parquet + per-bucket lineage. Re-invoking with the
-same --run-id resumes: only uncommitted buckets are processed.
+writes partitioned parquet + per-bucket lineage. Each commit group
+reads the input with its bucket predicate pushed into the scan (below
+--synthesize), so it derives and extracts only its own docs; no copy
+of the input is written. Re-invoking with the same --run-id resumes:
+only uncommitted buckets are processed.
 
 This job extracts and nothing else. Shaping the span table before
 extraction (integrity quarantine, structural gate, template cap,
@@ -51,14 +54,6 @@ def main() -> None:
         "0 = off",
     )
     ap.add_argument(
-        "--stage-input",
-        action="store_true",
-        help="materialize the input as bucket-partitioned parquet once, "
-        "so each commit group partition-prunes to its buckets instead "
-        "of re-scanning the full input (G commit groups = G full scans "
-        "without it; total I/O 2x the corpus with it)",
-    )
-    ap.add_argument(
         "--lineage-checksums",
         action="store_true",
         help="record an order-insensitive content checksum per bucket "
@@ -88,7 +83,6 @@ def main() -> None:
             n_buckets=args.buckets,
             buckets_per_commit=args.buckets_per_commit,
             size_weighted_partitions=args.size_weighted_partitions or None,
-            stage_input=args.stage_input,
             checksum_output=args.lineage_checksums,
             # pin how the input was derived: resuming a half-done run
             # over flat docs as if they were spans (or the reverse)

@@ -18,37 +18,3 @@ Arrow-batched UDFs and built-in SQL expressions.
 """
 
 __version__ = "0.2.0"
-
-from ocr_spark.kernel.extract import DEFAULT_CONFIG, PARITY_CONFIG, ExtractConfig
-from ocr_spark.pipeline.extract import (
-    classify_spans,
-    extract_documents,
-    extract_main_content,
-    extract_spans,
-    extraction_metrics,
-    weight_partition,
-)
-from ocr_spark.pipeline.runner import ExtractionRun, RunConfig
-from ocr_spark.pipeline.session import get_spark
-from ocr_spark.pipeline.validate import FieldSpec, run_summary, validate_fields
-from ocr_spark.schema import DOC_SCHEMA, SPAN_STRUCT
-
-__all__ = [
-    "DEFAULT_CONFIG",
-    "PARITY_CONFIG",
-    "DOC_SCHEMA",
-    "SPAN_STRUCT",
-    "ExtractConfig",
-    "ExtractionRun",
-    "FieldSpec",
-    "RunConfig",
-    "classify_spans",
-    "extract_documents",
-    "extract_main_content",
-    "extract_spans",
-    "extraction_metrics",
-    "get_spark",
-    "run_summary",
-    "validate_fields",
-    "weight_partition",
-]

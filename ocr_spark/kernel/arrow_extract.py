@@ -398,26 +398,15 @@ def _nested_spans(flat: _Flat, n_docs: int) -> tuple[pa.ListArray, np.ndarray]:
     return pa.ListArray.from_arrays(offsets, values), new_lens
 
 
-def extract_nested_batch(
-    batch: pa.RecordBatch, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> pa.RecordBatch:
-    """(doc_id, spans) with extraction applied; error/empty docs come
-    back with spans=[] — one output row per input row, same order."""
-    flat, *_ = _run(batch, cfg)
-    spans_out, _new_lens = _nested_spans(flat, batch.num_rows)
-    return pa.RecordBatch.from_arrays(
-        [_doc_ids_array(batch).cast(pa.string()), spans_out],
-        names=["doc_id", "spans"],
-    )
-
-
 def extract_nested_metrics_batch(
     batch: pa.RecordBatch, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> pa.RecordBatch:
     """DOC_WITH_METRICS_SCHEMA: nested extraction output + per-doc
     metrics from ONE kernel execution — the runner's commit shape (the
     round-1 runner ran the kernel twice: once for output, once for
-    metrics; at scale that doubles the most expensive stage)."""
+    metrics; at scale that doubles the most expensive stage). One
+    output row per input row, same order; error/empty docs come back
+    with spans=[]."""
     flat, _kept, _bid, _ld, lens, empty, malformed = _run(batch, cfg)
     spans_out, new_lens = _nested_spans(flat, batch.num_rows)
     failed = (empty | malformed).astype(np.int32)  # _run folds dup rows in

@@ -301,30 +301,17 @@ def _group_spans(flat: pd.DataFrame, out_ids: list) -> list[list]:
     return [groups.get(d, []) for d in out_ids]
 
 
-def extract_nested(pdf: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.DataFrame:
-    """(doc_id, spans) batch -> (doc_id, spans) with extraction applied.
-
-    Reassembly happens inside the batch (docs are batch-local), so the
-    emitted span order is deterministic — no post-shuffle collect_list
-    (SURVEY.md §7.3). Docs that reduce to nothing (or error) come back
-    with spans=[] so rows are never silently dropped.
-    """
-    flat = extract_flat(pdf, cfg)
-    out_ids = pdf["doc_id"].tolist()
-    return pd.DataFrame(
-        {
-            "doc_id": [_render_id(d) for d in out_ids],
-            "spans": _group_spans(flat, out_ids),
-        }
-    )
-
-
 def extract_nested_metrics(
     pdf: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> pd.DataFrame:
     """Nested output + per-doc metrics from ONE kernel execution (the
     pandas spec of arrow_extract.extract_nested_metrics_batch):
-    columns doc_id, spans, n_spans_in, n_spans_out, parse_failed."""
+    columns doc_id, spans, n_spans_in, n_spans_out, parse_failed.
+
+    Reassembly happens inside the batch (docs are batch-local), so the
+    emitted span order is deterministic — no post-shuffle collect_list
+    (SURVEY.md §7.3). Docs that reduce to nothing (or error) come back
+    with spans=[] so rows are never silently dropped."""
     flat = extract_flat(pdf, cfg)
     out_ids = pdf["doc_id"].tolist()
     spans = _group_spans(flat, out_ids)

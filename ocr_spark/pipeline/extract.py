@@ -44,7 +44,6 @@ from ocr_spark.pipeline.session import settle_python_worker
 from ocr_spark.schema import (
     ANNOTATED_SPAN_SCHEMA,
     DOC_METRICS_SCHEMA,
-    DOC_SCHEMA,
     DOC_WITH_METRICS_SCHEMA,
     KIND_ERROR,
 )
@@ -137,17 +136,13 @@ def classify_spans(df: DataFrame) -> DataFrame:
     return extract_spans(df, PARITY_CONFIG)
 
 
-def extract_documents(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Nested output matching the input contract:
-    (doc_id, spans array<struct<kind,text,media_ref,offset>>)."""
-    return _run_kernel(df, ak.extract_nested_batch, DOC_SCHEMA, cfg)
-
-
 def extract_documents_with_metrics(
     df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Nested output + per-doc metrics from a single kernel execution:
-    (doc_id, spans, n_spans_in, n_spans_out, parse_failed). The
+    (doc_id, spans, n_spans_in, n_spans_out, parse_failed). ``spans``
+    matches the input contract (array<struct<kind,text,media_ref,
+    offset>>); error/empty docs come back with spans=[]. The
     checkpointed runner's commit shape — output and lineage metrics
     cost ONE pass over the corpus."""
     return _run_kernel(df, ak.extract_nested_metrics_batch, DOC_WITH_METRICS_SCHEMA, cfg)

@@ -15,11 +15,10 @@ per-page cursor). A run:
    a MERGE/replacePartitions commit) — T3/T4. A few groups are in
    flight at once (submitted from a small driver thread pool), so one
    group's planning, straggler tail and commit overlap the next
-   group's tasks. With ``RunConfig.stage_input`` the input is first
-   materialized ONCE, before the groups start, as bucket-partitioned
-   parquet so each group partition-prunes to its buckets instead of
-   re-scanning the full input (G groups = G full corpus scans
-   otherwise — the dominant I/O term at 100 TB);
+   group's tasks. Each group reads the input filtered to its buckets:
+   the bucket hash predicate is pushed into the parquet scan, below
+   any derivation of the span table (e.g. the synthesizer), so a group
+   derives and extracts only its own docs;
 3. the write itself collects each bucket's lineage (``observe`` with
    one conditional aggregate per bucket, in the write's result stage —
    no read-back of the output); after the group commits, writes one
@@ -85,13 +84,6 @@ class RunConfig:
     # heuristic; see pipeline.extract.weight_partition). None = rely on
     # the input's partitioning.
     size_weighted_partitions: int | None = None
-    # stage the input ONCE as bucket-partitioned parquet before the
-    # commit loop (module docstring, step 2): one extra full
-    # write+shuffle, after which each group's read partition-prunes to
-    # its buckets — total I/O 2x the corpus instead of one full scan
-    # per group (the bucket is a derived hash; no pushdown prunes it).
-    # Leave False only when the run fits in one or two commit groups.
-    stage_input: bool = False
     # record an order-insensitive content checksum per bucket in the
     # lineage (functions/audit.py modular-sum scheme over the full
     # output row incl. spans), summed from the rows as they are
@@ -177,11 +169,6 @@ class ExtractionRun:
         self.out = output_dir.rstrip("/")
         self.cfg = cfg
         self.lineage_dir = f"{self.out}/_lineage/{cfg.run_id}"
-        # underscore prefix: Spark's file listing skips _-prefixed
-        # paths, so the staging tree inside the output dir is invisible
-        # to verify_output()'s read and to output()
-        self._staging_dir = f"{self.out}/_staging/{cfg.run_id}"
-        self._stage_marker = f"{self.lineage_dir}/staged.json"
         self._abort_marker = f"{self.lineage_dir}/aborted.json"
         self.store = FileStore(self.out, spark)
 
@@ -233,58 +220,16 @@ class ExtractionRun:
     def done_buckets(self) -> set[int]:
         return set(self._records())
 
-    # -- input staging (opt-in, see RunConfig.stage_input) ------------------
-    def _staged_docs(self) -> DataFrame:
-        """Materialize the input as bucket-partitioned parquet once per
-        run (resume skips it via the marker — same discipline as the
-        bucket lineage records: the write is only trusted after the
-        atomic marker write that follows it)."""
-        if not self.store.exists(self._stage_marker):
-            t0 = time.time()
-            (
-                self.docs.withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
-                .repartition(self.cfg.n_buckets, "bucket")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(self._staging_dir)
-            )
-            marker = {"run_id": self.cfg.run_id, "n_buckets": self.cfg.n_buckets}
-            marker["wall_ms"] = int((time.time() - t0) * 1000)
-            self.store.write_json(self._stage_marker, marker)
-        # explicit schema (input schema + bucket partition col): an
-        # EMPTY corpus stages as _SUCCESS-only with no parquet footers,
-        # and inference would then throw on every resume (marker
-        # already written) — same class as the OUTPUT_SCHEMA fix for
-        # zero-row commit groups above
-        staged_schema = StructType(
-            self.docs.schema.fields + [StructField("bucket", IntegerType(), True)]
-        )
-        return self.spark.read.schema(staged_schema).parquet(self._staging_dir)
-
     # -- T3/T4: process + commit ------------------------------------------
-    def _input(self) -> DataFrame:
-        """The run's input with its ``bucket`` column: the staged copy
-        (written on first use) or the bucket hash over ``docs``."""
-        if self.cfg.stage_input:
-            return self._staged_docs()
-        return self.docs.withColumn("bucket", bucket_col("doc_id", self.cfg.n_buckets))
-
-    def _group_df(self, buckets: list[int], src: DataFrame | None = None) -> DataFrame:
+    def _group_df(self, buckets: list[int]) -> DataFrame:
         """The commit-group plan: ONE kernel execution, no joins.
-        ``src`` is :meth:`_input`, passed in by ``run()`` so that the
-        groups in flight share one staged copy.
 
         bucket is a pure function of doc_id (sinks.bucket_col), so it is
         filtered on the input and recomputed on the kernel output with
-        a withColumn (no doc_id join, no second kernel pass).
-
-        With ``stage_input`` the filter lands on a PARTITION column of
-        the staged table (PartitionFilters in the scan — only the
-        group's bucket directories are read); without it the filter is
-        a full-scan predicate on the derived hash."""
-        if src is None:
-            src = self._input()
-        subset = src.where(F.col("bucket").isin(buckets)).drop("bucket")
+        a withColumn (no doc_id join, no second kernel pass). The input
+        filter is pushed into the scan's DataFilters, below any
+        derivation of the span table."""
+        subset = self.docs.where(bucket_col("doc_id", self.cfg.n_buckets).isin(buckets))
         if self.cfg.size_weighted_partitions:
             subset = weight_partition(subset, self.cfg.size_weighted_partitions)
         # the trailing where() is defense in depth: bucket is the same
@@ -299,13 +244,13 @@ class ExtractionRun:
             .where(F.col("bucket").isin(buckets))
         )
 
-    def _process_group(self, src: DataFrame, buckets: list[int], attempt: int) -> dict[int, dict]:
+    def _process_group(self, buckets: list[int], attempt: int) -> dict[int, dict]:
         """One Spark job: write the group's ``bucket=<k>/`` partitions
         and collect their lineage counts on the way through
         (``observe``), then write the lineage records. Returns them,
         by bucket."""
         t0 = time.time()
-        out = self._group_df(buckets, src).repartition(len(buckets), "bucket")
+        out = self._group_df(buckets).repartition(len(buckets), "bucket")
         cols = out.columns
         if self.cfg.checksum_output:
             # hashed once per row here; the per-bucket sums pick it up
@@ -400,14 +345,11 @@ class ExtractionRun:
             for i in range(0, len(pending), self.cfg.buckets_per_commit)
         ]
         n_ok = len(groups) if fail_after_groups is None else fail_after_groups
-        # staged once, before the fan-out: staging on first use inside
-        # the groups would have every group in flight stage at once
-        src = self._input() if groups[:n_ok] else None
 
         def commit(gi: int, group: list[int]) -> dict[int, dict]:
             if gi >= n_ok:
                 raise RuntimeError(f"simulated crash before group {gi}")
-            return self._process_group(src, group, attempt)
+            return self._process_group(group, attempt)
 
         # the default FIFO scheduler runs the earliest group's tasks
         # first; later groups fill the cores its planning, straggler
@@ -419,11 +361,6 @@ class ExtractionRun:
             if f.exception() is not None:
                 raise f.exception()
             recs.update(f.result())
-        # run complete: the staged copy is scratch space — GC it (and
-        # its marker, so a hypothetical later re-stage starts clean)
-        if self.cfg.stage_input and len(recs) == self.cfg.n_buckets:
-            self.store.delete(self._staging_dir)
-            self.store.delete(self._stage_marker)
         return {
             "run_id": self.cfg.run_id,
             "buckets_done": len(recs),
@@ -454,8 +391,8 @@ def cleanup_orphan_runs(output_dir: str, keep: set[str] | frozenset[str]) -> lis
     for run_id in list_runs(output_dir):
         if run_id not in keep:
             store.delete(f"{root}/{run_id}")
-            # a crashed staged run leaves its bucket-partitioned input
-            # copy behind — scratch space, GC'd with the lineage
+            # runs of earlier versions could stage a bucket-partitioned
+            # copy of their input here — scratch space, GC'd with them
             store.delete(f"{stg_root}/{run_id}")
             removed.append(run_id)
     return removed

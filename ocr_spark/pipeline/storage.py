@@ -7,6 +7,7 @@ I/O does, so they land beside the table on ``file://``, ``hdfs://`` or
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import SparkSession
 
@@ -62,6 +63,16 @@ class FileStore:
         # (without Hadoop's native library, every create forks a chmod)
         checksummed = spark._jvm.org.apache.hadoop.fs.ChecksumFileSystem._java_lang_class
         self.fs = fs.getRawFileSystem() if checksummed.isInstance(fs) else fs
+
+    def qualify(self, path: str) -> str:
+        """``path`` as its file system names it: scheme and authority
+        added, a relative path made absolute against the working
+        directory, trailing slashes dropped; on local disk symlinks are
+        resolved too, so two names of one directory compare equal."""
+        uri = self.fs.makeQualified(self.path(path)).toUri()
+        if uri.getScheme() == "file":
+            return "file:" + os.path.realpath(uri.getPath())
+        return uri.toString()
 
     def exists(self, path: str) -> bool:
         return self.fs.exists(self.path(path))

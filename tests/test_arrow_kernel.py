@@ -14,12 +14,10 @@ from ocr_spark.kernel.extract import (
     PARITY_CONFIG,
     doc_metrics,
     extract_flat,
-    extract_nested,
     extract_nested_metrics,
 )
 from ocr_spark.pipeline.extract import (
     classify_spans,
-    extract_documents,
     extract_documents_with_metrics,
     extract_main_content,
     extraction_metrics,
@@ -44,6 +42,11 @@ def _rows(df):
         tuple(x if not isinstance(x, list) else tuple(map(tuple, x)) for x in r)
         for r in df.collect()
     )
+
+
+def _nested(df, cfg=DEFAULT_CONFIG):
+    """The nested kernel output projected to (doc_id, spans)."""
+    return extract_documents_with_metrics(df, cfg).select("doc_id", "spans")
 
 
 def _nested_rows(df):
@@ -93,7 +96,7 @@ def test_classify_equivalence(request, corpus):
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_nested_equivalence(request, corpus):
     df = request.getfixturevalue(corpus)
-    assert_matches_spec(extract_documents(df), extract_nested, df)
+    assert_matches_spec(_nested(df), extract_nested_metrics, df)
 
 
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
@@ -138,7 +141,7 @@ def test_duplicate_doc_id_rows_become_errors(spark):
         }
     )
     df = spark.createDataFrame(pdf, schema=DOC_SCHEMA).coalesce(1)
-    rows = extract_documents(df).collect()
+    rows = _nested(df).collect()
     got = [(r.doc_id, len(r.spans)) for r in rows]
     assert sorted(got) == [("dup", 0), ("dup", 0), ("ok", 1)], got
     m = {
@@ -146,7 +149,7 @@ def test_duplicate_doc_id_rows_become_errors(spark):
         for r in extract_documents_with_metrics(df).collect()
     }
     assert m == {("dup", 2): 1, ("ok", 1): 0}, m
-    assert_matches_spec(extract_documents(df), extract_nested, df)
+    assert_matches_spec(_nested(df), extract_nested_metrics, df)
     # the pandas spec's flat view carries one MALFORMED error row per
     # duplicate input row
     flat = extract_flat(pdf)
@@ -182,7 +185,7 @@ def test_null_spans_row(spark):
     )
     rows = _rows(extraction_metrics(df))
     assert all(r[3] == 1 for r in rows)  # parse_failed for both
-    nested = _nested_rows(extract_documents(df))
+    nested = _nested_rows(_nested(df))
     assert nested == [("d1", ()), ("d2", ())]
 
 
@@ -249,9 +252,9 @@ def test_subslice_batches_identical_results(spark, hostile_docs):
 
     import ocr_spark.pipeline.extract as px
 
-    full = _nested_rows(extract_documents(hostile_docs, ))
+    full = _nested_rows(_nested(hostile_docs))
     with patch.object(px, "MAX_SPANS_PER_KERNEL_CALL", 64):
-        sliced = _nested_rows(extract_documents(hostile_docs, ))
+        sliced = _nested_rows(_nested(hostile_docs))
     assert sliced == full
 
     flat_full = _rows(classify_spans(hostile_docs, ))

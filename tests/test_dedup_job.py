@@ -132,7 +132,7 @@ def test_dedup_job_incremental_index(spark, tmp_path, capsys):
     assert idx_docs == {1, 12}
 
 
-def test_dedup_job_rejects_inplace_index(tmp_path):
+def test_dedup_job_rejects_inplace_index(spark, tmp_path):
     sys.path.insert(0, JOBS)
     import dedup as job
     import pytest
@@ -143,6 +143,31 @@ def test_dedup_job_rejects_inplace_index(tmp_path):
     ]
     with patch.object(sys, "argv", argv), pytest.raises(SystemExit):
         job.main()
+
+
+def test_dedup_job_rejects_inplace_index_named_as_uri(spark, tmp_path, capsys):
+    """One directory named two ways (a plain path and a ``file://``
+    URI; a URI with a trailing slash through a symlink and the plain
+    target) is still one directory: the job refuses to overwrite the
+    index or bloom it is reading."""
+    sys.path.insert(0, JOBS)
+    import dedup as job
+    import pytest
+
+    (tmp_path / "b").mkdir()
+    (tmp_path / "link").symlink_to(tmp_path / "b")
+    pairs = [
+        ("index", str(tmp_path / "i"), f"file://{tmp_path}/i"),
+        ("bloom", str(tmp_path / "b"), f"file://{tmp_path}/link/"),
+    ]
+    for kind, saved, against in pairs:
+        argv = [
+            "dedup.py", "--input", "x", "--output", "y",
+            f"--against-{kind}", against, f"--save-{kind}", saved,
+        ]
+        with patch.object(sys, "argv", argv), pytest.raises(SystemExit):
+            job.main()
+        assert f"--save-{kind} must differ from --against-{kind}" in capsys.readouterr().err
 
 
 def test_batch_cli_job(spark, tmp_path, capsys):

@@ -6,7 +6,7 @@ through the Spark pipeline. BASELINE.json: pass rate must be 100%."""
 import pytest
 
 from ocr_spark.fixtures import frozen_fixture_docs
-from ocr_spark.pipeline.extract import classify_spans, extract_documents
+from ocr_spark.pipeline.extract import classify_spans, extract_documents_with_metrics
 from ocr_spark.kernel.extract import PARITY_CONFIG
 from ocr_spark.schema import DOC_SCHEMA
 
@@ -38,7 +38,9 @@ def test_span_sequence_equality_flat(spark, fixture_df):
 
 
 def test_span_sequence_equality_nested(spark, fixture_df):
-    out = extract_documents(fixture_df.repartition(4, "doc_id"), cfg=PARITY_CONFIG)
+    out = extract_documents_with_metrics(
+        fixture_df.repartition(4, "doc_id"), cfg=PARITY_CONFIG
+    ).select("doc_id", "spans")
     got = {r["doc_id"]: r["spans"] for r in out.collect()}
     for d in FIXTURES:
         spans = got[d["doc_id"]]

@@ -13,7 +13,7 @@ from ocr_spark.kernel.extract import (
     WARN_MALFORMED,
     doc_metrics,
     extract_flat,
-    extract_nested,
+    extract_nested_metrics,
 )
 from ocr_spark.schema import KIND_ERROR, KIND_TRUNCATION_MARKER
 
@@ -209,14 +209,14 @@ def test_nested_roundtrip_and_stability():
         mkdoc("d1", [("text", "a", ""), ("page_header", "h", ""), ("text", "b", "")]),
         {"doc_id": "d2", "spans": []},
     ]
-    out = extract_nested(to_pdf(docs))
+    out = extract_nested_metrics(to_pdf(docs))[["doc_id", "spans"]]
     assert out["doc_id"].tolist() == ["d1", "d2"]
     d1 = out["spans"].iloc[0]
     assert [s["text"] for s in d1] == ["a", "b"]
     assert out["spans"].iloc[1] == []
     # idempotence on pass-through kinds: extracting the extracted
     # output changes nothing (strip is a fixpoint)
-    again = extract_nested(out)
+    again = extract_nested_metrics(out)
     assert [s["text"] for s in again["spans"].iloc[0]] == ["a", "b"]
 
 

@@ -17,12 +17,12 @@ import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from ocr_spark.kernel.arrow_extract import extract_flat_batch, extract_nested_batch
+from ocr_spark.kernel.arrow_extract import extract_flat_batch, extract_nested_metrics_batch
 from ocr_spark.kernel.extract import (
     DEFAULT_CONFIG,
     PARITY_CONFIG,
     extract_flat,
-    extract_nested,
+    extract_nested_metrics,
 )
 from ocr_spark.schema import KIND_ERROR
 
@@ -81,6 +81,11 @@ def _to_batch(pdf: pd.DataFrame) -> pa.RecordBatch:
     )
 
 
+def _nested(pdf: pd.DataFrame, cfg) -> pd.DataFrame:
+    """The pandas spec's nested output projected to (doc_id, spans)."""
+    return extract_nested_metrics(pdf, cfg)[["doc_id", "spans"]]
+
+
 @settings(max_examples=60, deadline=None)
 @given(corpus_st())
 def test_kernel_invariants(pdf):
@@ -106,7 +111,7 @@ def test_kernel_invariants(pdf):
 @settings(max_examples=60, deadline=None)
 @given(corpus_st())
 def test_parity_reproduces_input(pdf):
-    out = extract_nested(pdf, PARITY_CONFIG)
+    out = _nested(pdf, PARITY_CONFIG)
     got = {r["doc_id"]: r["spans"] for _, r in out.iterrows()}
     for _, r in pdf.iterrows():
         expect = sorted(
@@ -120,8 +125,8 @@ def test_parity_reproduces_input(pdf):
 @settings(max_examples=40, deadline=None)
 @given(corpus_st())
 def test_idempotence(pdf):
-    once = extract_nested(pdf, DEFAULT_CONFIG)
-    twice = extract_nested(once, DEFAULT_CONFIG)
+    once = _nested(pdf, DEFAULT_CONFIG)
+    twice = _nested(once, DEFAULT_CONFIG)
     # empty docs become error rows with spans=[] after the first pass;
     # the second pass sees them as empty again — compare non-empty only
     o = {r["doc_id"]: r["spans"] for _, r in once.iterrows() if r["spans"]}
@@ -140,8 +145,8 @@ def test_arrow_pandas_agree(pdf):
     p = p_flat[key + ["link_density"]].sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, p, check_dtype=False)
 
-    a_n = extract_nested_batch(batch, DEFAULT_CONFIG).to_pandas()
-    p_n = extract_nested(pdf, DEFAULT_CONFIG)
+    a_n = extract_nested_metrics_batch(batch, DEFAULT_CONFIG).to_pandas()[["doc_id", "spans"]]
+    p_n = _nested(pdf, DEFAULT_CONFIG)
     an = {
         r["doc_id"]: [tuple(s.values()) for s in r["spans"]] for _, r in a_n.iterrows()
     }

@@ -33,7 +33,6 @@ ALLOWED_UNREACHED = {
     "ocr_spark.kernel.doctags",  # reference DocTags parser, test oracle
     "ocr_spark.fixtures",  # test corpora
     "ocr_spark.plans",  # physical-plan assertions in tests
-    "ocr_spark.pipeline.bucketing",  # kept or deleted with the day-N layout work
 }
 
 
@@ -132,7 +131,8 @@ def test_extract_job_reaches_only_the_extraction_closure():
     """jobs/extract.py is a thin CLI over the runner, the session and
     the synthesizer: of the operator modules it may reach only the two
     the runner's checksum lineage uses. Input shaping and sidecars
-    belong to jobs/curate.py."""
+    belong to jobs/curate.py. The package root re-exports nothing, so
+    importing any ``ocr_spark`` module does not pull in the validator."""
     reached = _reached(_package_modules(), roots=("jobs/extract.py",))
     operators = {
         m for m in reached if m.startswith(f"{PKG}.functions.")
@@ -140,6 +140,7 @@ def test_extract_job_reaches_only_the_extraction_closure():
     assert not operators, (
         f"jobs/extract.py reaches operator modules: {sorted(operators)}"
     )
+    assert f"{PKG}.pipeline.validate" not in reached
 
 
 def test_no_file_hardcodes_the_checkout_path():

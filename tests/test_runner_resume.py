@@ -278,7 +278,7 @@ def test_write_results_null_key_lands_in_runner_bucket(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# staged bucketed input (stage_input=True)
+# the group's input scan; runs whose input an earlier version staged
 # ---------------------------------------------------------------------------
 
 
@@ -289,96 +289,90 @@ def _rows(spark, path):
     )
 
 
-def test_staged_run_matches_unstaged(spark, docs, tmp_path):
-    ref = ExtractionRun(
-        spark, docs, str(tmp_path / "ref"), RunConfig("su0", n_buckets=8)
-    )
-    ref.run()
-    st = ExtractionRun(
-        spark,
-        docs,
-        str(tmp_path / "st"),
-        RunConfig("su1", n_buckets=8, buckets_per_commit=2, stage_input=True),
-    )
-    st.run()
-    assert _rows(spark, str(tmp_path / "ref")) == _rows(spark, str(tmp_path / "st"))
-    # staging scratch is GC'd after completion (marker included)
-    assert not os.path.exists(str(tmp_path / "st" / "_staging" / "su1"))
-    assert not os.path.exists(f"{st.lineage_dir}/staged.json")
-
-
-def test_staged_group_scan_partition_prunes(spark, docs, tmp_path):
+def test_group_scan_pushes_the_bucket_filter(spark, tmp_path):
+    """A commit group reads only its own docs without a staged copy of
+    the input: the bucket predicate sits in the parquet scan's
+    DataFilters, below the synthesizer, and the group's plan has one
+    Exchange, the pre-write repartition."""
     from ocr_spark.plans import plan_str
 
+    # an input of its own: a frame another test cached would be read
+    # from memory, not scanned
+    flat = str(tmp_path / "docs")
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet").write.parquet(flat)
+    docs = synthesize_spans(spark.read.parquet(flat))
     run = ExtractionRun(
-        spark,
-        docs,
-        str(tmp_path / "out"),
-        RunConfig("sp1", n_buckets=8, buckets_per_commit=2, stage_input=True),
+        spark, docs, str(tmp_path / "out"),
+        RunConfig("sp1", n_buckets=8, buckets_per_commit=2),
     )
-    run.write_manifest()
-    plan = plan_str(run._group_df([0, 1]), "formatted")
-    # the group filter must land on the staged PARTITION column, not a
-    # recomputed full-scan hash predicate
-    assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters", 1)[1][:200]
-    # staging is written exactly once; a second group reuses it
-    marker = f"{run.lineage_dir}/staged.json"
-    assert os.path.exists(marker)
-    before = json.load(open(marker))
-    run._group_df([2, 3]).count()
-    assert json.load(open(marker)) == before
+    plan = plan_str(run._group_df([0, 1]).repartition(2, "bucket"), "simple")
+    (scan,) = [line for line in plan.splitlines() if "FileScan" in line]
+    filters = scan.split("DataFilters: [", 1)[1].split("], Format:", 1)[0]
+    assert "pmod(hash(" in filters and "IN (0,1)" in filters, scan
+    assert plan.count("Exchange") == 1, plan
 
 
-def test_staged_crash_and_resume_equals_single_shot(spark, docs, tmp_path):
+def test_empty_corpus_runs_and_resumes_as_a_noop(spark, docs, tmp_path):
+    empty = docs.where("1 = 0")
+    out = str(tmp_path / "out")
+    cfg = RunConfig("se1", n_buckets=4, buckets_per_commit=2)
+    run = ExtractionRun(spark, empty, out, cfg)
+    summary = run.run()
+    assert summary["buckets_done"] == 4 and summary["n_docs"] == 0
+    before = run._records()
+    # resume: every bucket recorded, nothing re-runs (wall_ms unchanged)
+    again = ExtractionRun(spark, empty, out, cfg)
+    assert again.run() == summary
+    assert again._records() == before
+
+
+def test_run_staged_by_an_earlier_version_resumes(spark, docs, tmp_path):
+    """Earlier versions could stage a run's input: such a run id has a
+    ``staged.json`` marker and some bucket records in its lineage dir,
+    and a bucket-partitioned input copy under ``_staging/<run_id>/``.
+    It resumes unstaged to the same table and records as a
+    single-shot run."""
     ref = ExtractionRun(
-        spark, docs, str(tmp_path / "ref"), RunConfig("sc0", n_buckets=8)
+        spark, docs, str(tmp_path / "ref"), RunConfig("up", n_buckets=8)
     )
     ref.run()
-    out = str(tmp_path / "out")
-    cfg = RunConfig("sc1", n_buckets=8, buckets_per_commit=2, stage_input=True)
-    broken = ExtractionRun(spark, docs, out, cfg)
-    with pytest.raises(RuntimeError):
-        broken.run(fail_after_groups=2)
-    # staging survives the crash (resume must not pay it twice)
-    assert os.path.exists(f"{out}/_staging/sc1")
-    resumed = ExtractionRun(spark, docs, out, cfg)
-    summary = resumed.run()
-    assert summary["buckets_done"] == 8
-    assert _rows(spark, str(tmp_path / "ref")) == _rows(spark, out)
+    out = tmp_path / "out"
+    cfg = RunConfig("up", n_buckets=8, buckets_per_commit=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        ExtractionRun(spark, docs, str(out), cfg).run(fail_after_groups=2)
+    (out / "_lineage" / "up" / "staged.json").write_text(
+        json.dumps({"run_id": "up", "n_buckets": 8, "wall_ms": 1234})
+    )
+    (
+        docs.withColumn("bucket", bucket_col("doc_id", 8))
+        .write.partitionBy("bucket")
+        .parquet(str(out / "_staging" / "up"))
+    )
+
+    run = ExtractionRun(spark, docs, str(out), cfg)
+    assert run.done_buckets() == {0, 1, 2, 3}
+    s = run.run()
+    assert s["buckets_done"] == 8 and s["n_docs"] == 500
+    assert _rows(spark, str(out)) == _rows(spark, str(tmp_path / "ref"))
+    assert _records(run) == _records(ref)
 
 
 def test_cleanup_orphan_runs_removes_stale_staging(spark, docs, tmp_path):
+    """A run whose input an earlier version staged leaves that copy
+    under ``_staging/<run_id>/``; the orphan GC removes it with the
+    run's lineage."""
     out = str(tmp_path / "out")
-    cfg = RunConfig("stale-st", n_buckets=4, buckets_per_commit=1, stage_input=True)
+    cfg = RunConfig("stale-st", n_buckets=4, buckets_per_commit=1)
     broken = ExtractionRun(spark, docs, out, cfg)
     with pytest.raises(RuntimeError):
         broken.run(fail_after_groups=1)
-    assert os.path.exists(f"{out}/_staging/stale-st")
+    bucket_dir = tmp_path / "out" / "_staging" / "stale-st" / "bucket=0"
+    bucket_dir.mkdir(parents=True)
+    (bucket_dir / "part-00000.parquet").write_bytes(b"PAR1")
     removed = cleanup_orphan_runs(out, keep=frozenset())
     assert "stale-st" in removed
     assert not os.path.exists(f"{out}/_staging/stale-st")
-
-
-def test_staged_run_survives_empty_corpus(spark, docs, tmp_path):
-    # an EMPTY input stages as _SUCCESS-only parquet; the staged read
-    # must use the explicit schema (inference would throw and, with
-    # the marker already written, wedge every resume)
-    empty = docs.where("1 = 0")
-    run = ExtractionRun(
-        spark,
-        empty,
-        str(tmp_path / "out"),
-        RunConfig("se1", n_buckets=4, buckets_per_commit=2, stage_input=True),
-    )
-    summary = run.run()
-    assert summary["buckets_done"] == 4 and summary["n_docs"] == 0
-    # and resume stays a no-op, not a crash
-    assert ExtractionRun(
-        spark,
-        empty,
-        str(tmp_path / "out"),
-        RunConfig("se1", n_buckets=4, buckets_per_commit=2, stage_input=True),
-    ).run()["n_docs"] == 0
+    assert not os.path.exists(f"{out}/_lineage/stale-st")
 
 
 def test_checksum_lineage_and_verify_output(spark, docs, tmp_path):
@@ -585,7 +579,7 @@ def test_run_never_reads_its_own_output(spark, docs, tmp_path, monkeypatch):
     def guarded(self, *paths, **options):
         for p in paths:
             rel = os.path.relpath(str(p), out)
-            if not rel.startswith("..") and not rel.startswith("_staging"):
+            if not rel.startswith(".."):
                 raise AssertionError(f"run read its own output: {p}")
         return read(self, *paths, **options)
 
