@@ -83,10 +83,6 @@ from ocr_spark.functions import tables as tbl
 from ocr_spark.functions import sampling as smp
 from ocr_spark.functions import tfidf as tfi
 from ocr_spark.functions import skew as sk
-from ocr_spark.functions.sketches import bloom_build as sk_bloom_build
-from ocr_spark.functions.sketches import bloom_build_sql as sk_bloom_build_sql
-from ocr_spark.functions.sketches import bloom_contains as sk_bloom_contains
-from ocr_spark.functions.sketches import bloom_contains_sql as sk_bloom_contains_sql
 from ocr_spark.functions.sketches import cms_build as sk_cms_build
 from ocr_spark.functions.sketches import cms_build_sql as sk_cms_build_sql
 from ocr_spark.functions.sketches import hist_quantiles as sk_hist_quantiles
@@ -158,6 +154,28 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 def _span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return synthesize_spans(_read(spark, sf_dir, "documents"))
+
+
+# the doc_id seen-set of the bloom_docid_bits / bloom_membership
+# queries: the even ids, in a filter small enough that absent ids
+# collide
+_DOCID_BLOOM_M = 1 << 10
+
+
+def _docid_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ded.bloom_build(
+        _read(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 0),
+        m_bits=_DOCID_BLOOM_M,
+        key=F.col("doc_id"),
+    )
+
+
+def _docid_bloom_sql() -> str:
+    return ded.bloom_build_sql(
+        "(SELECT * FROM documents WHERE doc_id % 2 = 0)",
+        m_bits=_DOCID_BLOOM_M,
+        key="doc_id",
+    )
 
 
 # the materialized golden extraction snapshot (span_diff_golden): a
@@ -1760,23 +1778,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_overlap": lambda s, d: sk_source_overlap(
             _read(s, d, "documents")
         ),
-        # Bloom filter over yesterday's ingested doc ids: the set bit
-        # positions ARE the filter (mergeable by bit-OR across shards)
-        "bloom_docid_bits": lambda s, d: sk_bloom_build(
-            _read(s, d, "documents").where(F.col("doc_id") % 2 == 0),
-            "doc_id",
-        ),
-        # incremental-ingest membership: probe today's full id batch
+        # the dedup bloom filter keyed on doc_id, over yesterday's
+        # ingested ids: the (word_idx, word) bitset rows ARE the
+        # filter (mergeable by bit_or across shards)
+        "bloom_docid_bits": lambda s, d: _docid_bloom(s, d),
+        # incremental-ingest membership: gate today's distinct ids
         # against the filter — inserted ids always true, absent ids
-        # true only on (deterministic) bit collisions
-        "bloom_membership": lambda s, d: sk_bloom_contains(
-            sk_bloom_build(
-                _read(s, d, "documents").where(F.col("doc_id") % 2 == 0),
-                "doc_id",
-            ),
-            _read(s, d, "documents"),
-            "doc_id",
-        ).select(F.col("value").alias("doc_id"), "maybe_present"),
+        # true only on (deterministic) bit collisions, which the
+        # undersized filter makes occur
+        "bloom_membership": lambda s, d: ded.bloom_novel(
+            _read(s, d, "documents").select("doc_id").distinct(),
+            _docid_bloom(s, d),
+            m_bits=_DOCID_BLOOM_M,
+            key=F.col("doc_id"),
+        ).select("doc_id", F.col("maybe_seen").alias("maybe_present")),
     }
     return _driver_sample_order(q)
 
@@ -2193,14 +2208,14 @@ def oracle_sql() -> dict[str, str]:
             )
         ),
         "source_overlap": sk_source_overlap_sql("documents"),
-        "bloom_docid_bits": sk_bloom_build_sql(
-            "(SELECT doc_id AS v FROM documents WHERE doc_id % 2 = 0)"
-        ),
+        "bloom_docid_bits": _docid_bloom_sql(),
         "bloom_membership": (
-            "SELECT value AS doc_id, maybe_present FROM ("
-            + sk_bloom_contains_sql(
-                "(SELECT doc_id AS v FROM documents WHERE doc_id % 2 = 0)",
-                "(SELECT doc_id AS v FROM documents)",
+            "SELECT doc_id, maybe_seen AS maybe_present FROM ("
+            + ded.bloom_novel_sql(
+                "(SELECT DISTINCT doc_id FROM documents)",
+                _docid_bloom_sql(),
+                m_bits=_DOCID_BLOOM_M,
+                key="doc_id",
             )
             + ")"
         ),

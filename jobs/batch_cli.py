@@ -33,7 +33,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from ocr_spark.pipeline.extract import extract_main_content, extraction_metrics
+    from ocr_spark.pipeline.extract import extract_documents_with_metrics, metrics_of
     from ocr_spark.pipeline.session import get_spark
     from ocr_spark.pipeline.sinks import write_csv_incremental, write_json_envelope
     from ocr_spark.sources.read import read_file_tree
@@ -43,10 +43,12 @@ def main() -> None:
     docs = read_file_tree(spark, args.input, glob=args.glob)
     if args.synthesize:
         docs = synthesize_spans(docs)
-    docs = docs.persist()
 
-    content = extract_main_content(docs)
-    metrics = extraction_metrics(docs).persist()
+    # ONE kernel pass: the nested output carries the spans and the
+    # per-doc metrics; the span table and every metrics sink below
+    # read it from the cache
+    nested = extract_documents_with_metrics(docs).persist()
+    metrics = metrics_of(nested)
 
     # per-doc flat results row (the CSV the reference writes per file)
     per_doc = metrics.select(
@@ -57,6 +59,7 @@ def main() -> None:
         F.col("warning"),
     )
     write_csv_incremental(per_doc, f"{args.output}/results_csv", append=args.append)
+    content = nested.select("doc_id", F.inline("spans"))
     content.write.mode("append" if args.append else "overwrite").parquet(
         f"{args.output}/spans"
     )
@@ -83,8 +86,7 @@ def main() -> None:
         metrics.limit(1000), meta, f"{args.output}/parsing_results.json"
     )
     print(json.dumps(meta))
-    docs.unpersist()
-    metrics.unpersist()
+    nested.unpersist()
     spark.stop()
 
 

@@ -92,16 +92,23 @@ def main() -> None:
         out = extract_main_content(docs).withColumn("recomputed", F.lit(1))
     out.write.mode("overwrite").parquet(args.output)
 
-    # counts from the COMMITTED table (one cheap read-back; counting
-    # `out` would re-execute the kernel), then publish today's state
-    # atomically: write beside, rename over — a crash before the
-    # rename leaves yesterday's state, and the next run re-extracts
-    # the same delta (idempotent)
-    committed = spark.read.parquet(args.output)
-    n_docs = committed.select("doc_id").distinct().count()
-    n_recomputed = (
-        committed.where("recomputed = 1").select("doc_id").distinct().count()
+    # counts from the COMMITTED table (one aggregate over one
+    # read-back; counting `out` would re-execute the kernel), then
+    # publish today's state atomically: write beside, rename over — a
+    # crash before the rename leaves yesterday's state, and the next
+    # run re-extracts the same delta (idempotent)
+    counts = (
+        spark.read.parquet(args.output)
+        .agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.countDistinct(
+                F.when(F.col("recomputed") == 1, F.col("doc_id"))
+            ).alias("n_recomputed"),
+            F.count(F.lit(1)).alias("n_span_rows"),
+        )
+        .first()
     )
+    n_docs, n_recomputed = counts.n_docs, counts.n_recomputed
     tmp_path = hashes_path + "._tmp"
     doc_input_hash(docs).write.mode("overwrite").parquet(tmp_path)
     publish_state(store.fs, store.path(tmp_path), jpath, jold)
@@ -113,7 +120,7 @@ def main() -> None:
                 "n_recomputed_docs": n_recomputed,
                 "n_carried_docs": n_docs - n_recomputed,
                 "had_state": bool(has_state),
-                "n_span_rows": committed.count(),
+                "n_span_rows": counts.n_span_rows,
             }
         )
     )

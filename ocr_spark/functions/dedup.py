@@ -844,10 +844,11 @@ def simhash_pairs_sql(
 
 
 def _content_key(canonical: bool):
-    """THE novelty-gate content key: md5 of the raw text, or of the
+    """The novelty-gate content key: md5 of the raw text, or of the
     canonicalized text (case/punct/whitespace-insensitive re-crawl
-    matching) when ``canonical`` — shared by novel_docs and the bloom
-    family so their verdicts agree on what "the same text" means."""
+    matching) when ``canonical``. The bloom family's default key is
+    the raw-text form; ``key=F.md5(canonical_text(F.col("text")))``
+    gates on the canonical form."""
     base = canonical_text(F.col("text")) if canonical else F.col("text")
     return F.md5(base)
 
@@ -1565,19 +1566,20 @@ BLOOM_K = 4
 
 
 def _bloom_positions(h_col, m_bits: int, k: int) -> list:
-    """k bit positions from ONE content hash column (the md5 hex of
-    the raw or canonicalized text): k cheap re-hashes of the 32-char
-    hex — never k scans of the text."""
+    """k bit positions from ONE key column (by default the md5 hex of
+    the text): k cheap re-hashes of the key's string form — never k
+    scans of the text."""
+    h = h_col.cast("string")
     return [
-        md5_long(F.concat(F.lit(f"bloom:{i}:"), h_col)) % m_bits
+        md5_long(F.concat(F.lit(f"bloom:{i}:"), h)) % m_bits
         for i in range(k)
     ]
 
 
-def _bloom_positions_sql(h_expr: str, m_bits: int, k: int) -> list[str]:
+def _bloom_positions_sql(key: str, m_bits: int, k: int) -> list[str]:
     out = []
     for i in range(k):
-        keyed = md5_long_sql(f"'bloom:{i}:' || {h_expr}")
+        keyed = md5_long_sql(f"'bloom:{i}:' || CAST(({key}) AS VARCHAR)")
         out.append(f"({keyed} % {m_bits})")
     return out
 
@@ -1586,27 +1588,33 @@ def bloom_build(
     docs: DataFrame,
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
-    canonical: bool = False,
+    key=None,
 ) -> DataFrame:
-    """Build the seen-set bloom filter over ``md5(text)``: a sparse
-    (word_idx, word) bitset table of at most ``ceil(m_bits/30)`` rows.
+    """Build the seen-set bloom filter over ``key`` (a Column; default
+    ``md5(text)``): a sparse (word_idx, word) bitset table of at most
+    ``ceil(m_bits/30)`` rows.
 
     The incremental-ingest artifact at the scale where
     :func:`novel_docs`'s exact anti-join shuffle is too expensive to
     re-run per batch: the corpus compresses to ~1.25 bytes/doc at 10
     bits/item (vs a 16-byte md5 key each), merges by ``bit_or`` and —
     unlike the exact key set — stays broadcastable far longer.
-    Guarantee is one-sided: a document whose text was inserted is
-    ALWAYS flagged seen; a novel document is falsely flagged with
-    probability ~(1-e^{-kn/m})^k. NULL-text rows are never inserted.
+    Guarantee is one-sided: a row whose key was inserted is ALWAYS
+    flagged seen; a novel key is falsely flagged with probability
+    ~(1-e^{-kn/m})^k. Rows with a NULL key (NULL text, by default) are
+    never inserted. Any key works — ``canonical_text`` for re-crawl
+    matching, ``doc_id`` for an id seen-set — as long as the build and
+    the gate use the same one.
 
     Shape: one pruned scan, explode of k ints/doc, one partial-agg
     shuffle on uniform ``word_idx`` keys bounded by m_bits/30 groups.
     """
-    pos = F.explode(
-        F.array(*_bloom_positions(_content_key(canonical), m_bits, k))
-    )
-    keyed = docs.where(F.col("text").isNotNull()).select(pos.alias("pos"))
+    key = F.md5(F.col("text")) if key is None else key
+    pos = F.explode(F.array(*_bloom_positions(key, m_bits, k)))
+    # a NULL key hashes to NULL positions; dropping those after the
+    # explode evaluates the key once per row (a filter on the key
+    # itself would be pushed below the explode and hash it twice)
+    keyed = docs.select(pos.alias("pos")).where(F.col("pos").isNotNull())
     wb = _BLOOM_WORD_BITS
     return (
         keyed.select(
@@ -1633,12 +1641,13 @@ def bloom_novel(
     bloom: DataFrame,
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
-    canonical: bool = False,
+    key=None,
 ) -> DataFrame:
-    """Gate ``new_docs`` against a :func:`bloom_build` table: adds
-    ``maybe_seen`` (true = the filter MAY have seen this exact text;
-    false = certainly novel). Row-preserving — callers filter
-    ``~maybe_seen`` for the certain-novel stream and route the
+    """Gate ``new_docs`` against a :func:`bloom_build` table built
+    over the same ``key`` (default ``md5(text)``): adds ``maybe_seen``
+    (true = the filter MAY have seen this key; false = certainly
+    novel; always false for a NULL key). Row-preserving — callers
+    filter ``~maybe_seen`` for the certain-novel stream and route the
     maybe-seen remainder (FP-rate-sized) to the exact check.
 
     Shape: k broadcast hash joins against the (tiny, unique-keyed)
@@ -1656,13 +1665,12 @@ def bloom_novel(
             f"input already has column(s) {clash} — rename them (or the "
             "prior maybe_seen verdict) before gating"
         )
-    # ONE md5 of the full text per row; the k positions are cheap
-    # re-hashes of the 32-char hex, all in a single projection BEFORE
-    # any join (withColumn-per-join would re-evaluate the full-text
-    # md5 in every join stage's Project).
-    out = new_docs.withColumn("_bh", _content_key(canonical))
-    for i in range(k):
-        pos = md5_long(F.concat(F.lit(f"bloom:{i}:"), F.col("_bh"))) % m_bits
+    # ONE evaluation of the key per row (one md5 of the full text, by
+    # default); the k positions are cheap re-hashes of it, all in a
+    # single projection BEFORE any join (withColumn-per-join would
+    # re-evaluate the key in every join stage's Project).
+    out = new_docs.withColumn("_bh", F.md5(F.col("text")) if key is None else key)
+    for i, pos in enumerate(_bloom_positions(F.col("_bh"), m_bits, k)):
         out = out.withColumn(f"_bp{i}", pos)
     hits = []
     for i in range(k):
@@ -1681,7 +1689,7 @@ def bloom_novel(
     seen = hits[0]
     for h in hits[1:]:
         seen = seen & h
-    maybe_seen = F.when(F.col("text").isNull(), F.lit(False)).otherwise(seen)
+    maybe_seen = F.when(F.col("_bh").isNull(), F.lit(False)).otherwise(seen)
     drop = ["_bh"] + [
         c for i in range(k) for c in (f"_bp{i}", f"_bw{i}", f"_bword{i}")
     ]
@@ -1692,18 +1700,19 @@ def bloom_build_sql(
     table: str = "documents",
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
-    canonical: bool = False,
+    key: str = "md5(text)",
 ) -> str:
-    """DuckDB twin of :func:`bloom_build` (``//`` floors, but every
-    position is non-negative, so it equals Spark's ``div``)."""
-    ps = _bloom_positions_sql(_content_key_sql("text", canonical), m_bits, k)
+    """DuckDB twin of :func:`bloom_build`; ``key`` is the SQL twin of
+    the key Column (``//`` floors, but every position is non-negative,
+    so it equals Spark's ``div``)."""
+    ps = _bloom_positions_sql(key, m_bits, k)
     return f"""
       SELECT pos // {_BLOOM_WORD_BITS} AS word_idx,
              bit_or(CAST(1 AS BIGINT) << CAST(pos % {_BLOOM_WORD_BITS} AS INT))
                AS word
       FROM (
         SELECT unnest([{', '.join(ps)}]) AS pos
-        FROM {table} WHERE text IS NOT NULL
+        FROM {table} WHERE ({key}) IS NOT NULL
       ) GROUP BY 1
     """
 
@@ -1714,11 +1723,11 @@ def bloom_novel_sql(
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
     id_sql: str = "CAST(doc_id AS BIGINT)",
-    canonical: bool = False,
+    key: str = "md5(text)",
 ) -> str:
     """DuckDB twin of :func:`bloom_novel`, projected to
     (doc_id, maybe_seen)."""
-    ps = _bloom_positions_sql(_content_key_sql("d.text", canonical), m_bits, k)
+    ps = _bloom_positions_sql(key, m_bits, k)
     joins, hits = [], []
     for i, p in enumerate(ps):
         joins.append(
@@ -1731,7 +1740,7 @@ def bloom_novel_sql(
     return f"""
       WITH bloom AS ({bloom_sql})
       SELECT {id_sql} AS doc_id,
-             CASE WHEN d.text IS NULL THEN false
+             CASE WHEN ({key}) IS NULL THEN false
                   ELSE {' AND '.join(hits)} END AS maybe_seen
       FROM {new_table} d
       {' '.join(joins)}

@@ -5,14 +5,12 @@ is:
 
 - count-min (``cms_*``): approximate token frequencies, one-sided
   over-estimates;
-- Bloom filter (``bloom_*``): approximate set membership, no false
-  negatives;
 - HDR histogram (``hist_*``): quantiles with bounded relative error;
 - bottom-k (``source_overlap``): pairwise source-overlap estimates.
 
-Count-min, Bloom and histogram sketches built independently per
-shard/day merge (``*_merge``) into exactly the sketch a single pass
-would have built, so daily jobs keep running summaries without
+Count-min and histogram sketches built independently per shard/day
+merge (``*_merge``) into exactly the sketch a single pass would have
+built, so daily jobs keep running summaries without
 reprocessing history. Hashing and binning are integer work, so each
 sketch table is deterministic and has an exact DuckDB twin.
 """
@@ -138,154 +136,6 @@ def cms_build_sql(
       ) GROUP BY row, cell
     """
 
-# ---------------------------------------------------------------------------
-# Bloom filter (approximate set membership, mergeable)
-# ---------------------------------------------------------------------------
-
-BLOOM_BITS = 1 << 16  # filter size m; FP rate ~ (1 - e^{-kn/m})^k
-BLOOM_K = 4  # hash functions per value
-
-# The incremental-ingest staple: "which of today's doc ids did we
-# already ingest?" answered without shuffling yesterday's id set —
-# the filter is at most m rows (set bit positions) no matter how many
-# ids went in, and filters built per shard/day merge by bit-OR (set
-# union of the bit tables) into exactly the single-pass filter.
-# Membership is one-sided: an inserted value is ALWAYS reported
-# present (no false negatives); an absent value is reported present
-# with probability ~(1 - e^{-kn/m})^k. Same portable salted-md5 cells
-# as the CMS, so the bit table itself is deterministic and
-# cross-engine oracle-checkable.
-
-
-def _bloom_bits(col_expr, m_bits: int, k: int, salt: str):
-    from ocr_spark.functions.hashing import md5_long
-
-    v = F.coalesce(col_expr.cast("string"), F.lit(""))
-    return F.array(
-        *[
-            (md5_long(F.concat(F.lit(f"{salt}:{i}:"), v)) % m_bits)
-            for i in range(k)
-        ]
-    )
-
-
-def bloom_build(
-    df: DataFrame,
-    col: str,
-    m_bits: int = BLOOM_BITS,
-    k: int = BLOOM_K,
-    salt: str = "bloom:v1",
-) -> DataFrame:
-    """(bit,): the set bit positions of a Bloom filter over ``col`` —
-    one scan (each value expands to ``k`` bits in-plan), one shuffle
-    of at most ``m_bits`` groups with map-side partial dedup."""
-    return (
-        df.select(F.explode(_bloom_bits(F.col(col), m_bits, k, salt)).alias("bit"))
-        .distinct()
-    )
-
-
-def bloom_merge(filters: DataFrame) -> DataFrame:
-    """Merge shard bit tables by union — equals the single-pass
-    filter EXACTLY (bit-OR is the Bloom merge).
-
-    CALLER CONTRACT: same (m_bits, k, salt) for every input filter;
-    the bit table carries no parameter metadata (same caveat as
-    :func:`cms_merge`). Persist the parameters next to the filter."""
-    return filters.select("bit").distinct()
-
-
-def bloom_contains(
-    bloom: DataFrame,
-    df: DataFrame,
-    col: str,
-    m_bits: int = BLOOM_BITS,
-    k: int = BLOOM_K,
-    salt: str = "bloom:v1",
-    out: str = "maybe_present",
-) -> DataFrame:
-    """(value, maybe_present): membership probes for the distinct
-    values of ``df.col`` — true iff ALL ``k`` of the value's bits are
-    set. Broadcast-friendly: the filter is at most ``m_bits`` rows, so
-    the probe is a scan-stage broadcast join however large the probe
-    side is. ``bloom`` must be a DISTINCT bit table (what
-    :func:`bloom_build`/:func:`bloom_merge` emit) — duplicate bit rows
-    would fan the count out and report false non-membership."""
-    hashed = (
-        df.select(F.col(col).alias("value"))
-        .distinct()
-        .select(
-            "value",
-            F.explode(_bloom_bits(F.col("value"), m_bits, k, salt)).alias("bit"),
-        )
-    )
-    # left join + count of MATCHED bits (count of a non-null column),
-    # grouped on the probe value itself — NULL probe values stay one
-    # group, so no join-back on a NULL key is ever needed
-    return (
-        hashed.join(
-            F.broadcast(bloom.select(F.col("bit").alias("_set_bit"))),
-            hashed["bit"] == F.col("_set_bit"),
-            "left",
-        )
-        .groupBy("value")
-        .agg((F.count("_set_bit") == k).alias(out))
-    )
-
-
-def _bloom_bits_sql(value_expr: str, m_bits: int, k: int, salt: str) -> str:
-    """DuckDB bit expression for row index ``r.i`` (0..k-1)."""
-    from ocr_spark.functions.hashing import md5_long_sql
-
-    s = salt.replace("'", "''")
-    h = md5_long_sql(
-        f"'{s}:' || CAST(r.i AS VARCHAR) || ':' || "
-        f"coalesce(CAST({value_expr} AS VARCHAR), '')"
-    )
-    return f"{h} % {m_bits}"
-
-
-def bloom_build_sql(
-    values_source: str,
-    m_bits: int = BLOOM_BITS,
-    k: int = BLOOM_K,
-    salt: str = "bloom:v1",
-) -> str:
-    """DuckDB twin of :func:`bloom_build`; ``values_source`` must
-    yield one column named ``v``."""
-    bit = _bloom_bits_sql("v", m_bits, k, salt)
-    return f"""
-      SELECT DISTINCT {bit} AS bit
-      FROM {values_source} CROSS JOIN range(0, {k}) r(i)
-    """
-
-
-def bloom_contains_sql(
-    build_source: str,
-    probe_source: str,
-    m_bits: int = BLOOM_BITS,
-    k: int = BLOOM_K,
-    salt: str = "bloom:v1",
-    out: str = "maybe_present",
-) -> str:
-    """DuckDB twin of ``bloom_contains(bloom_build(build), probe)``;
-    both sources must yield one column named ``v``."""
-    bit = _bloom_bits_sql("v", m_bits, k, salt)
-    return f"""
-      WITH bloom AS (
-        SELECT DISTINCT {bit} AS bit
-        FROM {build_source} CROSS JOIN range(0, {k}) r(i)
-      ),
-      hashed AS (
-        SELECT v AS value, {bit} AS bit
-        FROM (SELECT DISTINCT v FROM {probe_source}) CROSS JOIN range(0, {k}) r(i)
-      )
-      SELECT h.value,
-             count(b.bit) = {k} AS {out}
-      FROM hashed h LEFT JOIN bloom b ON h.bit = b.bit
-      GROUP BY h.value
-    """
-
 
 # ---------------------------------------------------------------------------
 # mergeable quantile sketch (HDR-histogram binning, integer-exact)
@@ -364,7 +214,7 @@ def hist_sketch_build(
     and per-shard/day sketches merge by bin addition into exactly the
     single-pass sketch. Binning is pure integer work — floor(log2 v)
     is the binary-string length, no libm — so sketch AND estimates are
-    engine-exact and oracle-checkable (the CMS/Bloom discipline).
+    engine-exact and oracle-checkable (the CMS discipline).
     NULLs and values <= 0 occupy the dedicated zero bin (rows are
     never dropped); values below 2^(sub_bits+1) get exact unit bins;
     counts/lengths/latencies are the intended domain."""

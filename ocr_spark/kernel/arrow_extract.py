@@ -420,24 +420,3 @@ def extract_nested_metrics_batch(
         ],
         names=["doc_id", "spans", "n_spans_in", "n_spans_out", "parse_failed"],
     )
-
-
-def metrics_batch(
-    batch: pa.RecordBatch, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> pa.RecordBatch:
-    """DOC_METRICS_SCHEMA: per-doc spans in/out, failure flags."""
-    flat, _kept, _bid, _ld, lens_all, empty_m, malformed_m = _run(batch, cfg)
-    kept_counts = np.bincount(flat.doc_idx, minlength=batch.num_rows).astype(np.int64)
-    failed = (empty_m | malformed_m).astype(np.int32)
-    warn = np.where(empty_m, WARN_EMPTY, np.where(malformed_m, WARN_MALFORMED, ""))
-    doc_ids = _doc_ids_array(batch)
-    return pa.RecordBatch.from_arrays(
-        [
-            doc_ids.cast(pa.string()),
-            pa.array(lens_all, pa.int64()),
-            pa.array(kept_counts, pa.int64()),
-            pa.array(failed, pa.int32()),
-            pa.array(warn.tolist(), pa.string()),
-        ],
-        names=["doc_id", "n_spans_in", "n_spans_out", "parse_failed", "warning"],
-    )

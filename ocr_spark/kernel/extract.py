@@ -334,40 +334,3 @@ def extract_nested_metrics(
             ),
         }
     )
-
-
-def doc_metrics(pdf: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.DataFrame:
-    """Per-doc extraction metrics (A4): spans in/out, failures.
-
-    Built positionally per INPUT ROW (a doc_id-keyed merge would fan
-    out on duplicate ids, which are error docs by contract)."""
-    out = extract_flat(pdf, cfg)
-    warn_of = {}
-    for did, w in zip(
-        out.loc[out["kind"] == KIND_ERROR, "doc_id"],
-        out.loc[out["kind"] == KIND_ERROR, "text"],
-    ):
-        warn_of.setdefault(did, w)
-    out_ids = pdf["doc_id"].tolist()
-    spans = _group_spans(out, out_ids)
-    n_in = [len(s) if s is not None else 0 for s in pdf["spans"]]
-    # warning is ROW-specific (matching the arrow kernel): an empty row
-    # of a failed doc reports EMPTY even when a duplicate sibling row
-    # reports MALFORMED
-    warnings = [
-        (WARN_EMPTY if n == 0 else WARN_MALFORMED)
-        if (d is None or pd.isna(d) or d in warn_of)
-        else ""
-        for d, n in zip(out_ids, n_in)
-    ]
-    return pd.DataFrame(
-        {
-            "doc_id": [_render_id(d) for d in out_ids],
-            "n_spans_in": np.asarray(n_in, dtype=np.int64),
-            "n_spans_out": np.fromiter(
-                (len(s) for s in spans), dtype=np.int64, count=len(spans)
-            ),
-            "parse_failed": np.asarray([1 if w else 0 for w in warnings], dtype=np.int32),
-            "warning": warnings,
-        }
-    )

@@ -39,11 +39,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.kernel import arrow_extract as ak
-from ocr_spark.kernel.extract import DEFAULT_CONFIG, PARITY_CONFIG, ExtractConfig
+from ocr_spark.kernel.extract import (
+    DEFAULT_CONFIG,
+    PARITY_CONFIG,
+    WARN_EMPTY,
+    WARN_MALFORMED,
+    ExtractConfig,
+)
 from ocr_spark.pipeline.session import settle_python_worker
 from ocr_spark.schema import (
     ANNOTATED_SPAN_SCHEMA,
-    DOC_METRICS_SCHEMA,
     DOC_WITH_METRICS_SCHEMA,
     KIND_ERROR,
 )
@@ -149,8 +154,26 @@ def extract_documents_with_metrics(
 
 
 def extraction_metrics(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Per-doc metrics (A4): n_spans_in/out, parse_failed, warning."""
-    return _run_kernel(df, ak.metrics_batch, DOC_METRICS_SCHEMA, cfg)
+    """Per-doc metrics (A4): n_spans_in/out, parse_failed, warning —
+    one row per input row, projected from
+    :func:`extract_documents_with_metrics`."""
+    return metrics_of(extract_documents_with_metrics(df, cfg))
+
+
+def metrics_of(nested: DataFrame) -> DataFrame:
+    """(doc_id, n_spans_in, n_spans_out, parse_failed, warning) of an
+    :func:`extract_documents_with_metrics` frame. ``warning`` follows
+    from the counts row by row: the kernel fails a row iff it has no
+    spans (empty) or its doc is malformed, so ``n_spans_in = 0`` picks
+    the empty warning, even on a malformed doc's empty row."""
+    warning = (
+        F.when(F.col("n_spans_in") == 0, F.lit(WARN_EMPTY))
+        .when(F.col("parse_failed") == 1, F.lit(WARN_MALFORMED))
+        .otherwise(F.lit(""))
+    )
+    return nested.select(
+        "doc_id", "n_spans_in", "n_spans_out", "parse_failed", warning.alias("warning")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -120,17 +120,6 @@ ANNOTATED_SPAN_SCHEMA = StructType(
     ]
 )
 
-# Per-document extraction metrics (SURVEY.md A4 / north rule).
-DOC_METRICS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("n_spans_in", LongType(), True),
-        StructField("n_spans_out", LongType(), True),
-        StructField("parse_failed", IntegerType(), True),
-        StructField("warning", StringType(), True),
-    ]
-)
-
 # Nested extraction output WITH per-doc metrics carried alongside —
 # the single-kernel-pass shape the checkpointed runner writes (metrics
 # cost 3 ints/doc in parquet; per-bucket lineage aggregates come from

@@ -5,6 +5,7 @@ malformed spans, giant skew-tail docs, unordered offsets)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 import pytest
 
@@ -12,7 +13,8 @@ from ocr_spark.fixtures import generate_corpus
 from ocr_spark.kernel.extract import (
     DEFAULT_CONFIG,
     PARITY_CONFIG,
-    doc_metrics,
+    WARN_EMPTY,
+    WARN_MALFORMED,
     extract_flat,
     extract_nested_metrics,
 )
@@ -63,6 +65,20 @@ def _main_content(pdf, cfg=DEFAULT_CONFIG):
     return flat[flat["kind"] != KIND_ERROR]
 
 
+def _metrics_spec(pdf, cfg=DEFAULT_CONFIG):
+    """Spec of extraction_metrics: the nested spec's counts, and a
+    failed row's warning — EMPTY when the row has no spans, else
+    MALFORMED (row-specific: an empty row of a duplicated doc reports
+    EMPTY while its sibling reports MALFORMED)."""
+    m = extract_nested_metrics(pdf, cfg).drop(columns="spans")
+    failed = m["parse_failed"].to_numpy() == 1
+    empty = m["n_spans_in"].to_numpy() == 0
+    m["warning"] = np.where(
+        failed, np.where(empty, WARN_EMPTY, WARN_MALFORMED), ""
+    )
+    return m
+
+
 def _table_rows(t: pa.Table):
     def freeze(v):
         return tuple(tuple(x.values()) for x in v) if isinstance(v, list) else v
@@ -102,13 +118,13 @@ def test_nested_equivalence(request, corpus):
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_metrics_equivalence(request, corpus):
     df = request.getfixturevalue(corpus)
-    assert_matches_spec(extraction_metrics(df), doc_metrics, df)
+    assert_matches_spec(extraction_metrics(df), _metrics_spec, df)
 
 
 @pytest.mark.parametrize("corpus", ["synth_docs", "hostile_docs"])
 def test_nested_metrics_equivalence(request, corpus):
     # the runner's single-pass commit shape: equal to the pandas spec,
-    # and it must agree with the two separate kernels it replaces
+    # and extraction_metrics reports the same counts
     df = request.getfixturevalue(corpus)
     assert_matches_spec(extract_documents_with_metrics(df), extract_nested_metrics, df)
     combined = {
@@ -177,6 +193,46 @@ def test_null_doc_id_rows_become_errors(spark):
     assert m[""] == (0, 1), m
     assert m["ok"] == (1, 0), m
     assert_matches_spec(extract_documents_with_metrics(df), extract_nested_metrics, df)
+
+
+def _span(off, kind="text", text=None):
+    return {"kind": kind, "text": f"s{off}" if text is None else text,
+            "media_ref": "", "offset": off}
+
+
+# extraction_metrics rows of _HOSTILE_ROWS, pinned: the kernel's
+# per-row failure rules on an empty row, a NULL spans row, a malformed
+# span, a duplicated doc_id (one row with spans, one without) and a
+# NULL doc_id (rendered as '').
+_HOSTILE_ROWS = [
+    ("ok", [_span(0), _span(1, "page_header", "h"), _span(2, "link", "http://x")]),
+    ("empty", []),
+    ("nullspans", None),
+    ("malformed", [_span(0), {"kind": None, "text": "x", "media_ref": "", "offset": 1}]),
+    ("dup", [_span(0), _span(1)]),
+    ("dup", []),
+    (None, [_span(0)]),
+]
+_HOSTILE_METRICS = [
+    ("", 1, 0, 1, "PROCESSING_ERROR: malformed spans"),
+    ("dup", 0, 0, 1, "OCR_EMPTY_OR_FAILED"),
+    ("dup", 2, 0, 1, "PROCESSING_ERROR: malformed spans"),
+    ("empty", 0, 0, 1, "OCR_EMPTY_OR_FAILED"),
+    ("malformed", 2, 0, 1, "PROCESSING_ERROR: malformed spans"),
+    ("nullspans", 0, 0, 1, "OCR_EMPTY_OR_FAILED"),
+    ("ok", 3, 1, 0, ""),
+]
+
+
+def test_extraction_metrics_hostile_rows_are_pinned(spark):
+    df = spark.createDataFrame(
+        _HOSTILE_ROWS,
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    ).coalesce(1)
+    got = sorted(map(tuple, extraction_metrics(df).collect()), key=repr)
+    assert got == _HOSTILE_METRICS
+    assert_matches_spec(extraction_metrics(df), _metrics_spec, df)
 
 
 def test_null_spans_row(spark):

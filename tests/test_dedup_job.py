@@ -362,3 +362,44 @@ def test_dedup_job_empty_bloom_reloads_as_nothing_seen(spark, tmp_path, capsys):
         job.main()
     s2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert s2["bloom_dups_removed"] == 0 and s2["n_keep"] == 1
+
+
+def test_batch_cli_outputs_equal_the_kernel_surfaces(spark, tmp_path, capsys):
+    """batch_cli runs the kernel once: its span table equals
+    extract_main_content and its CSV equals extraction_metrics on the
+    same input, error rows (empty docs, malformed spans) included."""
+    from ocr_spark.fixtures import generate_corpus
+    from ocr_spark.pipeline.extract import extract_main_content, extraction_metrics
+    from ocr_spark.pipeline.sinks import read_csv_table
+    from ocr_spark.schema import DOC_SCHEMA
+
+    tree = str(tmp_path / "tree")
+    spark.createDataFrame(
+        generate_corpus(n_docs=80, seed=3, giant_frac=0.0), schema=DOC_SCHEMA
+    ).write.parquet(tree)
+    out = str(tmp_path / "out")
+
+    sys.path.insert(0, JOBS)
+    import batch_cli as job
+
+    argv = ["batch_cli.py", "--input", tree, "--output", out]
+    with patch.object(sys, "argv", argv), patch.object(SparkSession, "stop", lambda self: None):
+        job.main()
+    meta = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    docs = spark.read.parquet(tree)
+    want_spans = sorted(map(tuple, extract_main_content(docs).collect()))
+    got_spans = sorted(map(tuple, spark.read.parquet(f"{out}/spans").collect()))
+    assert got_spans == want_spans
+
+    # the CSV carries every column as a string
+    want = sorted(
+        tuple("" if v is None else str(v) for v in r)
+        for r in extraction_metrics(docs).collect()
+    )
+    got = sorted(
+        tuple("" if v is None else v for v in r)
+        for r in read_csv_table(spark, f"{out}/results_csv").collect()
+    )
+    assert got == want
+    assert meta["parse_failures"] == sum(int(r[3]) for r in want) > 0

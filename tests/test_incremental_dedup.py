@@ -318,7 +318,7 @@ def test_novel_docs_canonical_matches_recrawl_variants(spark):
 
 
 def test_bloom_canonical_gate(spark):
-    from ocr_spark.functions.dedup import bloom_build, bloom_novel
+    from ocr_spark.functions.dedup import bloom_build, bloom_novel, canonical_text
 
     corp = spark.createDataFrame(
         [(1, "Hello, World!")], "doc_id long, text string"
@@ -326,10 +326,11 @@ def test_bloom_canonical_gate(spark):
     probe = spark.createDataFrame(
         [(10, "hello   world"), (11, "brand new")], "doc_id long, text string"
     )
-    bl = bloom_build(corp, canonical=True)
+    canon = F.md5(canonical_text(F.col("text")))
+    bl = bloom_build(corp, key=canon)
     v = {
         r.doc_id: r.maybe_seen
-        for r in bloom_novel(probe, bl, canonical=True).collect()
+        for r in bloom_novel(probe, bl, key=canon).collect()
     }
     assert v == {10: True, 11: False}
     # raw filter does NOT match the re-cased re-crawl
@@ -338,3 +339,45 @@ def test_bloom_canonical_gate(spark):
         for r in bloom_novel(probe, bloom_build(corp)).collect()
     }
     assert v0 == {10: False, 11: False}
+
+
+# (word_idx, word) rows of the default filter (m = 2^20, k = 4, key
+# md5(text)) over _PINNED_TEXTS. Filters persisted by jobs/dedup.py
+# --save-bloom are read back by later runs, so these rows may never
+# change.
+_PINNED_TEXTS = [
+    (1, "alpha beta gamma"),
+    (2, "delta epsilon zeta"),
+    (3, ""),
+    (4, "Ünïcödé text"),
+    (5, "the quick brown fox"),
+]
+_PINNED_ROWS = [
+    (604, 4194304),
+    (3551, 268435456),
+    (5938, 32),
+    (7349, 32768),
+    (8352, 4194304),
+    (10396, 65536),
+    (10684, 4),
+    (15394, 33554432),
+    (15420, 1048576),
+    (17091, 64),
+    (18253, 536870912),
+    (19284, 16777216),
+    (19706, 2097152),
+    (21674, 268435456),
+    (21820, 2048),
+    (22419, 65536),
+    (24364, 256),
+    (26157, 131072),
+    (30160, 4096),
+    (31293, 33554432),
+]
+
+
+def test_bloom_persisted_rows_are_pinned(spark):
+    from ocr_spark.functions.dedup import bloom_build
+
+    docs = spark.createDataFrame(_PINNED_TEXTS, "doc_id long, text string")
+    assert sorted(map(tuple, bloom_build(docs).collect())) == _PINNED_ROWS

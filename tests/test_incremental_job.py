@@ -48,6 +48,20 @@ def _docs_parquet(spark, tmp_path, name, where=None, edit_ids=None):
     return p
 
 
+def _direct_counts(spark, out):
+    """The summary's counts, each by its own scan of the committed
+    table (the job computes them in one aggregate)."""
+    t = spark.read.parquet(out)
+    n_docs = t.select("doc_id").distinct().count()
+    n_rec = t.where("recomputed = 1").select("doc_id").distinct().count()
+    return {
+        "n_docs": n_docs,
+        "n_recomputed_docs": n_rec,
+        "n_carried_docs": n_docs - n_rec,
+        "n_span_rows": t.count(),
+    }
+
+
 def test_day0_then_delta_then_idempotent(spark, tmp_path):
     from ocr_spark.pipeline.extract import extract_main_content
     from ocr_spark.sources.synth import synthesize_spans
@@ -59,6 +73,8 @@ def test_day0_then_delta_then_idempotent(spark, tmp_path):
     s0 = _run(["--input", day0, "--synthesize", "--output", out0, "--state", state])
     assert not s0["had_state"]
     assert s0["n_recomputed_docs"] == s0["n_docs"] == 250
+    direct = _direct_counts(spark, out0)
+    assert {k: s0[k] for k in direct} == direct
     # day 1: full corpus, two even docs edited -> recompute = odds
     # (new) + the two edits; everything else carried
     day1 = _docs_parquet(spark, tmp_path, "day1", edit_ids=[0, 42])
@@ -71,6 +87,8 @@ def test_day0_then_delta_then_idempotent(spark, tmp_path):
     assert s1["n_docs"] == 500
     assert s1["n_recomputed_docs"] == 250 + 2
     assert s1["n_carried_docs"] == 248
+    direct = _direct_counts(spark, out1)
+    assert {k: s1[k] for k in direct} == direct
     # the committed table equals a FULL extraction of day-1's corpus
     got = sorted(
         map(

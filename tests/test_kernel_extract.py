@@ -1,4 +1,5 @@
-"""Kernel unit tests — pure pandas, no SparkSession (SURVEY.md §5.2.1)."""
+"""Kernel unit tests — pure pandas (SURVEY.md §5.2.1), except
+test_doc_metrics, which checks the Spark metrics projection."""
 
 import numpy as np
 import pandas as pd
@@ -11,7 +12,6 @@ from ocr_spark.kernel.extract import (
     TRUNCATION_NOTE,
     WARN_EMPTY,
     WARN_MALFORMED,
-    doc_metrics,
     extract_flat,
     extract_nested_metrics,
 )
@@ -220,14 +220,23 @@ def test_nested_roundtrip_and_stability():
     assert [s["text"] for s in again["spans"].iloc[0]] == ["a", "b"]
 
 
-def test_doc_metrics():
+def test_doc_metrics(spark):
+    # the per-doc metrics surface is the Spark projection
+    # extraction_metrics of the nested kernel output
+    from ocr_spark.pipeline.extract import extraction_metrics
+    from ocr_spark.schema import DOC_SCHEMA
+
     docs = [
         mkdoc("d1", [("text", "a", ""), ("page_header", "h", ""), ("link", "http://x", "")]),
         {"doc_id": "d2", "spans": []},
     ]
-    m = doc_metrics(to_pdf(docs)).set_index("doc_id")
+    df = spark.createDataFrame(
+        [(d["doc_id"], d["spans"]) for d in docs], schema=DOC_SCHEMA
+    )
+    m = extraction_metrics(df).toPandas().set_index("doc_id")
     assert m.loc["d1", "n_spans_in"] == 3
     assert m.loc["d1", "n_spans_out"] == 1
     assert m.loc["d1", "parse_failed"] == 0
+    assert m.loc["d1", "warning"] == ""
     assert m.loc["d2", "parse_failed"] == 1
     assert m.loc["d2", "warning"] == WARN_EMPTY

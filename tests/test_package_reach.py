@@ -127,6 +127,23 @@ def test_every_package_function_is_referenced():
     )
 
 
+def test_no_public_name_is_defined_twice():
+    """One implementation per operator: no public top-level function
+    or class name is defined in two ``ocr_spark`` modules. Two
+    modules defining ``bloom_build`` meant two Bloom filters with
+    different layouts and hashes."""
+    where: dict[str, list[str]] = {}
+    for mod, path in sorted(_package_modules().items()):
+        tree = ast.parse(open(path, encoding="utf-8").read(), path)
+        for node in tree.body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not node.name.startswith("_"):
+                where.setdefault(node.name, []).append(mod)
+    twice = {name: mods for name, mods in where.items() if len(mods) > 1}
+    assert not twice, f"public names defined in several modules: {twice}"
+
+
 def test_extract_job_reaches_only_the_extraction_closure():
     """jobs/extract.py is a thin CLI over the runner, the session and
     the synthesizer: of the operator modules it may reach only the two

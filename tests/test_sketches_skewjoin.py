@@ -1,5 +1,6 @@
-"""Salted skew join + mergeable count-min, Bloom, histogram and
-bottom-k sketches."""
+"""Salted skew join, mergeable count-min, histogram and bottom-k
+sketches, and the dedup Bloom filter keyed on a column other than the
+text."""
 
 from __future__ import annotations
 
@@ -147,26 +148,29 @@ def test_cms_null_values_hash_as_empty(spark):
 
 
 # ---------------------------------------------------------------------------
-# Bloom filter
+# Bloom filter (functions/dedup.py) over an arbitrary key column
 # ---------------------------------------------------------------------------
 
 
 def test_bloom_no_false_negatives_and_twin_parity(spark):
     import duckdb
 
-    from ocr_spark.functions.sketches import (
+    from ocr_spark.functions.dedup import (
         bloom_build,
         bloom_build_sql,
-        bloom_contains,
-        bloom_contains_sql,
+        bloom_novel,
+        bloom_novel_sql,
     )
 
+    m = 1 << 12
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     inserted = docs.where(F.col("doc_id") % 2 == 0)
-    bloom = bloom_build(inserted, "doc_id")
+    bloom = bloom_build(inserted, m_bits=m, key=F.col("doc_id"))
     probed = {
-        r.value: r.maybe_present
-        for r in bloom_contains(bloom, docs, "doc_id").collect()
+        r.doc_id: r.maybe_seen
+        for r in bloom_novel(
+            docs.select("doc_id"), bloom, m_bits=m, key=F.col("doc_id")
+        ).collect()
     }
     # every inserted value must be reported present (one-sided)
     assert all(probed[i] for i in probed if i % 2 == 0)
@@ -177,29 +181,30 @@ def test_bloom_no_false_negatives_and_twin_parity(spark):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
     )
-    build_src = "(SELECT doc_id AS v FROM documents WHERE doc_id % 2 = 0)"
-    probe_src = "(SELECT doc_id AS v FROM documents)"
-    got_bits = sorted(r.bit for r in bloom.collect())
-    want_bits = sorted(
-        r[0] for r in con.execute(bloom_build_sql(build_src)).fetchall()
+    build_sql = bloom_build_sql(
+        "(SELECT * FROM documents WHERE doc_id % 2 = 0)", m_bits=m, key="doc_id"
     )
-    assert got_bits == want_bits and len(got_bits) > 0
+    got_rows = sorted(map(tuple, bloom.collect()))
+    want_rows = sorted(map(tuple, con.execute(build_sql).fetchall()))
+    assert got_rows == want_rows and len(got_rows) > 0
     want_probe = dict(
-        con.execute(bloom_contains_sql(build_src, probe_src)).fetchall()
+        con.execute(
+            bloom_novel_sql("documents", build_sql, m_bits=m, key="doc_id")
+        ).fetchall()
     )
     assert probed == want_probe
 
 
 def test_bloom_fp_rate_within_theory(spark):
-    from ocr_spark.functions.sketches import bloom_build, bloom_contains
+    from ocr_spark.functions.dedup import bloom_build, bloom_novel
 
     m, k, n = 1 << 12, 4, 1000
     inserted = spark.range(n).selectExpr("concat('in:', id) AS v")
     absent = spark.range(n).selectExpr("concat('out:', id) AS v")
-    bloom = bloom_build(inserted, "v", m_bits=m, k=k)
+    bloom = bloom_build(inserted, m_bits=m, k=k, key=F.col("v"))
     fp = (
-        bloom_contains(bloom, absent, "v", m_bits=m, k=k)
-        .where("maybe_present")
+        bloom_novel(absent, bloom, m_bits=m, k=k, key=F.col("v"))
+        .where("maybe_seen")
         .count()
     )
     import math
@@ -209,39 +214,43 @@ def test_bloom_fp_rate_within_theory(spark):
 
 
 def test_bloom_shard_merge_equals_single_pass(spark):
-    from ocr_spark.functions.sketches import bloom_build, bloom_merge
+    from ocr_spark.functions.dedup import bloom_build, bloom_merge
 
     toks = _tokens(spark)
-    single = sorted(r.bit for r in bloom_build(toks, "token").collect())
+    key = F.col("token")
+    single = sorted(map(tuple, bloom_build(toks, key=key).collect()))
     shards = [
         bloom_build(
             toks.where(
                 (F.md5(F.col("token")).substr(1, 2) > F.lit("7f")) == bool(i)
             ),
-            "token",
+            key=key,
         )
         for i in (0, 1)
     ]
-    merged = sorted(
-        r.bit for r in bloom_merge(shards[0].unionAll(shards[1])).collect()
+    merged = sorted(map(tuple, bloom_merge(*shards).collect()))
+    assert merged == single  # bit_or (set union) is lossless
+
+
+def test_bloom_null_key_is_never_inserted_or_seen(spark):
+    from ocr_spark.functions.dedup import bloom_build, bloom_novel
+
+    # a NULL key inserts nothing, and the gate keeps its row with
+    # maybe_seen false (no NULL-key join dropout)
+    key = F.col("v")
+    with_null = bloom_build(
+        spark.createDataFrame([(None,), ("x",)], "v string"), key=key
     )
-    assert merged == single  # bit-OR (set union) is lossless
-
-
-def test_bloom_null_probe_value_is_matchable(spark):
-    from ocr_spark.functions.sketches import bloom_build, bloom_contains
-
-    # NULL hashes as '' on both build and probe sides, and the probe
-    # result keeps the NULL row (no NULL-key join dropout)
-    bloom = bloom_build(spark.createDataFrame([(None,), ("x",)], "v string"), "v")
+    without = bloom_build(spark.createDataFrame([("x",)], "v string"), key=key)
+    assert sorted(map(tuple, with_null.collect())) == sorted(
+        map(tuple, without.collect())
+    )
+    probe = spark.createDataFrame([(None,), ("x",), ("y",)], "v string")
     got = {
-        r.value: r.maybe_present
-        for r in bloom_contains(
-            bloom, spark.createDataFrame([(None,), ("y",)], "v string"), "v"
-        ).collect()
+        r.v: r.maybe_seen
+        for r in bloom_novel(probe, with_null, key=key).collect()
     }
-    assert got[None] is True
-    assert "y" in got
+    assert got == {None: False, "x": True, "y": False}
 
 
 # ---------------------------------------------------------------------------
